@@ -81,17 +81,12 @@ object MLPipelineOps {
   val q61 = GraftQuery(
     "q61_lsh_ann_topk",
     (s, d) => {
-      import org.apache.spark.ml.feature.BucketedRandomProjectionLSH
       import org.apache.spark.ml.functions.array_to_vector
       val emb = t(s, d, "embeddings")
         .select(col("vec_id"), col("label"),
           array_to_vector(col("embedding")).as("features"))
-      val lsh = new BucketedRandomProjectionLSH()
-        .setBucketLength(0.5).setNumHashTables(2).setSeed(42)
-        .setInputCol("features").setOutputCol("hashes")
-      val model = lsh.fit(emb)
       val key = emb.filter(col("vec_id") === 0).head().getAs[org.apache.spark.ml.linalg.Vector]("features")
-      model.approxNearestNeighbors(emb, key, 10)
+      SearchService.lshModel(s, key.size).approxNearestNeighbors(emb, key, 10)
         .select(col("vec_id"), col("label"), round(col("distCol"), 4).as("dist"))
         .orderBy(col("dist"), col("vec_id"))
     },

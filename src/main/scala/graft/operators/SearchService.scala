@@ -1,11 +1,24 @@
 package graft.operators
 
-import graft.{GraftQuery, Tables}
+import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicLong
+
+import scala.util.Try
+import scala.util.control.NonFatal
+
+import graft.GraftQuery
 import graft.Tables._
 import graft.functions.VectorFunctions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.SparkFiles
+import org.apache.spark.ml.feature.{BucketedRandomProjectionLSH, BucketedRandomProjectionLSHModel}
+import org.apache.spark.ml.functions.array_to_vector
+import org.apache.spark.ml.linalg.{SQLDataTypes, Vector, Vectors}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType}
 
 /** The reference's flagship API, as one library call: POST /api/search
   * end to end (/root/reference/backend/search.py:15-44 + routes.py:13-31).
@@ -18,6 +31,39 @@ import org.apache.spark.sql.functions._
   *    query text (ai_service.py:23-42 is a network call — out of scope)
   *  - overscan 3× then exact re-rank (search.py:38-40 — SURVEY T3/O4)
   *  - result projection with defaults (search.py:46-62 — SURVEY P2)
+  *
+  * '''The ANN index''' (the analog of the Atlas vector index that
+  * `$vectorSearch` reads, ai_service.py:59-119, built ahead of requests):
+  *  - ''Contents.'' The LSH model of [[lshModel]] (2 hash tables × 64
+  *    doubles, on the driver) and a parquet table of
+  *    `vec_id, label, lang, features, hashes`: every embedding as an MLlib
+  *    vector, its `documents.lang` (left join, so a vector without a
+  *    document keeps a null lang and is still a valid query key) and its
+  *    bucket hashes from the model's own `transform`.
+  *  - ''Key.'' One index per (SparkContext, `dir`, signature of
+  *    `embeddings.parquet` and `documents.parquet`). The signature is the
+  *    modification time and length of each path and of the files directly
+  *    under it. It is read on every request, so the next search after a
+  *    table is rewritten builds a new index, and the superseded one is
+  *    deleted.
+  *  - ''Location.'' Under the SparkContext's driver-local directory
+  *    (`SparkFiles.getRootDirectory()`, inside `spark.local.dir`, removed
+  *    when the context stops), never next to the tables, which may be
+  *    read-only. The table is written to a temporary path and renamed into
+  *    place. Executors read it from there, so the location assumes they
+  *    share the driver's file system, as in local mode.
+  *  - ''Build.'' Single-flight: concurrent first requests for one key wait
+  *    for one build, which reads the vector width and then writes the
+  *    table. The index is never `persist`ed. It lives on disk, so a
+  *    caller that unpersists every cached RDD between requests does not
+  *    lose it.
+  *  - ''Failure.'' A failed build is not kept. The request degrades to the
+  *    exact scan, and the next request builds again.
+  *
+  * A request then runs two jobs: the key-vector lookup, and the bucket
+  * probe plus exact re-rank that `collect` runs. It does no LSH fit, no
+  * per-row hashing (MLlib skips `transform` when `hashes` is present) and
+  * no join with `documents`.
   */
 object SearchService {
 
@@ -30,49 +76,148 @@ object SearchService {
       math.min(50 * limit, 1000)
   }
 
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  private val degraded = new AtomicLong
+  private val builds = new AtomicLong
+
+  /** How many [[searchWithFallback]] calls took the exact path because the
+    * ANN path threw, since the JVM started. */
+  def degradedCount: Long = degraded.get
+
+  /** How many ANN indexes have been built since the JVM started. */
+  private[graft] def indexBuilds: Long = builds.get
+
+  private val models = new ConcurrentHashMap[Integer, BucketedRandomProjectionLSHModel]
+
+  /** The one definition of this engine's LSH (bucket length 0.5, 2 hash
+    * tables, seed 42), memoized per vector width. The model depends only
+    * on these settings and the width, so it is fitted on a one-row local
+    * frame, which runs no Spark job. */
+  private[graft] def lshModel(spark: SparkSession, dim: Int): BucketedRandomProjectionLSHModel =
+    models.computeIfAbsent(dim, _ => {
+      val one = spark.createDataFrame(java.util.List.of(Row(Vectors.zeros(dim))),
+        StructType(Seq(StructField("features", SQLDataTypes.VectorType))))
+      new BucketedRandomProjectionLSH()
+        .setBucketLength(0.5).setNumHashTables(2).setSeed(42)
+        .setInputCol("features").setOutputCol("hashes")
+        .fit(one)
+    })
+
+  private final case class Index(model: BucketedRandomProjectionLSHModel,
+                                 path: String, schema: StructType)
+
+  /** One key's index. The first request to read `built` builds it; the
+    * others block on the lazy val until that build ends. */
+  private final class Slot(val sig: String, val path: String, build: () => Index) {
+    lazy val built: Try[Index] = Try(build())
+  }
+
+  /** (SparkFiles root, dir) → the slot for that dir's current signature. */
+  private val indexes = new ConcurrentHashMap[(String, String), Slot]
+
+  private def signature(spark: SparkSession, dir: String): String =
+    Seq("embeddings", "documents").map { name =>
+      val p = new Path(s"$dir/$name.parquet")
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val st = fs.getFileStatus(p)
+      val files = if (st.isDirectory) fs.listStatus(p).toSeq.sortBy(_.getPath.getName) else Nil
+      (st +: files).map(f => s"${f.getModificationTime}:${f.getLen}").mkString(",")
+    }.mkString("|")
+
+  private def index(spark: SparkSession, dir: String): Index = {
+    val root = SparkFiles.getRootDirectory()
+    val sig = signature(spark, dir)
+    val key = (root, dir)
+    val slot = indexes.compute(key, (_, old) =>
+      if (old != null && old.sig == sig) old
+      else {
+        if (old != null) deleteQuietly(old.path)
+        val name = java.util.UUID.nameUUIDFromBytes(s"$dir|$sig".getBytes("UTF-8"))
+        val path = s"$root/graft-search-index/$name"
+        new Slot(sig, path, () => buildIndex(spark, dir, path))
+      })
+    slot.built.fold(e => { indexes.remove(key, slot); throw e }, identity)
+  }
+
+  private def buildIndex(spark: SparkSession, dir: String, path: String): Index = {
+    val emb = t(spark, dir, "embeddings")
+    val dim = emb.select(size(col("embedding"))).head().getInt(0)
+    val model = lshModel(spark, dim)
+    val rows = model.transform(
+      emb.select(col("vec_id"), col("label"), array_to_vector(col("embedding")).as("features"))
+        .join(t(spark, dir, "documents").select(col("doc_id"), col("lang")),
+          col("vec_id") === col("doc_id"), "left")
+        .select(col("vec_id"), col("label"), col("lang"), col("features")))
+    val tmp = s"$path.tmp-${java.util.UUID.randomUUID()}"
+    try {
+      rows.coalesce(1).write.parquet(tmp)
+      Files.move(Paths.get(tmp), Paths.get(path), StandardCopyOption.ATOMIC_MOVE)
+    } finally deleteQuietly(tmp)
+    builds.incrementAndGet()
+    Index(model, path, rows.schema)
+  }
+
+  private def deleteQuietly(path: String): Unit =
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path))
+
+  /** Where this SparkContext keeps the index of `dir`, once requested. */
+  private[graft] def indexPath(dir: String): Option[String] =
+    Option(indexes.get((SparkFiles.getRootDirectory(), dir))).map(_.path)
+
   /** Strategy-with-degrade (SURVEY O12, search.py:27-38): try the
-    * approximate path (LSH buckets — the $vectorSearch analog), fall back
-    * to the exact scan on failure, exactly the reference's silent
-    * ANN→exact degrade. Both paths serve the same logical query and emit
-    * the SAME (vec_id, label) schema, so callers cannot observe which
-    * strategy ran; only NonFatal failures degrade (an OOM or interrupt
-    * must propagate, not silently switch plans).
+    * approximate path (LSH buckets over the index above — the
+    * $vectorSearch analog), fall back to the exact scan on failure.
+    * Both paths serve the same logical query and emit the SAME
+    * (vec_id, label) schema. Only NonFatal failures degrade (an OOM or
+    * interrupt must propagate, not silently switch plans), and each
+    * degrade is logged at WARN with the exception class and counted in
+    * [[degradedCount]].
     *
     * The metadata pre-filter runs BEFORE/INSIDE the ANN probe, like the
     * filter pushed inside $vectorSearch (ai_service.py:70): the LSH model
-    * is fit on the full corpus (bucket geometry is filter-independent),
-    * but `approxNearestNeighbors` probes only the FILTERED frame, so a
-    * filtered search still returns k rows — post-filtering the ANN output
-    * would return fewer than k at scale. */
+    * is the same for every filter (bucket geometry is filter-independent),
+    * but `approxNearestNeighbors` probes only the FILTERED rows of the
+    * index, so a filtered search still returns k rows — post-filtering the
+    * ANN output would return fewer than k at scale.
+    *
+    * The key vector is found with a predicate bound in a closure, not a
+    * `vec_id = <literal>` filter: a long literal is inlined into the
+    * generated code, so every unseen id would compile a new class.
+    *
+    * The numCandidates cap cannot change the top-k under the total order
+    * (distCol, vec_id) unless exact distance ties straddle it. MLlib keeps
+    * the c = numCandidates(k) ≥ k probed rows of least distCol and breaks
+    * ties at the c-th distance arbitrarily, so every row strictly closer
+    * than the c-th distance is kept. If the k-th distance is below the
+    * c-th, every row at or below the k-th distance is kept, and the final
+    * (distCol, vec_id) sort picks the exact top-k of the probed rows. The
+    * only other case has the rows at ranks k..c all at one distance from
+    * the key: c − k + 1 exact ties, 50 at k = 1 and more at every larger
+    * k. */
   def searchWithFallback(spark: SparkSession, dir: String, queryVecId: Long,
                          limit: Int = Config.DefaultLimit,
                          langs: Seq[String] = Seq("en", "fr")): DataFrame = {
     val k = math.max(1, math.min(limit, Config.MaxLimit))
     try {
-      import org.apache.spark.ml.feature.BucketedRandomProjectionLSH
-      import org.apache.spark.ml.functions.array_to_vector
-      val emb = t(spark, dir, "embeddings")
-        .select(col("vec_id"), col("label"),
-          array_to_vector(col("embedding")).as("features"))
-      // P1 pre-filter: docs metadata gate lands in the parquet scan and
-      // restricts the candidate frame BEFORE the bucket probe
-      val filtered = emb.join(
-        t(spark, dir, "documents")
-          .filter(col("lang").isin(langs: _*)).select(col("doc_id")),
-        col("vec_id") === col("doc_id")).drop("doc_id")
-      val lsh = new BucketedRandomProjectionLSH()
-        .setBucketLength(0.5).setNumHashTables(2).setSeed(42)
-        .setInputCol("features").setOutputCol("hashes")
-      val model = lsh.fit(emb)
-      val key = emb.filter(col("vec_id") === queryVecId)
-        .head().getAs[org.apache.spark.ml.linalg.Vector]("features")
+      val idx = index(spark, dir)
+      val rows = spark.read.schema(idx.schema).parquet(idx.path)
+      val isQuery = udf((id: Long) => id == queryVecId)
+      val key = rows.filter(isQuery(col("vec_id"))).select(col("features")).collect()
+        .headOption.getOrElse(throw new NoSuchElementException(s"vec_id $queryVecId is not in $dir"))
+        .getAs[Vector](0)
+      // P1 pre-filter lands in the index scan, BEFORE the bucket probe;
       // numCandidates cap, then exact re-rank of the candidate pool
-      model.approxNearestNeighbors(filtered, key, Config.numCandidates(k))
+      idx.model.approxNearestNeighbors(rows.filter(col("lang").isin(langs: _*)), key,
+          Config.numCandidates(k))
         .orderBy(col("distCol"), col("vec_id"))
         .limit(k)
         .select(col("vec_id"), col("label"))
     } catch {
-      case scala.util.control.NonFatal(_) =>
+      case NonFatal(e) =>
+        degraded.incrementAndGet()
+        log.warn(s"search for vec_id $queryVecId in $dir degraded from ANN to the exact scan: " +
+          s"${e.getClass.getName}: ${e.getMessage}")
         // degrade to the exact path (search.py:27-38), same output schema
         search(spark, dir, queryVecId, k, langs)
           .join(t(spark, dir, "embeddings").select(col("vec_id"), col("label")),

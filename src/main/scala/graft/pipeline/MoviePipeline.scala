@@ -28,8 +28,10 @@ object MoviePipeline {
     * GENRES:/PLOT: lines) into typed columns. Multiline anchored
     * regexp_extract per field, each value cleaned (F1). */
   def parseRaw(raw: DataFrame, rawCol: String = "raw"): DataFrame = {
+    // [ \t]*, not \s*: \s also matches the line break, so a blank field
+    // would take the next line ("YEAR: 2001") as its value
     def rawField(name: String) =
-      regexp_extract(col(rawCol), s"(?m)^$name:\\s*(.*)$$", 1)
+      regexp_extract(col(rawCol), s"(?m)^$name:[ \\t]*(.*)$$", 1)
     def field(name: String) = cleanText(rawField(name))
     // per-item clean AFTER the split — the reference cleans each CSV item
     // (movie_generator.py:360-365), so "1. Drama, 2. Comedy" loses both

@@ -51,6 +51,18 @@ class PipelineSpec extends SparkSpec {
     assert(wild.getAs[scala.collection.Seq[String]]("genres") == scala.collection.Seq("Drama", "Comedy"))
   }
 
+  test("a blank field never takes the next line as its value") {
+    val raw = Seq(
+      "TITLE:\nYEAR: 2001\nPLOT: blank title",                      // rejected
+      "TITLE: Cast Away\nYEAR: 2000\nCAST: \t\nGENRES: Drama, Adventure\nPLOT: x"
+    ).toDF("raw")
+    val rows = MoviePipeline.validate(MoviePipeline.parseRaw(raw)).collect()
+    assert(rows.map(_.getAs[String]("title")).toSeq == Seq("Cast Away"))
+    assert(rows(0).getAs[scala.collection.Seq[String]]("cast").isEmpty)
+    assert(rows(0).getAs[scala.collection.Seq[String]]("genres") ==
+      scala.collection.Seq("Drama", "Adventure"))
+  }
+
   private val seen = Seq(("the bicycle thief", 1948)).toDF("title", "year")
 
   test("dedup fixtures from FIXTURES.md §2.2") {

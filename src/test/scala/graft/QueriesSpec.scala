@@ -401,18 +401,20 @@ class QueriesSpec extends SparkSpec {
 
   test("searchWithFallback degrades from LSH to the exact path (O12)") {
     import graft.operators.SearchService
-    // approximate path works on the real table
-    val viaLsh = SearchService.searchWithFallback(spark, sf, 0, limit = 5)
-    assert(viaLsh.count() == 5)
-    // a nonexistent query vector makes the LSH key lookup throw -> exact
-    // fallback also finds nothing for it, but the call must not fail...
-    // use a valid id against a bad dir for the LSH fit to prove the
-    // degrade: point at a dir with no embeddings table
+    val before = SearchService.degradedCount
+    // a normal request takes the approximate path
+    assert(SearchService.searchWithFallback(spark, sf, 0, limit = 5).count() == 5)
+    assert(SearchService.degradedCount == before)
+    // an absent query vector fails the ANN key lookup; the exact path
+    // serves the request and finds no neighbours for it
+    assert(SearchService.searchWithFallback(spark, sf, -1, limit = 5).count() == 0)
+    assert(SearchService.degradedCount == before + 1)
+    // with no tables both paths fail, and the ANN failure is still counted
     val tmp = java.nio.file.Files.createTempDirectory("graft_missing").toString
-    val ex = intercept[Exception] {
-      SearchService.searchWithFallback(spark, tmp, 0, limit = 5).count()
+    intercept[org.apache.spark.sql.AnalysisException] {
+      SearchService.searchWithFallback(spark, tmp, 0, limit = 5)
     }
-    assert(ex != null) // both paths failed on a truly absent table
+    assert(SearchService.degradedCount == before + 2)
   }
 
   test("filtered ANN path returns k rows that ALL satisfy the metadata filter") {
