@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
 object Bench {
   // str-probe absolute nominal at >=16 cores — RE-BASELINED 2026-08-19 in
   // the first measured-quiet window since the probe shipped (full-suite
@@ -14,6 +15,72 @@ object Bench {
   // the tighter check inside any one run.
   private val NOMSTR_32 = 0.53
 
+  // Calibration probes: TWO fixed-work jobs (no IO, no shuffle) timed
+  // before and after the measured passes. Their nominal times are a
+  // property of the machine, not the data, so a contended run exposes
+  // itself IN THE RECORD: r4's driver artifact read 137s for an engine
+  // that measures 87-94s, and nothing in the artifact could tell.
+  // Two probes because this box has shown two DISTINCT degradation
+  // modes (both hypervisor-level, invisible in guest loadavg):
+  //  - cpu probe: codegen'd arithmetic over a range — catches plain
+  //    CPU-steal contention;
+  //  - alloc probe: per-row string materialization + hashing — the
+  //    workload class of the suite's string-heavy queries, which one
+  //    observed mode inflates 2-4x while the arithmetic probe stays
+  //    nominal (2026-08-13: identical r4 code 94.4s steady vs 138.1s
+  //    degraded, q79 30.8s vs 7.1s, cpu probe 0.26-0.34s throughout).
+  // The probes bound the STATIC contention modes; the sustained-load
+  // mode (full-suite runs inflate, short isolated runs don't) shows
+  // only partially in them — cross-check a suspect artifact against
+  // isolated Profile timings of the same queries. Nominals + reading
+  // guide: BASELINE.md ("Reading a bench artifact"); fresh-JVM
+  // re-baseline: runMain graft.ProbeOnly.
+  private def timed(work: => Unit): Double = {
+    val t0 = System.nanoTime(); work; (System.nanoTime() - t0) / 1e9
+  }
+  private def calibCpu(spark: SparkSession, cpus: Int): Double = timed {
+    spark.range(0L, 400000000L, 1L, cpus)
+      .selectExpr("sum(id * 3 + 7) AS s")
+      .queryExecution.toRdd.count(): Unit
+  }
+  private def calibAlloc(spark: SparkSession, cpus: Int): Double = timed {
+    spark.range(0L, 4000000L, 1L, cpus)
+      .selectExpr("sum(length(md5(concat(cast(id as string), 'graft')))) AS s")
+      .queryExecution.toRdd.count(): Unit
+  }
+  // str probe (r14, VERDICT r13 #2): the box's recurring probe-invisible
+  // weather mode inflates string-HEAVY queries 1.3-1.5x while the cpu
+  // probe stays nominal (even FAST — r14's weathered run read cpu 0.083
+  // vs the 0.088-0.104 quiet fresh-JVM band) and the md5-dominated alloc
+  // probe inflates only ~1.2x (0.236-0.270 vs quiet 0.17-0.22): md5 is
+  // arithmetic-bound per byte, so it under-weights the allocation/copy
+  // traffic the mode actually throttles. This probe is pure UTF8String
+  // materialization — repeat/substring/upper/concat chains, ~6
+  // allocations per row and no heavy arithmetic — the workload class of
+  // q79/q34/q121, which the weather inflates hardest.
+  private def calibStr(spark: SparkSession, cpus: Int): Double = timed {
+    spark.range(0L, 12000000L, 1L, cpus)
+      .selectExpr("sum(length(concat(substring(repeat(concat('g', " +
+        "cast(id % 9973 as string)), 10), 3, 40), upper(concat(" +
+        "cast(id as string), 'x', cast(id * 31 as string)))))) AS s")
+      .queryExecution.toRdd.count(): Unit
+  }
+
+  /** One sample of the three calibration probes: (cpu, alloc, str) s. */
+  def probe(spark: SparkSession, cpus: Int): (Double, Double, Double) =
+    (calibCpu(spark, cpus), calibAlloc(spark, cpus), calibStr(spark, cpus))
+
+  /** Per-query seconds of the quiet snapshot `json` (BENCH_QUIET_REF.json),
+    * or None when it was taken at another sf than `sfDir` (a dev run at
+    * sf0.001 must not "compare" against the sf0.1 ref) or is malformed. */
+  def quietRef(json: String, sfDir: String): Option[Map[String, Double]] =
+    scala.util.Try(new com.fasterxml.jackson.databind.ObjectMapper().readTree(json))
+      .toOption.filter(root => root != null && root.path("sf").asText == sfDir)
+      .map(_.path("queries")).filter(_.isObject)
+      .map(_.properties.asScala.collect {
+        case e if e.getValue.isNumber => e.getKey -> e.getValue.asDouble
+      }.toMap)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // Default 32 = the graded environment (driver runs local[32]) and what
@@ -24,38 +91,8 @@ object Bench {
     // code+box), and r4's "contended" driver artifact (137.5s vs the
     // builders' 94.4s) carries the same signature — uniform inflation of
     // CPU-bound queries, i.e. fewer cores, not box weather.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // UTC like Verify/ScaleBench/the specs: the NTZ→instant cast in the
-      // events loader and every date_format output are session-tz-dependent
-      .config("spark.sql.session.timeZone", "UTC")
-      // The generated-class cache defaults to 100 entries; a 120-query
-      // suite (several codegen stages each) evicts continuously, so every
-      // pass re-Janino-compiles most operators — compile churn + class-
-      // loader/metaspace growth is a prime suspect for the position-
-      // dependent pass aging measured 2026-08-13 (ascending 79.3 s vs
-      // young-JVM reversed 69.7 s; pass totals 87→113 s inside one run).
-      // Size it to hold the whole suite (static conf, driver memory only
-      // — a long-running service with this workload would do the same).
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      // Shuffle/spill dirs on tmpfs when available: the bench box's VM
-      // disk has bursty writeback stalls that inflate shuffle-heavy
-      // queries 2-3x at random (measured: q79 6.3s typical, 18s under a
-      // writeback storm; CPU-bound queries unaffected). A real cluster
-      // puts shuffle on local NVMe — tmpfs is the single-node analog,
-      // not a cheat: both passes of every query still write/read every
-      // shuffle byte. Per-PID dir + dead-sibling sweep: see ShmDir.
-      .config("spark.local.dir", ShmDir.claim("graft-bench"))
-      .getOrCreate()
-    // ERROR, not WARN: the only output that matters here is the final
-    // one-line JSON record, and WARN floods (WindowExec's "No Partition
-    // Defined" fires for every intentional rank-the-k-survivors window
-    // over <= k rows) can crowd it out of a bounded log tail.
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.plans.GraftExtensions.install(spark)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = Session.local(cpus, cpus, "graft-bench")
     // Steady-state warmup (JMH-style), AT THE TARGET SCALE FACTOR: AQE
     // picks different physical plans at different input sizes (broadcast
     // vs shuffle joins), so a tiny-sf warmup compiles the WRONG generated
@@ -100,8 +137,16 @@ object Bench {
       if (useExecConfs) QueryRegistry.withExecConfs(spark, name, dir)(run())
       else run()
     }
+    // A failure is recorded and printed, warm-up and timed passes alike:
+    // query -> class of its first exception, for the detail file.
+    val errors = scala.collection.mutable.LinkedHashMap[String, String]()
+    def failed(name: String, e: Throwable): Unit = {
+      System.err.println(
+        s"[bench] $name failed: ${e.getClass.getName}: ${e.getMessage}")
+      errors.getOrElseUpdate(name, e.getClass.getName): Unit
+    }
     ordered.foreach { case (name, _) =>
-      try exec(name, warmDir) catch { case _: Throwable => () }
+      try exec(name, warmDir) catch { case e: Throwable => failed(name, e) }
     }
     // (The target-sf warmup above also fills the page cache — no separate
     // table-scan pass needed.)
@@ -140,62 +185,12 @@ object Bench {
         // sentinel so a failure is distinguishable from a quick query.
         val dt =
           try { exec(name, sfDir); (System.nanoTime() - t0) / 1e9 }
-          catch { case _: Throwable => -1.0 }
+          catch { case e: Throwable => failed(name, e); -1.0 }
         dropCached()
         name -> dt
       }
     }
-    // Calibration probes: TWO fixed-work jobs (no IO, no shuffle) timed
-    // before and after the measured passes. Their nominal times are a
-    // property of the machine, not the data, so a contended run exposes
-    // itself IN THE RECORD: r4's driver artifact read 137s for an engine
-    // that measures 87-94s, and nothing in the artifact could tell.
-    // Two probes because this box has shown two DISTINCT degradation
-    // modes (both hypervisor-level, invisible in guest loadavg):
-    //  - cpu probe: codegen'd arithmetic over a range — catches plain
-    //    CPU-steal contention;
-    //  - alloc probe: per-row string materialization + hashing — the
-    //    workload class of the suite's string-heavy queries, which one
-    //    observed mode inflates 2-4x while the arithmetic probe stays
-    //    nominal (2026-08-13: identical r4 code 94.4s steady vs 138.1s
-    //    degraded, q79 30.8s vs 7.1s, cpu probe 0.26-0.34s throughout).
-    // The probes bound the STATIC contention modes; the sustained-load
-    // mode (full-suite runs inflate, short isolated runs don't) shows
-    // only partially in them — cross-check a suspect artifact against
-    // isolated Profile timings of the same queries. Nominals + reading
-    // guide: BASELINE.md ("Reading a bench artifact"); fresh-JVM
-    // re-baseline: runMain graft.ProbeOnly.
-    def timed(work: => Unit): Double = {
-      val t0 = System.nanoTime(); work; (System.nanoTime() - t0) / 1e9
-    }
-    def calibCpu(): Double = timed {
-      spark.range(0L, 400000000L, 1L, cpus.toInt)
-        .selectExpr("sum(id * 3 + 7) AS s")
-        .queryExecution.toRdd.count(): Unit
-    }
-    def calibAlloc(): Double = timed {
-      spark.range(0L, 4000000L, 1L, cpus.toInt)
-        .selectExpr("sum(length(md5(concat(cast(id as string), 'graft')))) AS s")
-        .queryExecution.toRdd.count(): Unit
-    }
-    // str probe (r14, VERDICT r13 #2): the box's recurring probe-invisible
-    // weather mode inflates string-HEAVY queries 1.3-1.5x while the cpu
-    // probe stays nominal (even FAST — r14's weathered run read cpu 0.083
-    // vs the 0.088-0.104 quiet fresh-JVM band) and the md5-dominated alloc
-    // probe inflates only ~1.2x (0.236-0.270 vs quiet 0.17-0.22): md5 is
-    // arithmetic-bound per byte, so it under-weights the allocation/copy
-    // traffic the mode actually throttles. This probe is pure UTF8String
-    // materialization — repeat/substring/upper/concat chains, ~6
-    // allocations per row and no heavy arithmetic — the workload class of
-    // q79/q34/q121, which the weather inflates hardest.
-    def calibStr(): Double = timed {
-      spark.range(0L, 12000000L, 1L, cpus.toInt)
-        .selectExpr("sum(length(concat(substring(repeat(concat('g', " +
-          "cast(id % 9973 as string)), 10), 3, 40), upper(concat(" +
-          "cast(id as string), 'x', cast(id * 31 as string)))))) AS s")
-        .queryExecution.toRdd.count(): Unit
-    }
-    calibCpu(); calibAlloc(); calibStr() // probe codegen warmup, untimed
+    probe(spark, cpus) // probe codegen warmup, untimed
     // PROBE-GATED PASSES (round 6). Both committed driver artifacts so far
     // (r4 137.5 s, r5 135.3 s vs a 75.2 s quiet engine) were contention-
     // polluted, and best-of-2 across two differently-contended passes
@@ -218,7 +213,7 @@ object Bench {
     // the old 0.30/0.47 bounds (which absorbed recompile cost) would let
     // a 2-3x contended probe pass as nominal.
     val (nomCpu, nomAlloc) =
-      if (cpus.toInt >= 16) (0.20, 0.35) else (0.45, 0.80)
+      if (cpus >= 16) (0.20, 0.35) else (0.45, 0.80)
     // str-probe nominal: derived 2026-08-16 ON the weathered box (no quiet
     // window existed all of r13/r14 to calibrate properly): in-weather
     // readings W with the same run's 149-query median at 1.31x quiet ref,
@@ -231,7 +226,7 @@ object Bench {
     // GRAFT_NOMINAL_STR overrides; 0 disables the absolute str gate
     // (self-relative still applies).
     val nomStr = sys.env.get("GRAFT_NOMINAL_STR").map(_.toDouble)
-      .getOrElse(if (cpus.toInt >= 16) NOMSTR_32 else 0.0)
+      .getOrElse(if (cpus >= 16) NOMSTR_32 else 0.0)
     val gate = 1.5
     // SELF-RELATIVE gate (round 7): the r6 driver artifact passed all-
     // nominal probes yet sat a uniform 1.38x above the same-day quiet
@@ -263,8 +258,6 @@ object Bench {
       val (mc, ma, ms) = runMin
       p._1 > mc * selfGate || p._2 > ma * selfGate || p._3 > ms * selfGate
     }
-    def probe(): (Double, Double, Double) =
-      (calibCpu(), calibAlloc(), calibStr())
     val maxPasses = 4
     val targetClean = 2
     // A pass is contended if EITHER bracketing sample breaches the
@@ -278,14 +271,14 @@ object Bench {
           (hotSelf(probesBuf(b)) && hotSelf(probesBuf(a)))
       }
     def cleanCount: Int = contendedFlags.count(!_)
-    probesBuf += probe()
+    probesBuf += probe(spark, cpus)
     while (cleanCount < targetClean && passesBuf.size < maxPasses) {
       // direction keyed to the count of CLEAN passes (ADVICE r6): keying
       // on total passes let a contended reversed pass leave both clean
       // passes ascending, losing the young-JVM draw for late queries
       val p = onePass(reversed = cleanCount % 2 == 1)
       val before = probesBuf.size - 1
-      probesBuf += probe()
+      probesBuf += probe(spark, cpus)
       passesBuf += ((p, before, probesBuf.size - 1))
     }
     val finalFlags = contendedFlags
@@ -331,25 +324,10 @@ object Bench {
     // the record: median per-query ratio over shared queries >= 50 ms on
     // both sides (median, not mean — a genuine single-query regression
     // must not read as box-wide inflation), flagged when > 1.15.
-    val quietRef: Option[Map[String, Double]] =
-      try {
-        val txt = java.nio.file.Files.readString(
-          java.nio.file.Paths.get("BENCH_QUIET_REF.json"))
-        // the snapshot is only a reference for the SAME scale factor —
-        // a dev run at sf0.001 must not "compare" against the sf0.1 ref
-        val refSf = """"sf":"([^"]*)"""".r.findFirstMatchIn(txt).map(_.group(1))
-        if (!refSf.contains(sfDir)) None
-        else """"queries":\{([^}]*)\}""".r.findFirstMatchIn(txt).map(_.group(1))
-          .map(_.split(",").flatMap { kv =>
-            kv.split(":") match {
-              case Array(k, v) =>
-                try Some(k.replace("\"", "") -> v.toDouble)
-                catch { case _: Throwable => None }
-              case _ => None
-            }
-          }.toMap)
-      } catch { case _: Throwable => None }
-    val quietBlock = quietRef.map { ref =>
+    val quiet = scala.util.Try(java.nio.file.Files.readString(
+      java.nio.file.Paths.get("BENCH_QUIET_REF.json"))).toOption
+      .flatMap(quietRef(_, sfDir))
+    val quietBlock = quiet.map { ref =>
       // Ratio floor (r10, VERDICT r9 #6): exclude a pair only when BOTH
       // sides ran under 50 ms — sub-noise on both sides carries no
       // signal. The old both-sides-must-clear rule also dropped the
@@ -479,8 +457,10 @@ object Bench {
     val detailPath =
       if (only.isDefined || sfDir != gradedSf) "BENCH_LOCAL_ONLY.json"
       else "BENCH_LOCAL.json"
+    val errorsJson = errors.map { case (n, c) =>
+      JsonUtil.jsonEscape(n) + ":" + JsonUtil.jsonEscape(c) }.mkString("{", ",", "}")
     val fileLine =
-      s"""{"metric":"total","value":${f3(total)},"unit":"sec","best_of":${cleanPasses.size.max(1)},"failed":$nFailed,$prov,$calib,$quietBlock,"queries":$qs,"passes":[${allPasses.map(p => qmap(p._1)).mkString(",")}],"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${f3(total)},"unit":"sec","best_of":${cleanPasses.size.max(1)},"failed":$nFailed,"errors":$errorsJson,$prov,$calib,$quietBlock,"queries":$qs,"passes":[${allPasses.map(p => qmap(p._1)).mkString(",")}],"sf":"$sfDir"}"""
     java.nio.file.Files.writeString(java.nio.file.Paths.get(detailPath), fileLine + "\n")
     // The driver contract requires per-query seconds IN the stdout line
     // ({"metric",...,"queries":{...},"sf"}): the driver re-runs the bench

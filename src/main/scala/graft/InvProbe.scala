@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool (VERDICT r8 #1/#2): run named registry queries at a given sf
@@ -14,16 +13,8 @@ object InvProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "24")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", (cpus.toInt * 8).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", ShmDir.claim("graft-inv"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftExtensions.install(spark)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "24").toInt
+    val spark = Session.local(cpus, cpus * 8, "graft-inv")
     val rows = names.map { n =>
       val t0 = System.nanoTime()
       val df = QueryRegistry.withExecConfs(spark, n, sfDir) {

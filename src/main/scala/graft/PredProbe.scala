@@ -110,19 +110,10 @@ object PredProbe {
     val outJson = args.lift(2)
     val only = args.drop(3).toSet
     val reps = sys.env.getOrElse("GRAFT_PRED_REPS", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val shuffleParts =
-      sys.env.getOrElse("GRAFT_SHUFFLE_PARTS", (cpus.toInt * 8).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", ShmDir.claim("graft-pred"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.plans.GraftExtensions.install(spark)
+      sys.env.get("GRAFT_SHUFFLE_PARTS").map(_.toInt).getOrElse(cpus * 8)
+    val spark = Session.local(cpus, shuffleParts, "graft-pred")
     import Tables.t
 
     def dropCached(): Unit = {

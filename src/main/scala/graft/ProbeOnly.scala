@@ -1,48 +1,18 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Dev tool: run ONLY the two Bench calibration probes in a fresh JVM
+/** Dev tool: run ONLY the Bench calibration probes in a fresh JVM
   * (no suite workload before them) — separates "box is degraded" from
   * "suite-induced throttling": a fresh-JVM alloc reading far below the
   * same probe's in-suite reading means the slowdown is triggered by the
   * sustained suite load (e.g. hypervisor memory-bandwidth budgets), not
-  * a static box state. */
+  * a static box state. Same session factory and probe definitions as
+  * Bench, so the readings re-baseline Bench's nominals directly. */
 object ProbeOnly {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // match Bench's codegen-cache sizing — this tool re-baselines
-      // Bench's probe nominals, so the sessions must be conf-identical
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    def timed(work: => Unit): Double = {
-      val t0 = System.nanoTime(); work; (System.nanoTime() - t0) / 1e9
-    }
-    def cpu(): Double = timed {
-      spark.range(0L, 400000000L, 1L, cpus.toInt)
-        .selectExpr("sum(id * 3 + 7) AS s").queryExecution.toRdd.count(): Unit
-    }
-    def alloc(): Double = timed {
-      spark.range(0L, 4000000L, 1L, cpus.toInt)
-        .selectExpr("sum(length(md5(concat(cast(id as string), 'graft')))) AS s")
-        .queryExecution.toRdd.count(): Unit
-    }
-    // keep in lockstep with Bench.calibStr (r14 — the weather-sensitive
-    // UTF8String-materialization probe; see Bench for the rationale)
-    def str(): Double = timed {
-      spark.range(0L, 12000000L, 1L, cpus.toInt)
-        .selectExpr("sum(length(concat(substring(repeat(concat('g', " +
-          "cast(id % 9973 as string)), 10), 3, 40), upper(concat(" +
-          "cast(id as string), 'x', cast(id * 31 as string)))))) AS s")
-        .queryExecution.toRdd.count(): Unit
-    }
-    cpu(); alloc(); str() // codegen warmup, untimed
-    val readings = (1 to 3).map(_ => (cpu(), alloc(), str()))
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = Session.local(cpus, cpus, "graft-bench")
+    Bench.probe(spark, cpus) // codegen warmup, untimed
+    val readings = (1 to 3).map(_ => Bench.probe(spark, cpus))
     println(readings.map { case (c, a, s) =>
       f"cpu=$c%.3f alloc=$a%.3f str=$s%.3f" }
       .mkString("PROBES ", " | ", ""))

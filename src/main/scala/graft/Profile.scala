@@ -17,20 +17,9 @@ object Profile {
     val iters = opt("--iters", "2").toInt
     // same env knobs as SuiteProbe so a single query can be profiled
     // under the exact confs an artifact run used (cpus, session width)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val parts = sys.env.getOrElse("GRAFT_SHUFFLE_PARTS", cpus)
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]").config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      // tmpfs shuffle dirs, same rationale as Bench (VM-disk writeback
-      // storms inflate shuffle-heavy queries 2-3x at random); per-PID dir
-      // so a concurrent Bench/Profile can't delete this run's files.
-      .config("spark.local.dir", ShmDir.claim("graft-bench"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftExtensions.install(spark)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val parts = sys.env.get("GRAFT_SHUFFLE_PARTS").map(_.toInt).getOrElse(cpus)
+    val spark = Session.local(cpus, parts, "graft-bench")
     def dropCached(): Unit = {
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
       // let ContextCleaner reclaim shuffle files/broadcasts (same as Bench)

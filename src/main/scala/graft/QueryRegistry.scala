@@ -39,10 +39,12 @@ object QueryRegistry {
     queries.map(q => q.name -> q).toMap
 
   /** Execution-scoped session confs, applied by every main that RUNS a
-    * registry query (Bench/Profile/ScaleBench/ConfProbe/Verify/QProbe)
-    * around the full build-plan-execute of that query and restored after.
+    * registry query (Bench/Verify/Profile/Plans/ScaleBench/SuiteProbe/
+    * InvProbe/PredProbe) around the full build-plan-execute of that query
+    * and restored after.
     *
-    * Rationale (the r5 overhead-floor work, measured with ConfProbe):
+    * Rationale (the r5 overhead-floor work, measured with ConfProbe, a
+    * one-JVM conf-scenario timer last present at commit a7d8e14):
     * adaptive query execution pays off exactly when runtime statistics can
     * change the plan — a join side turning broadcast-able, skewed
     * partitions splitting, a large shuffle coalescing. For a fixed-shape

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scaling-evidence runner (BASELINE.md): time the same queries at two
   * scale factors (harness sf0.1 and the ScaleGen-derived sf1) and report
   * per-query sf1/sf0.1 time ratios. A blocked/bucketed plan should scale
@@ -13,7 +11,7 @@ object ScaleBench {
   def main(args: Array[String]): Unit = {
     val smallDir = sys.env.getOrElse("SPARK_GRAFT_SMALL_DIR", "/root/testdata/sf0.1")
     val bigDir = sys.env.getOrElse("SPARK_GRAFT_BIG_DIR", "/tmp/graft-sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     // the bench's most expensive queries (where scaling behavior is
     // actually at stake) + one representative per family
     val defaults = Seq(
@@ -34,25 +32,13 @@ object ScaleBench {
       "q151_percolate_multiterm", "q153_rate_limited_attrib",
       "q155_percolate_negation")
     val names = if (args.nonEmpty) args.toSeq else defaults
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // Partition sizing is PART of what this harness demonstrates: the
-      // sf0.1 bench's 32 shuffle partitions hold ~1.7M rows each on the
-      // big queries at sf1 and the first run thrashed the allocator
-      // (GCLocker retries, TaskMemoryManager page failures). 8× finer
-      // partitions keep each within memory at 10× data; AQE coalesces
-      // them back for the small queries, so nothing else changes.
-      .config("spark.sql.shuffle.partitions", (cpus.toInt * 8).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      // per-PID tmpfs dir with entry/exit cleanup (ShmDir): the old fixed
-      // graft-scale dir was never cleaned, so stale shuffle files from
-      // killed runs accumulated in RAM-backed tmpfs.
-      .config("spark.local.dir", ShmDir.claim("graft-scale"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftExtensions.install(spark)
+    // Partition sizing is PART of what this harness demonstrates: the
+    // sf0.1 bench's 32 shuffle partitions hold ~1.7M rows each on the
+    // big queries at sf1 and the first run thrashed the allocator
+    // (GCLocker retries, TaskMemoryManager page failures). 8× finer
+    // partitions keep each within memory at 10× data; AQE coalesces
+    // them back for the small queries, so nothing else changes.
+    val spark = Session.local(cpus, cpus * 8, "graft-scale")
     def exec(name: String, dir: String): Long =
       QueryRegistry.withExecConfs(spark, name, dir) {
         QueryRegistry.byName(name).fn(spark, dir).queryExecution.toRdd.count()

@@ -56,14 +56,8 @@ object ScaleGen {
     val affine = flags.contains("affine")
     val perm = flags.contains("perm")
     require(!(affine && perm), "affine and perm are exclusive alphabet modes")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt
+    val spark = Session.local(cpus, cpus, "graft-gen")
     generate(spark, src, out, reps, skew, affine, perm)
     spark.stop()
   }

@@ -47,19 +47,10 @@ object SuiteProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outJson = if (args.length > 1) Some(args(1)) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val shuffleParts =
-      sys.env.getOrElse("GRAFT_SHUFFLE_PARTS", (cpus.toInt * 8).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", ShmDir.claim("graft-suite"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.plans.GraftExtensions.install(spark)
+      sys.env.get("GRAFT_SHUFFLE_PARTS").map(_.toInt).getOrElse(cpus * 8)
+    val spark = Session.local(cpus, shuffleParts, "graft-suite")
     def f3(d: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, d)
     // Same inter-query hygiene as Bench/Profile: queries leave
     // localCheckpoint blocks cached (never self-unpersisted), and at sf10
