@@ -81,6 +81,17 @@ object Bench {
         case e if e.getValue.isNumber => e.getKey -> e.getValue.asDouble
       }.toMap)
 
+  /** Trimmed stdout of a git command run in `dir`, or "" when git is
+    * missing or fails (outside a checkout, say): git's stderr is dropped,
+    * so an error message can never be recorded as a commit. */
+  def gitLine(cmd: Seq[String], dir: java.io.File = new java.io.File(".")): String =
+    try {
+      val p = new ProcessBuilder(cmd: _*).directory(dir)
+        .redirectError(ProcessBuilder.Redirect.DISCARD).start()
+      val out = new String(p.getInputStream.readAllBytes, "UTF-8").trim
+      if (p.waitFor() == 0) out else ""
+    } catch { case _: java.io.IOException => "" }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // Default 32 = the graded environment (driver runs local[32]) and what
@@ -393,12 +404,6 @@ object Bench {
     // dirty flag for uncommitted src/build changes), and the promotion
     // tool (tools/promote_quiet.py) refuses to promote a snapshot whose
     // commit != HEAD — the stale-claim failure mode becomes unwritable.
-    def gitLine(cmd: Seq[String]): String =
-      try {
-        val p = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
-        val out = new String(p.getInputStream.readAllBytes, "UTF-8").trim
-        p.waitFor(); out
-      } catch { case _: Throwable => "" }
     val commit = gitLine(Seq("git", "rev-parse", "HEAD")).take(40)
     val dirty = gitLine(
       Seq("git", "status", "--porcelain", "--", "src", "build.sbt")).nonEmpty

@@ -53,9 +53,17 @@ object ScaleBench {
     // timed pass pays C2 compilation (q34: 9.0 s cold vs 1.6 s steady) —
     // asymmetrically across the small/big runs, skewing the very ratios
     // this tool exists to measure. Same target-sf rationale as Bench.
+    // A failure is printed, warm-up and timed passes alike, and the class
+    // of a query's first exception goes into the output next to its -1.
+    val errors = scala.collection.mutable.LinkedHashMap[String, String]()
+    def failed(name: String, e: Throwable): Unit = {
+      System.err.println(
+        s"[scale] $name failed: ${e.getClass.getName}: ${e.getMessage}")
+      errors.getOrElseUpdate(name, e.getClass.getName): Unit
+    }
     names.foreach { n =>
-      try exec(n, smallDir) catch { case _: Throwable => () }
-      try exec(n, bigDir) catch { case _: Throwable => () }
+      try exec(n, smallDir) catch { case e: Throwable => failed(n, e) }
+      try exec(n, bigDir) catch { case e: Throwable => failed(n, e) }
     }
     dropCached()
     // Output-bound giants (q35 62M rows, q79 55M pairs at sf1) swing
@@ -71,7 +79,7 @@ object ScaleBench {
       val ts = (1 to n).map { _ =>
         val t0 = System.nanoTime()
         try { exec(name, dir); (System.nanoTime() - t0) / 1e9 }
-        catch { case _: Throwable => -1.0 }
+        catch { case e: Throwable => failed(name, e); -1.0 }
       }
       dropCached()
       ts
@@ -90,7 +98,8 @@ object ScaleBench {
       val tBig = score(n, rawBig)
       val ratio = if (tSmall > 0 && tBig > 0) tBig / tSmall else -1.0
       System.err.println(f"SCALE $n%-34s small=${f3(tSmall)}s big=${f3(tBig)}s ratio=${f3(ratio)}")
-      s""""$n":{"small":${f3(tSmall)},"big":${f3(tBig)},"ratio":${f3(ratio)},""" +
+      val error = errors.get(n).map(c => s""""error":"$c",""").getOrElse("")
+      s""""$n":{"small":${f3(tSmall)},"big":${f3(tBig)},"ratio":${f3(ratio)},$error""" +
         s""""raw_small":[${rawSmall.map(f3).mkString(",")}],""" +
         s""""raw_big":[${rawBig.map(f3).mkString(",")}]}"""
     }

@@ -18,9 +18,11 @@ import org.apache.spark.sql.functions._
   * enrichment struct :218-221, slug :384, upsert :452-467.
   *
   * Scale design: the exact-dup check is a hash-partitioned left-anti join;
-  * the fuzzy check blocks on a year bucket (floor(year/2)) so the ±1-year
-  * band becomes an equi-join component and the expensive string ratio only
-  * runs inside buckets — never O(n²) across the corpus (SURVEY O7).
+  * the fuzzy check expands each seen year to {y-1, y, y+1} so the ±1-year
+  * band becomes an equi-join on the candidate's year and the expensive
+  * string ratio only runs within it — never O(n²) across the corpus
+  * (SURVEY O7). Exact duplicates are a subset of fuzzy ones (ratio 1.0),
+  * so a caller that runs the fuzzy check needs no exact pass before it.
   */
 object MoviePipeline {
 
@@ -80,33 +82,20 @@ object MoviePipeline {
 
   /** J2 — fuzzy band-join dedup: candidate is a dup iff some seen movie has
     * |Δyear| <= 1 AND ratio(titles) >= 0.85 (movie_generator.py:83-94).
-    * The ±1 band is rewritten as an equi-join on a generated 2-year bucket
-    * (each side also probes the neighbor bucket), turning the O(n²)
-    * nested-loop into a shuffled hash join — the SURVEY O7 rewrite. */
+    * The ±1 band becomes an equi-join: each seen year is expanded to
+    * {y-1, y, y+1} and joined on the candidate's year, so the string ratio
+    * only runs within a year's band, and one left-anti join drops the dups
+    * (GraftExtensions rewrites the ratio condition to its bounded form).
+    * Every exact (normKey, year) duplicate is also a fuzzy one: identical
+    * keys have ratio 1.0, so this alone subsumes [[dedupExact]]. */
   def dedupFuzzy(candidates: DataFrame, seen: DataFrame,
                  threshold: Double = 0.85): DataFrame = {
-    // Candidate year y can only match seen years {y-1, y, y+1}, whose
-    // 2-year buckets are exactly {floor((y-1)/2), floor((y+1)/2)} (two
-    // distinct values). Probing both on the candidate side — seen side
-    // keeps its single bucket — makes every ±1 pair meet exactly once.
-    val cand = candidates
-      .withColumn("ck", normKey(col("title")))
-      .withColumnRenamed("year", "c_year")
-      .withColumn("bucket", explode(array(
-        floor((col("c_year") - 1) / 2), floor((col("c_year") + 1) / 2))))
-    val seenB = seen
-      .select(normKey(col("title")).as("sk"), col("year").as("s_year"))
-      .withColumn("bucket", floor(col("s_year") / 2))
-    val dupKeys = cand.join(seenB, Seq("bucket"))
-      .filter(abs(col("c_year") - col("s_year")) <= 1)
-      .filter(string_ratio(col("ck"), col("sk")) >= threshold)
-      .select(col("ck"), col("c_year")).distinct()
-    candidates
-      .withColumn("ck", normKey(col("title")))
-      .withColumnRenamed("year", "c_year")
-      .join(dupKeys, Seq("ck", "c_year"), "left_anti")
-      .withColumnRenamed("c_year", "year")
-      .drop("ck")
+    val band = seen.select(normKey(col("title")).as("sk"),
+      explode(array(col("year") - 1, col("year"), col("year") + 1)).as("s_year"))
+    candidates.join(band,
+      col("year") === col("s_year") &&
+        string_ratio(normKey(col("title")), col("sk")) >= threshold,
+      "left_anti")
   }
 
   /** S5/W2 — last-writer-wins merge on the business key (title_norm, year)
@@ -121,12 +110,5 @@ object MoviePipeline {
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .drop("__rn")
-  }
-
-  /** Full batch pipeline: raw blobs + existing corpus → merged corpus. */
-  def run(raw: DataFrame, existing: DataFrame): DataFrame = {
-    val parsed = enrich(validate(parseRaw(raw)))
-    val fresh = dedupFuzzy(dedupExact(parsed, existing), existing)
-    mergeUpsert(existing, fresh.drop("raw"))
   }
 }

@@ -1,18 +1,31 @@
 package graft.streaming
 
 import graft.pipeline.MoviePipeline
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** The reference's incremental curation loop (SURVEY.md §3.3,
   * /root/reference/movie_generator.py:469-539) as a Structured Streaming
   * `foreachBatch` job: each micro-batch of raw LLM-record text is parsed,
-  * validated, deduplicated against the CURRENT corpus (exact anti-join +
-  * fuzzy band join — the per-batch corpus read is the streaming analog of
-  * the reference's seen-set refresh every 50 records, :510-511), merged
-  * last-writer-wins, and written back.
+  * validated, deduplicated against the CURRENT corpus (one fuzzy band
+  * anti-join, which also drops exact duplicates — the per-batch corpus read
+  * is the streaming analog of the reference's seen-set refresh every 50
+  * records, :510-511), merged last-writer-wins, and written back.
+  *
+  * One pass per batch — each piece of work is done once:
+  *  - the parse/validate/enrich result is cached by the job that collects
+  *    its candidate years, and released when the batch returns or fails;
+  *  - the corpus is read with the parsed schema plus `yb`, so no batch
+  *    runs a parquet schema-inference job;
+  *  - the fresh rows are cached by the job that collects their buckets and
+  *    feed the merge write from that cache.
+  * A batch into an existing corpus therefore runs 6 Spark jobs with
+  * adaptive execution on: the candidate years, the broadcast of the pruned
+  * corpus, the fresh buckets, adaptive execution's stage over the cached
+  * fresh rows, and the merge's shuffle and write (StreamingSpec pins ≤ 6).
   *
   * Checkpointing: `checkpointLocation` gives exactly-once micro-batch
   * bookkeeping — the replacement for the reference's pickle checkpoint
@@ -52,29 +65,33 @@ object StreamingCuration {
   private def bucketOf(year: Column): Column =
     floor(year / BucketYears).cast("long")
 
+  /** Distinct values of a small-domain key (years, buckets): partition-
+    * pruning metadata, not data, so the driver-side collect is a scalar
+    * hop, not a distributed-loop smell. Deduplicated per partition on the
+    * executors and across partitions here, it costs one job and no
+    * shuffle; `distinct()` would add a shuffle map stage, which adaptive
+    * execution runs as a job of its own. */
+  private def distinctKeys(df: DataFrame, key: Column): Array[Long] =
+    df.select(key.cast("long")).as(Encoders.scalaLong)
+      .mapPartitions(_.toSet.iterator)(Encoders.scalaLong).collect().distinct
+
   private def corpusFs(spark: SparkSession): FileSystem =
     FileSystem.get(spark.sparkContext.hadoopConfiguration)
 
-  /** Read the current corpus (with its `yb` partition column), or an empty
-    * typed frame when the corpus does not exist yet (explicit first-batch
-    * bootstrap). Genuine read errors — corrupt footers, IO failures,
-    * permissions — PROPAGATE and fail the micro-batch so the checkpoint
-    * retries it: swallowing them here would dedup against nothing and make
-    * the subsequent merge-write silently drop history. */
-  def readCorpus(spark: SparkSession, corpusDir: String): DataFrame =
+  /** Read the current corpus (with its `yb` partition column) with the
+    * schema of the parsed batch plus `yb: long`, so no batch pays a parquet
+    * schema-inference job; an empty frame of that schema stands in while
+    * the corpus does not exist yet (explicit first-batch bootstrap).
+    * Genuine read errors — corrupt footers, IO failures, permissions —
+    * PROPAGATE and fail the micro-batch so the checkpoint retries it:
+    * swallowing them here would dedup against nothing and make the
+    * subsequent merge-write silently drop history. */
+  def readCorpus(spark: SparkSession, corpusDir: String, schema: StructType): DataFrame = {
+    val withYb = schema.add("yb", LongType)
     if (!corpusFs(spark).exists(new Path(corpusDir)))
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("title",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("year",
-            org.apache.spark.sql.types.IntegerType),
-          org.apache.spark.sql.types.StructField("created_at",
-            org.apache.spark.sql.types.TimestampType),
-          org.apache.spark.sql.types.StructField("yb",
-            org.apache.spark.sql.types.LongType))))
-    else spark.read.parquet(corpusDir)
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), withYb)
+    else spark.read.schema(withYb).parquet(corpusDir)
+  }
 
   /** Heal a swap interrupted by a crash: any bucket sitting in a
     * `<corpus>_prev_*` backup whose live dir is missing is restored, then
@@ -100,32 +117,32 @@ object StreamingCuration {
     val spark = batch.sparkSession
     recoverInterruptedSwap(spark, corpusDir)
     val parsed = MoviePipeline.enrich(MoviePipeline.validate(
-      MoviePipeline.parseRaw(batch))).drop("raw")
+      MoviePipeline.parseRaw(batch))).drop("raw").persist()
+    try {
+      // Candidate years decide which corpus partitions dedup must see:
+      // duplicates sit within ±1 year, so probe the neighbors' buckets too.
+      // This job also fills the `parsed` cache.
+      val candYears = distinctKeys(parsed, col("year"))
+      if (candYears.nonEmpty) {
+        val dedupBuckets = candYears
+          .flatMap(y => Seq(y - 1, y, y + 1))
+          .map(y => math.floorDiv(y, BucketYears.toLong)).distinct.toSeq
+        val corpus = readCorpus(spark, corpusDir, parsed.schema)
+        val seen = corpus.filter(col("yb").isin(dedupBuckets: _*)) // pruned scan
+        val fresh = MoviePipeline.dedupFuzzy(parsed, seen).persist()
+        try mergeTouched(corpusDir, batchId, corpus, fresh)
+        finally fresh.unpersist(blocking = false)
+      }
+    } finally parsed.unpersist(blocking = false)
+  }
 
-    // Candidate years decide which corpus partitions dedup must see:
-    // (normKey, year) exact dups share the year's bucket; fuzzy dups sit
-    // within ±1 year, so probe the neighbors' buckets too. This is
-    // partition-pruning metadata (a handful of longs), not data, so the
-    // driver-side collect is a scalar hop, not a distributed-loop smell.
-    val candYears = parsed.select(col("year")).distinct()
-      .collect().map(_.getInt(0))
-    if (candYears.isEmpty) return
-    val dedupBuckets = candYears
-      .flatMap(y => Seq(y - 1, y, y + 1))
-      .map(y => math.floorDiv(y, BucketYears).toLong).distinct.toSeq
-
-    val corpus = readCorpus(spark, corpusDir)
-    val seen = corpus.filter(col("yb").isin(dedupBuckets: _*)) // pruned scan
-    val fresh = MoviePipeline.dedupFuzzy(
-      MoviePipeline.dedupExact(parsed, seen), seen)
-      .select(parsed.columns.map(col): _*)
-
-    // Only buckets that receive fresh rows are rewritten. dedupExact
-    // guarantees fresh keys are absent from the corpus, so the merge only
-    // APPENDS within a bucket (LWW resolves same-key rows inside the batch);
-    // untouched buckets stay byte-identical on disk.
-    val touched = fresh.select(bucketOf(col("year")).as("yb")).distinct()
-      .collect().map(_.getLong(0)).toSeq
+  /** Rewrite only the buckets that receive `fresh` rows, then swap them in.
+    * Dedup guarantees fresh keys are absent from the corpus, so the merge
+    * only APPENDS within a bucket (LWW resolves same-key rows inside the
+    * batch); untouched buckets stay byte-identical on disk. */
+  private def mergeTouched(corpusDir: String, batchId: Long,
+                           corpus: DataFrame, fresh: DataFrame): Unit = {
+    val touched = distinctKeys(fresh, bucketOf(col("year"))).toSeq
     if (touched.isEmpty) return
     val merged = MoviePipeline.mergeUpsert(
       corpus.filter(col("yb").isin(touched: _*)).drop("yb"), fresh)
@@ -134,7 +151,7 @@ object StreamingCuration {
     merged.withColumn("yb", bucketOf(col("year")))
       .write.partitionBy("yb").mode(SaveMode.Overwrite).parquet(staging)
 
-    val fs = corpusFs(spark)
+    val fs = corpusFs(fresh.sparkSession)
     val prev = new Path(corpusDir + s"_prev_$batchId")
     var opIdx = 0
     def op(f: => Unit): Unit = { swapFault(opIdx); opIdx += 1; f }

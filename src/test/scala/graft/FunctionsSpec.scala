@@ -130,6 +130,33 @@ class FunctionsSpec extends SparkSpec {
     assert(r > 0.99 && r < 1.0)
   }
 
+  test("an exact key has ratio 1.0 and passes 0.85 on every evaluation path") {
+    // fuzzy dedup subsumes exact dedup only if identical keys always match
+    val keys = Seq("", "the bicycle thief", "héllo wörld — ça va", "東京物語",
+      "\uD83C\uDFAC film \uD83D\uDE00", "a" * 300)
+    keys.foreach { k =>
+      assert(RatcliffObershelp.ratio(k, k) == 1.0, k)
+      assert(graft.plans.StringRatioKernels.ratioGte(k, k, 0.85), k)
+    }
+    // an RDD source keeps the optimizer from evaluating the rows on the driver
+    val df = spark.sparkContext.parallelize(keys.map(k => (k, k)), 2).toDF("a", "b")
+    for ((factory, wholeStage) <- Seq("CODEGEN_ONLY" -> "true", "NO_CODEGEN" -> "false")) {
+      spark.conf.set("spark.sql.codegen.factoryMode", factory)
+      spark.conf.set("spark.sql.codegen.wholeStage", wholeStage)
+      try {
+        val ratios = df.select(string_ratio(col("a"), col("b"))).as[Double].collect()
+        assert(ratios.toSeq == Seq.fill(keys.size)(1.0), factory)
+        val kept = df.filter(string_ratio(col("a"), col("b")) >= 0.85)
+        assert(kept.queryExecution.optimizedPlan.exists(_.expressions.exists(
+          _.exists(_.isInstanceOf[graft.plans.StringRatioGte]))), "not rewritten")
+        assert(kept.count() == keys.size, factory)
+      } finally {
+        spark.conf.unset("spark.sql.codegen.factoryMode")
+        spark.conf.unset("spark.sql.codegen.wholeStage")
+      }
+    }
+  }
+
   test("levRatio normalized similarity (F8 oracle twin)") {
     val df = Seq(("kitten", "sitting")).toDF("a", "b")
       .select(levRatio(col("a"), col("b")).as("r"))

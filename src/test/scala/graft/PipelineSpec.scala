@@ -79,6 +79,9 @@ class PipelineSpec extends SparkSpec {
     val kept = afterFuzzy.select("title", "year").as[(String, Int)]
       .collect().toSet
     assert(kept == Set(("The Bicycle Thief", 1950), ("Stalker", 1979)))
+    // an exact duplicate is also a fuzzy one: the fuzzy pass alone agrees
+    assert(MoviePipeline.dedupFuzzy(candidates, seen).select("title", "year")
+      .as[(String, Int)].collect().toSet == kept)
   }
 
   test("typed Dataset[Movie] round-trip preserves parsed fields") {

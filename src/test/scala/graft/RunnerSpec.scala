@@ -5,8 +5,9 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 /** Contracts of the runner mains: Verify's dump over a named subset, the
-  * quiet-reference reader Bench compares against, and the one session
-  * factory every main builds its SparkSession through. */
+  * quiet-reference reader Bench compares against, Bench's commit stamp,
+  * and the one session factory every main builds its SparkSession
+  * through. */
 class RunnerSpec extends SparkSpec {
   init()
 
@@ -46,6 +47,11 @@ class RunnerSpec extends SparkSpec {
     assert(Bench.quietRef(json, sf).isEmpty)
     assert(Bench.quietRef(json.take(json.length / 2), snapshotSf).isEmpty)
     assert(Bench.quietRef("not json", snapshotSf).isEmpty)
+  }
+
+  test("Bench.gitLine gives an empty commit outside a git checkout") {
+    val outside = Files.createTempDirectory("not-a-checkout").toFile
+    assert(Bench.gitLine(Seq("git", "rev-parse", "HEAD"), outside) == "")
   }
 
   test("SparkSession.builder appears in src/main/scala only inside Session.scala") {

@@ -355,6 +355,175 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  /** The `processBatch` formulation that parsing once replaced, kept as
+    * the reference: the parsed batch is evaluated for every use, the corpus
+    * read infers its schema, exact dedup runs before a fuzzy join on 2-year
+    * buckets, and the fresh rows are computed again for the write. Buckets
+    * are swapped by delete-then-rename: crash safety is not under test. */
+  private def referenceBatch(corpusDir: String)(batch: org.apache.spark.sql.DataFrame,
+                                                batchId: Long): Unit = {
+    import graft.pipeline.MoviePipeline
+    import graft.functions.TextFunctions.normKey
+    import graft.functions.expressions.StringRatio.string_ratio
+    import org.apache.spark.sql.types._
+    def dedupFuzzy(candidates: org.apache.spark.sql.DataFrame,
+                   seen: org.apache.spark.sql.DataFrame) = {
+      val cand = candidates
+        .withColumn("ck", normKey(col("title")))
+        .withColumnRenamed("year", "c_year")
+        .withColumn("bucket", explode(array(
+          floor((col("c_year") - 1) / 2), floor((col("c_year") + 1) / 2))))
+      val seenB = seen
+        .select(normKey(col("title")).as("sk"), col("year").as("s_year"))
+        .withColumn("bucket", floor(col("s_year") / 2))
+      val dupKeys = cand.join(seenB, Seq("bucket"))
+        .filter(abs(col("c_year") - col("s_year")) <= 1)
+        .filter(string_ratio(col("ck"), col("sk")) >= 0.85)
+        .select(col("ck"), col("c_year")).distinct()
+      candidates
+        .withColumn("ck", normKey(col("title")))
+        .withColumnRenamed("year", "c_year")
+        .join(dupKeys, Seq("ck", "c_year"), "left_anti")
+        .withColumnRenamed("c_year", "year")
+        .drop("ck")
+    }
+    val bucketOf = floor(col("year") / 10).cast("long")
+    val parsed = MoviePipeline.enrich(MoviePipeline.validate(
+      MoviePipeline.parseRaw(batch))).drop("raw")
+    val candYears = parsed.select(col("year")).distinct().collect().map(_.getInt(0))
+    if (candYears.isEmpty) return
+    val dedupBuckets = candYears.flatMap(y => Seq(y - 1, y, y + 1))
+      .map(y => math.floorDiv(y, 10).toLong).distinct.toSeq
+    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    val corpus =
+      if (!fs.exists(new org.apache.hadoop.fs.Path(corpusDir)))
+        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+          StructType(Seq(StructField("title", StringType), StructField("year", IntegerType),
+            StructField("created_at", TimestampType), StructField("yb", LongType))))
+      else spark.read.parquet(corpusDir)
+    val seen = corpus.filter(col("yb").isin(dedupBuckets: _*))
+    val fresh = dedupFuzzy(MoviePipeline.dedupExact(parsed, seen), seen)
+      .select(parsed.columns.toIndexedSeq.map(col): _*)
+    val touched = fresh.select(bucketOf).distinct().collect().map(_.getLong(0)).toSeq
+    if (touched.isEmpty) return
+    val staging = s"${corpusDir}_staging_$batchId"
+    MoviePipeline.mergeUpsert(corpus.filter(col("yb").isin(touched: _*)).drop("yb"), fresh)
+      .withColumn("yb", bucketOf)
+      .write.partitionBy("yb").mode("overwrite").parquet(staging)
+    fs.mkdirs(new org.apache.hadoop.fs.Path(corpusDir))
+    touched.foreach { b =>
+      val live = new org.apache.hadoop.fs.Path(corpusDir, s"yb=$b")
+      fs.delete(live, true)
+      fs.rename(new org.apache.hadoop.fs.Path(staging, s"yb=$b"), live)
+    }
+    fs.delete(new org.apache.hadoop.fs.Path(staging), true)
+  }
+
+  /** `n` seeded batches of raw records and the keys a curated corpus must
+    * end with. Each batch holds new titles, exact duplicates (re-cased,
+    * padded or markdown-wrapped) and fuzzy duplicates (one letter changed,
+    * year moved by up to 1) of earlier batches' titles, invalid records,
+    * and byte-identical repeats of its own new records (so last-writer-wins
+    * has one answer whatever the row order). */
+  private def curationBatches(seed: Long, n: Int): (Seq[Seq[String]], Set[(String, Int)]) = {
+    val r = new scala.util.Random(seed)
+    def word(): String = (0 until 2 + r.nextInt(2))
+      .map(_ => s"${"bdfgklmnprstvz".charAt(r.nextInt(14))}${"aeiou".charAt(r.nextInt(5))}")
+      .mkString.capitalize
+    def rec(t: String, y: Int) =
+      s"TITLE: $t\nYEAR: $y\nDIRECTOR: ${word()}\nGENRES: Drama, ${word()}\nPLOT: ${word()} ${word()}"
+    val planted = scala.collection.mutable.ArrayBuffer.empty[(String, Int)]
+    val batches = (0 until n).map { _ =>
+      val history = planted.toVector
+      def old() = history(r.nextInt(history.size))
+      val fresh = Seq.fill(8) {
+        val t = Seq.fill(3)(word()).mkString(" "); val y = 1960 + r.nextInt(70)
+        planted += t -> y; rec(t, y)
+      }
+      val exact = if (history.isEmpty) Nil else Seq.fill(3) {
+        val (t, y) = old()
+        rec(Seq(t.toUpperCase, t.toLowerCase, s"  ${t.replace(" ", "   ")} ", s"**$t**")(r.nextInt(4)), y)
+      }
+      val fuzzy = if (history.isEmpty) Nil else Seq.fill(3) {
+        val (t, y) = old()
+        val at = 2 + r.nextInt(t.length - 4)
+        rec(t.updated(at, if (t(at) == 'q') 'x' else 'q'), y - 1 + r.nextInt(3))
+      }
+      val invalid = Seq("YEAR: 1990\nPLOT: no title", "TITLE: ***\nYEAR: 1991\nPLOT: blank")
+      val repeats = Seq.fill(2)(fresh(r.nextInt(fresh.size)))
+      r.shuffle(fresh ++ exact ++ fuzzy ++ invalid ++ repeats)
+    }
+    (batches, planted.map { case (t, y) => t.toLowerCase -> y }.toSet)
+  }
+
+  /** Every row of a corpus but its `created_at`, columns in name order. */
+  private def corpusRows(corpusDir: String): Seq[String] = {
+    val df = spark.read.parquet(corpusDir)
+    df.select(df.columns.toIndexedSeq.filter(_ != "created_at").sorted.map(col): _*)
+      .collect().map(_.toString).toSeq.sorted
+  }
+
+  test("processBatch equals the formulation it replaced on 12 seeded batches") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_curation_eq").toString
+    val (batches, planted) = curationBatches(5, 12)
+    batches.zipWithIndex.foreach { case (b, i) =>
+      val raw = b.toDF("raw")
+      graft.streaming.StreamingCuration.processBatch(s"$dir/new")(raw, i.toLong)
+      referenceBatch(s"$dir/ref")(raw, i.toLong)
+    }
+    val got = corpusRows(s"$dir/new")
+    assert(got == corpusRows(s"$dir/ref"))
+    val keys = spark.read.parquet(s"$dir/new").select(lower(trim(col("title"))), col("year"))
+      .as[(String, Int)].collect()
+    assert(keys.length == got.size && keys.toSet == planted,
+      "every duplicate, invalid record and repeat must be dropped, every new title kept")
+  }
+
+  test("a warm curation batch into an existing corpus runs at most 6 jobs, none inferring a schema") {
+    val sc = spark.sparkContext
+    val corpusDir = java.nio.file.Files.createTempDirectory("graft_curation_cost").toString + "/corpus"
+    val (batches, _) = curationBatches(9, 4)
+    batches.take(3).zipWithIndex.foreach { case (b, i) =>
+      graft.streaming.StreamingCuration.processBatch(corpusDir)(b.toDF("raw"), i.toLong)
+    }
+    val group = "curation-batch-cost"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.add(e.stageInfos.map(_.details).mkString("\n"))
+    }
+    val raw = batches(3).toDF("raw")
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "warm curation batch")
+    try graft.streaming.StreamingCuration.processBatch(corpusDir)(raw, 3L) finally {
+      sc.clearJobGroup()
+      org.apache.spark.ListenerBusDrain(sc)
+      sc.removeSparkListener(listener)
+    }
+    import scala.jdk.CollectionConverters._
+    val details = jobs.asScala.toSeq
+    assert(details.nonEmpty && details.size <= 6, s"${details.size} jobs")
+    // a job started while a reader resolves its relation is a schema inference
+    assert(!details.exists(_.contains("DataFrameReader")), details.mkString("\n---\n"))
+  }
+
+  test("processBatch leaves no RDD persisted, after a clean batch or a failed swap") {
+    val sc = spark.sparkContext
+    val corpusDir = java.nio.file.Files.createTempDirectory("graft_curation_cache").toString + "/corpus"
+    val (batches, _) = curationBatches(13, 2)
+    val persisted = sc.getPersistentRDDs.keySet
+    graft.streaming.StreamingCuration.processBatch(corpusDir)(batches(0).toDF("raw"), 0L)
+    assert(sc.getPersistentRDDs.keySet == persisted, "a clean batch left a cache")
+    graft.streaming.StreamingCuration.swapFault = i =>
+      if (i == 2) throw new RuntimeException(s"injected crash at op $i")
+    val e = try intercept[RuntimeException] {
+      graft.streaming.StreamingCuration.processBatch(corpusDir)(batches(1).toDF("raw"), 1L)
+    } finally graft.streaming.StreamingCuration.swapFault = _ => ()
+    assert(e.getMessage.contains("injected crash"))
+    assert(sc.getPersistentRDDs.keySet == persisted, "a failed batch left a cache")
+  }
+
   test("streaming content dedup: LSH sketch store admits only never-seen docs") {
     implicit val sqlCtx = spark.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("graft_cdedup").toString
