@@ -10,13 +10,17 @@ object Profile {
     val names = args.zipWithIndex.filterNot { case (a, i) =>
       a.startsWith("--") || (i > 0 && args(i - 1).startsWith("--"))
     }.map(_._1).toSeq
+    // fail before the session starts, naming every unknown query
+    val unknown = names.filterNot(QueryRegistry.byName.contains)
+    require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(", ")}")
     def opt(flag: String, default: String): String = {
       val i = args.indexOf(flag); if (i >= 0 && i + 1 < args.length) args(i + 1) else default
     }
     val sfDir = opt("--sf", "/root/testdata/sf0.1")
     val iters = opt("--iters", "2").toInt
-    // same env knobs as SuiteProbe so a single query can be profiled
-    // under the exact confs an artifact run used (cpus, session width)
+    // the env knobs of the sf10 completion pass (SUITE_sf10.json), so a
+    // single query can be profiled under the exact confs that artifact
+    // used (cpus, session width)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val parts = sys.env.get("GRAFT_SHUFFLE_PARTS").map(_.toInt).getOrElse(cpus)
     val spark = Session.local(cpus, parts, "graft-bench")

@@ -39,8 +39,8 @@ object QueryRegistry {
     queries.map(q => q.name -> q).toMap
 
   /** Execution-scoped session confs, applied by every main that RUNS a
-    * registry query (Bench/Verify/Profile/Plans/ScaleBench/SuiteProbe/
-    * InvProbe/PredProbe) around the full build-plan-execute of that query
+    * registry query (Bench/Verify/Profile/Plans/ScaleBench) around the
+    * full build-plan-execute of that query
     * and restored after.
     *
     * Rationale (the r5 overhead-floor work, measured with ConfProbe, a
@@ -138,7 +138,7 @@ object QueryRegistry {
   // q115 (recursive CTE): the default cteRecursionRowLimit (1M) is a
   // runaway-recursion guard sized for interactive use, and the chain
   // table is N·log2(max_id) rows BY CONSTRUCTION (~16M at sf10 — the
-  // first 100x SuiteProbe pass failed exactly here). Termination is
+  // first 100x completion pass, SUITE_sf10.json, failed exactly here). Termination is
   // structurally guaranteed twice over — the anchor column halves every
   // step (anc > 0 strictly decreases) and cteRecursionLevelLimit (100)
   // stays as the backstop — so the row guard is the one Spark limit that

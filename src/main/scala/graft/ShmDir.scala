@@ -44,7 +44,8 @@ object ShmDir {
       // Sweep dead-PID dirs of EVERY graft tool, not just this prefix
       // (r10: a same-prefix-only sweep left a killed ScaleBench's 44 GB
       // graft-scale dir resident until the NEXT ScaleBench — tmpfs pages
-      // that OOM-killed an unrelated sf10 SuiteProbe). Ownership is
+      // that OOM-killed an unrelated sf10 completion pass, the run
+      // recorded in SUITE_sf10.json). Ownership is
       // proved by the marker FILE this claim writes, never by the name
       // pattern alone; liveness stays PID-exact.
       val deadPid = n.lastIndexOf('-') > 0 &&

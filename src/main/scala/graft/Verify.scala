@@ -48,24 +48,9 @@ object Verify {
     // interrupted run can be relaunched and only re-does unfinished
     // queries. Driver runs (fresh outDir each time) are unaffected.
     val skipDone = sys.env.get("SPARK_GRAFT_SKIP_EXISTING").contains("1")
-    // SPARK_GRAFT_SKIP=q35_...,... : exclude named queries from a dump
-    // pass. Exists for the 100x (sf10) pass ONLY: q35's result set is
-    // 6.25B rows BY CONTRACT (it is the exact-verify rung behind q34's
-    // LSH candidates — quadratic within blocks), so dumping it to
-    // parquet is the one thing that cannot scale; its at-scale
-    // verification is the in-query sampled-invariant contract
-    // (INVARIANTS_sf10.json) instead. Driver runs don't set this.
-    val skipNames = sys.env.get("SPARK_GRAFT_SKIP")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .getOrElse(Set.empty)
-    val unknownSkips = skipNames -- SparkEntry.queries.keySet
-    require(unknownSkips.isEmpty,
-      s"SPARK_GRAFT_SKIP names not in the registry: $unknownSkips")
     new java.io.File(outDir).mkdirs()
     selected.foreach { case (name, fn) =>
-      if (skipNames.contains(name))
-        System.err.println(s"[verify] $name skipped via SPARK_GRAFT_SKIP")
-      else if (skipDone && Files.exists(Paths.get(s"$outDir/$name/_SUCCESS")))
+      if (skipDone && Files.exists(Paths.get(s"$outDir/$name/_SUCCESS")))
         System.err.println(s"[verify] $name already dumped, skipping")
       else
       try QueryRegistry.withExecConfs(spark, name, sfDir) {

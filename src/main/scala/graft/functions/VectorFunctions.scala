@@ -30,17 +30,16 @@ object VectorFunctions {
 
   /** Cosine similarity in [-1, 1]; null-safe on null arrays.
     *
-    * Dispatches to the fused native Catalyst expression
-    * ([[graft.functions.expressions.CosineSimilarity]], single codegen'd
-    * loop) unless -Dgraft.cosine.impl=hof selects the pure-builtin HOF
-    * composition. Both accumulate sequentially in double and are
-    * bit-equal (asserted in FunctionsSpec), so the oracle contract is
+    * The fused native Catalyst expression
+    * ([[graft.functions.expressions.CosineSimilarity]], one codegen'd
+    * loop). It accumulates sequentially in double, bit-equal to
+    * [[cosineHof]] (asserted in FunctionsSpec), so the oracle contract is
     * implementation-independent. */
   def cosine(a: Column, b: Column): Column =
-    if (sys.props.get("graft.cosine.impl").contains("hof")) cosineHof(a, b)
-    else graft.functions.expressions.CosineSimilarity.cosine_native(a, b)
+    graft.functions.expressions.CosineSimilarity.cosine_native(a, b)
 
-  /** The five-pass builtin-HOF formulation (SURVEY F13). */
+  /** The five-pass builtin-HOF formulation (SURVEY F13): the reference
+    * that FunctionsSpec holds the native expression to. */
   def cosineHof(a: Column, b: Column): Column =
     dotProduct(a, b) / (l2Norm(a) * l2Norm(b))
 

@@ -588,8 +588,8 @@ object EditDistanceJoin {
     * groupBy materialized ~5.5B pairs of hash state at sf100 and died at
     * the box's 108 GB spill wall; with exactly-once the kernel's only
     * wide shuffles are the signature streams, and an order-insensitive
-    * consumer (SuiteProbe's sum cell) aggregates the pair stream fully
-    * map-side. */
+    * consumer (the order-insensitive sum cell of SUITE_sf100.json)
+    * aggregates the pair stream fully map-side. */
   private val q79 = GraftQuery(
     "q79_passjoin_k2_varlen",
     (s, d) => {

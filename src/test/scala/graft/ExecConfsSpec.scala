@@ -50,7 +50,8 @@ class ExecConfsSpec extends SparkSpec {
 
   test("q115's gate lifts the recursion row guard and derives its width") {
     // The chain table is N*log2(max_id) rows by construction, so the 1M
-    // default guard fails at 100x data (first sf10 SuiteProbe pass);
+    // default guard fails at 100x data (the first sf10 completion pass,
+    // SUITE_sf10.json);
     // termination stays guaranteed by the halving anchor + the level
     // limit. The shuffle width is stat-derived (VERDICT r9 #1): neither
     // the 8-partition bounded pin (misclassified at sf10) nor the

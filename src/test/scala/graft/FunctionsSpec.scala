@@ -30,9 +30,10 @@ class FunctionsSpec extends SparkSpec {
     val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
     val both = emb.crossJoin(broadcast(q))
       .select(
-        cosine(col("embedding"), col("qv")).as("hof"),
+        cosineHof(col("embedding"), col("qv")).as("hof"),
         cosine_native(col("embedding"), col("qv")).as("native"))
       .collect()
+    assert(both.nonEmpty)
     both.foreach(r => assert(r.getDouble(0) == r.getDouble(1),
       s"hof=${r.getDouble(0)} native=${r.getDouble(1)}"))
   }
