@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 
+import scala.jdk.CollectionConverters._
 import scala.util.Try
 import scala.util.control.NonFatal
 
@@ -18,7 +19,7 @@ import org.apache.spark.ml.linalg.{SQLDataTypes, Vector, Vectors}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 /** The reference's flagship API, as one library call: POST /api/search
   * end to end (/root/reference/backend/search.py:15-44 + routes.py:13-31).
@@ -32,38 +33,61 @@ import org.apache.spark.sql.types.{StructField, StructType}
   *  - overscan 3× then exact re-rank (search.py:38-40 — SURVEY T3/O4)
   *  - result projection with defaults (search.py:46-62 — SURVEY P2)
   *
-  * '''The ANN index''' (the analog of the Atlas vector index that
-  * `$vectorSearch` reads, ai_service.py:59-119, built ahead of requests):
-  *  - ''Contents.'' The LSH model of [[lshModel]] (2 hash tables × 64
+  * '''Two tiers, chosen per request by index size''' (in the style of
+  * `EditDistanceJoin.selfJoinAuto`). Keeping the serving structure apart
+  * from the analytical engine follows Krypton (VLDB 2023), and reusing one
+  * session-wide structure across requests follows the EDBT 2020
+  * incremental top-k framework (both in PAPERS.md).
+  *  - ''The budget.'' A table whose `embeddings.parquet` files total at
+  *    most [[exactTierBudget]] bytes, 1/16 of the driver's max heap, is
+  *    served by the exact tier; a larger one by the LSH tier. The byte
+  *    lengths come from the signature below, so the choice runs no Spark
+  *    job. Float vectors do not compress, so the file bytes are about the
+  *    copy's size: 799 KB of files for 512 KB of vectors at sf0.1.
+  *  - ''Exact tier.'' A driver-resident columnar copy: `vec_id`s in
+  *    ascending order (binary search is the id → row map), labels,
+  *    `documents.lang` codes (null for a vector without a document, which
+  *    is still a valid query key but passes no filter), the float vectors
+  *    in one flat array and their norms. A request scores every filtered
+  *    row with the arithmetic of `VectorKernels.cosineF`, so each score is
+  *    bit-equal to [[graft.functions.VectorFunctions.cosine]], keeps the
+  *    top k by (score desc, `vec_id` asc), the order of the q21/q29
+  *    oracle answers, and returns them as a local `(vec_id, label)`
+  *    DataFrame: the request and its `collect()` run no Spark job.
+  *  - ''LSH tier.'' The LSH model of [[lshModel]] (2 hash tables × 64
   *    doubles, on the driver) and a parquet table of
   *    `vec_id, label, lang, features, hashes`: every embedding as an MLlib
-  *    vector, its `documents.lang` (left join, so a vector without a
-  *    document keeps a null lang and is still a valid query key) and its
-  *    bucket hashes from the model's own `transform`.
-  *  - ''Key.'' One index per (SparkContext, `dir`, signature of
-  *    `embeddings.parquet` and `documents.parquet`). The signature is the
-  *    modification time and length of each path and of the files directly
-  *    under it. It is read on every request, so the next search after a
-  *    table is rewritten builds a new index, and the superseded one is
-  *    deleted.
-  *  - ''Location.'' Under the SparkContext's driver-local directory
-  *    (`SparkFiles.getRootDirectory()`, inside `spark.local.dir`, removed
-  *    when the context stops), never next to the tables, which may be
-  *    read-only. The table is written to a temporary path and renamed into
-  *    place. Executors read it from there, so the location assumes they
-  *    share the driver's file system, as in local mode.
-  *  - ''Build.'' Single-flight: concurrent first requests for one key wait
-  *    for one build, which reads the vector width and then writes the
-  *    table. The index is never `persist`ed. It lives on disk, so a
-  *    caller that unpersists every cached RDD between requests does not
-  *    lose it.
-  *  - ''Failure.'' A failed build is not kept. The request degrades to the
-  *    exact scan, and the next request builds again.
+  *    vector, its `documents.lang` (left join, as above) and its bucket
+  *    hashes from the model's own `transform`. It is written under the
+  *    SparkContext's driver-local directory (`SparkFiles.getRootDirectory()`,
+  *    inside `spark.local.dir`, removed when the context stops), never next
+  *    to the tables, which may be read-only, to a temporary path that is
+  *    then renamed into place. Executors read it from there, so the
+  *    location assumes they share the driver's file system, as in local
+  *    mode. A request runs two jobs: the key-vector lookup, and the bucket
+  *    probe plus exact re-rank that `collect` runs. It does no LSH fit, no
+  *    per-row hashing (MLlib skips `transform` when `hashes` is present)
+  *    and no join with `documents`.
   *
-  * A request then runs two jobs: the key-vector lookup, and the bucket
-  * probe plus exact re-rank that `collect` runs. It does no LSH fit, no
-  * per-row hashing (MLlib skips `transform` when `hashes` is present) and
-  * no join with `documents`.
+  * '''Building either tier''' (the analog of the Atlas vector index that
+  * `$vectorSearch` reads, ai_service.py:59-119, built ahead of requests):
+  *  - ''Key.'' One copy or index per (SparkContext, `dir`, tier, signature
+  *    of `embeddings.parquet` and `documents.parquet`). The signature is
+  *    the modification time and length of each path and of the files
+  *    directly under it. It is read on every request, so the next search
+  *    after a table is rewritten builds anew, and the superseded copy or
+  *    index is dropped.
+  *  - ''Build.'' Single-flight: concurrent first requests for one key wait
+  *    for one build. The exact tier's build is one job that collects the
+  *    embeddings left-joined with the documents' languages; the LSH tier's
+  *    reads the vector width and then writes its table. Neither is
+  *    `persist`ed, so a caller that unpersists every cached RDD between
+  *    requests loses neither.
+  *  - ''Failure.'' A failed build is not kept. The request degrades to the
+  *    exact Spark scan, and the next request builds again.
+  *
+  * '''Counters.''' Every request adds 1 to exactly one of
+  * [[exactTierCount]], [[lshTierCount]] and [[degradedCount]].
   */
 object SearchService {
 
@@ -79,14 +103,37 @@ object SearchService {
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   private val degraded = new AtomicLong
+  private val exactServed = new AtomicLong
+  private val lshServed = new AtomicLong
   private val builds = new AtomicLong
 
-  /** How many [[searchWithFallback]] calls took the exact path because the
-    * ANN path threw, since the JVM started. */
+  /** How many [[searchWithFallback]] calls took the exact Spark scan
+    * because their tier threw, since the JVM started. */
   def degradedCount: Long = degraded.get
 
-  /** How many ANN indexes have been built since the JVM started. */
+  /** How many [[searchWithFallback]] calls the exact tier served, since the
+    * JVM started. */
+  def exactTierCount: Long = exactServed.get
+
+  /** How many [[searchWithFallback]] calls the LSH tier served, since the
+    * JVM started. */
+  def lshTierCount: Long = lshServed.get
+
+  /** How many exact-tier copies and LSH indexes have been built since the
+    * JVM started. */
   private[graft] def indexBuilds: Long = builds.get
+
+  /** The exact tier serves a table whose `embeddings.parquet` files total
+    * at most this many bytes: 1/16 of the driver's max heap. */
+  private[graft] def exactTierBudget: Long = Runtime.getRuntime.maxMemory / 16
+
+  /** Test hook: send every request to the LSH tier, so the tests of that
+    * tier run on tables small enough for the exact one. A DynamicVariable,
+    * in the shape of `GraphOps.broadcastRowLimitOverride`: it is read on
+    * the calling thread when a request picks its tier, so `withValue`
+    * scopes it to the requests made inside the block. Production code
+    * never sets it. */
+  private[graft] val forceLshTier = new scala.util.DynamicVariable[Boolean](false)
 
   private val models = new ConcurrentHashMap[Integer, BucketedRandomProjectionLSHModel]
 
@@ -104,40 +151,118 @@ object SearchService {
         .fit(one)
     })
 
-  private final case class Index(model: BucketedRandomProjectionLSHModel,
-                                 path: String, schema: StructType)
+  private val ResultSchema = StructType(Seq(
+    StructField("vec_id", LongType), StructField("label", IntegerType)))
 
-  /** One key's index. The first request to read `built` builds it; the
-    * others block on the lazy val until that build ends. */
-  private final class Slot(val sig: String, val path: String, build: () => Index) {
-    lazy val built: Try[Index] = Try(build())
+  /** What a build makes: the exact tier's copy or the LSH tier's index. */
+  private sealed trait Built
+
+  private final case class Index(model: BucketedRandomProjectionLSHModel,
+                                 path: String, schema: StructType) extends Built
+
+  /** The exact tier's driver-resident copy of one table directory. Row i
+    * holds `ids(i)` (ascending), `labels(i)`, `langs(i)` (null without a
+    * document), the vector at `vectors(i * dim until (i + 1) * dim)` and
+    * that vector's norm, computed as `VectorKernels.cosineF` computes it.
+    * Labels are `int`, as in every embeddings table here; another type
+    * fails the build, so its requests degrade. */
+  private final class Resident(dir: String, ids: Array[Long], labels: Array[Integer],
+                               langs: Array[String], vectors: Array[Float],
+                               norms: Array[Double], dim: Int) extends Built {
+
+    /** The k rows whose language is in `filter` that score highest against
+      * the row of `queryVecId`, best first, as (vec_id, label) rows. */
+    def topK(queryVecId: Long, k: Int, filter: Seq[String]): Seq[Row] = {
+      val q = java.util.Arrays.binarySearch(ids, queryVecId)
+      if (q < 0) throw new NoSuchElementException(s"vec_id $queryVecId is not in $dir")
+      val admitted = filter.toSet
+      val scores = new Array[Double](ids.length)
+      // i before j: higher score (Spark's order: NaN highest, -0.0 == 0.0),
+      // then lower vec_id
+      val rank: Ordering[Int] = (i, j) => {
+        val c = if (scores(i) == scores(j)) 0 else java.lang.Double.compare(scores(j), scores(i))
+        if (c != 0) c else java.lang.Long.compare(ids(i), ids(j))
+      }
+      val kept = scala.collection.mutable.PriorityQueue.empty[Int](rank) // worst at the head
+      var i = 0
+      while (i < ids.length) {
+        if (langs(i) != null && admitted(langs(i))) {
+          var dot = 0.0; var j = 0
+          while (j < dim) {
+            dot += vectors(i * dim + j).toDouble * vectors(q * dim + j).toDouble
+            j += 1
+          }
+          scores(i) = dot / (norms(i) * norms(q))
+          if (kept.size < k) kept.enqueue(i)
+          else if (rank.lt(i, kept.head)) { kept.dequeue(); kept.enqueue(i) }
+        }
+        i += 1
+      }
+      kept.toSeq.sorted(rank).map(r => Row(ids(r), labels(r)))
+    }
   }
 
-  /** (SparkFiles root, dir) → the slot for that dir's current signature. */
-  private val indexes = new ConcurrentHashMap[(String, String), Slot]
+  /** One key's copy or index. The first request to read `built` builds it;
+    * the others block on the lazy val until that build ends. */
+  private final class Slot(val sig: String, val path: Option[String], build: () => Built) {
+    lazy val built: Try[Built] = Try(build())
+  }
 
-  private def signature(spark: SparkSession, dir: String): String =
-    Seq("embeddings", "documents").map { name =>
+  /** (SparkFiles root, dir, exact tier?) → the slot for that dir's current
+    * signature. */
+  private val indexes = new ConcurrentHashMap[(String, String, Boolean), Slot]
+
+  /** The modification times and lengths under both tables, and the total
+    * length of the embeddings files. */
+  private final case class Signature(text: String, embeddingBytes: Long)
+
+  private def signature(spark: SparkSession, dir: String): Signature = {
+    val stats = Seq("embeddings", "documents").map { name =>
       val p = new Path(s"$dir/$name.parquet")
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val st = fs.getFileStatus(p)
-      val files = if (st.isDirectory) fs.listStatus(p).toSeq.sortBy(_.getPath.getName) else Nil
-      (st +: files).map(f => s"${f.getModificationTime}:${f.getLen}").mkString(",")
-    }.mkString("|")
+      st +: (if (st.isDirectory) fs.listStatus(p).toSeq.sortBy(_.getPath.getName) else Nil)
+    }
+    Signature(stats.map(_.map(f => s"${f.getModificationTime}:${f.getLen}").mkString(",")).mkString("|"),
+      stats.head.filterNot(_.isDirectory).map(_.getLen).sum)
+  }
 
-  private def index(spark: SparkSession, dir: String): Index = {
+  private def built(spark: SparkSession, dir: String, sig: String, exact: Boolean): Built = {
     val root = SparkFiles.getRootDirectory()
-    val sig = signature(spark, dir)
-    val key = (root, dir)
+    val key = (root, dir, exact)
     val slot = indexes.compute(key, (_, old) =>
       if (old != null && old.sig == sig) old
       else {
-        if (old != null) deleteQuietly(old.path)
-        val name = java.util.UUID.nameUUIDFromBytes(s"$dir|$sig".getBytes("UTF-8"))
-        val path = s"$root/graft-search-index/$name"
-        new Slot(sig, path, () => buildIndex(spark, dir, path))
+        if (old != null) old.path.foreach(deleteQuietly)
+        if (exact) new Slot(sig, None, () => buildResident(spark, dir))
+        else {
+          val name = java.util.UUID.nameUUIDFromBytes(s"$dir|$sig".getBytes("UTF-8"))
+          val path = s"$root/graft-search-index/$name"
+          new Slot(sig, Some(path), () => buildIndex(spark, dir, path))
+        }
       })
     slot.built.fold(e => { indexes.remove(key, slot); throw e }, identity)
+  }
+
+  private def buildResident(spark: SparkSession, dir: String): Resident = {
+    import spark.implicits._
+    val rows = t(spark, dir, "embeddings")
+      .join(t(spark, dir, "documents").select(col("doc_id"), col("lang")),
+        col("vec_id") === col("doc_id"), "left")
+      .select(col("vec_id"), col("label"), col("lang"), col("embedding"))
+      .as[(Long, Integer, String, Array[Float])]
+      .collect().sortBy(_._1)
+    val dim = rows.headOption.fold(0)(_._4.length)
+    val vectors = new Array[Float](rows.length * dim)
+    val norms = new Array[Double](rows.length)
+    for (((id, _, _, v), i) <- rows.zipWithIndex) {
+      require(v != null && v.length == dim, s"vec_id $id in $dir: the embedding is not $dim floats")
+      require(i == 0 || rows(i - 1)._1 != id, s"vec_id $id in $dir is not unique")
+      System.arraycopy(v, 0, vectors, i * dim, dim)
+      norms(i) = math.sqrt(v.foldLeft(0.0)((acc, x) => acc + x.toDouble * x.toDouble))
+    }
+    builds.incrementAndGet()
+    new Resident(dir, rows.map(_._1), rows.map(_._2), rows.map(_._3), vectors, norms, dim)
   }
 
   private def buildIndex(spark: SparkSession, dir: String, path: String): Index = {
@@ -161,62 +286,76 @@ object SearchService {
   private def deleteQuietly(path: String): Unit =
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path))
 
-  /** Where this SparkContext keeps the index of `dir`, once requested. */
+  /** Where this SparkContext keeps the LSH index of `dir`, once requested. */
   private[graft] def indexPath(dir: String): Option[String] =
-    Option(indexes.get((SparkFiles.getRootDirectory(), dir))).map(_.path)
+    Option(indexes.get((SparkFiles.getRootDirectory(), dir, false))).flatMap(_.path)
 
-  /** Strategy-with-degrade (SURVEY O12, search.py:27-38): try the
-    * approximate path (LSH buckets over the index above — the
-    * $vectorSearch analog), fall back to the exact scan on failure.
-    * Both paths serve the same logical query and emit the SAME
-    * (vec_id, label) schema. Only NonFatal failures degrade (an OOM or
-    * interrupt must propagate, not silently switch plans), and each
-    * degrade is logged at WARN with the exception class and counted in
-    * [[degradedCount]].
+  /** This SparkContext's exact-tier copy of `dir`, once built; compared by
+    * identity only. */
+  private[graft] def residentCopy(dir: String): Option[AnyRef] =
+    Option(indexes.get((SparkFiles.getRootDirectory(), dir, true))).flatMap(_.built.toOption)
+
+  /** Strategy-with-degrade (SURVEY O12, search.py:27-38): serve the
+    * request from the tier its table's size selects (see the object's
+    * scaladoc), and fall back to the exact Spark scan on failure. All
+    * paths serve the same logical query and emit the SAME (vec_id, label)
+    * schema. Only NonFatal failures degrade (an OOM or interrupt must
+    * propagate, not silently switch plans), and each degrade is logged at
+    * WARN with the exception class and counted in [[degradedCount]].
     *
-    * The metadata pre-filter runs BEFORE/INSIDE the ANN probe, like the
-    * filter pushed inside $vectorSearch (ai_service.py:70): the LSH model
-    * is the same for every filter (bucket geometry is filter-independent),
-    * but `approxNearestNeighbors` probes only the FILTERED rows of the
-    * index, so a filtered search still returns k rows — post-filtering the
-    * ANN output would return fewer than k at scale.
+    * The metadata pre-filter runs BEFORE/INSIDE the top-k, like the filter
+    * pushed inside $vectorSearch (ai_service.py:70), so a filtered search
+    * still returns k rows — post-filtering would return fewer than k. The
+    * exact tier scores only the filtered rows. In the LSH tier the model is
+    * the same for every filter (bucket geometry is filter-independent), but
+    * `approxNearestNeighbors` probes only the FILTERED rows of the index.
     *
-    * The key vector is found with a predicate bound in a closure, not a
-    * `vec_id = <literal>` filter: a long literal is inlined into the
-    * generated code, so every unseen id would compile a new class.
+    * In the LSH tier the key vector is found with a predicate bound in a
+    * closure, not a `vec_id = <literal>` filter: a long literal is inlined
+    * into the generated code, so every unseen id would compile a new class.
     *
-    * The numCandidates cap cannot change the top-k under the total order
-    * (distCol, vec_id) unless exact distance ties straddle it. MLlib keeps
-    * the c = numCandidates(k) ≥ k probed rows of least distCol and breaks
-    * ties at the c-th distance arbitrarily, so every row strictly closer
-    * than the c-th distance is kept. If the k-th distance is below the
-    * c-th, every row at or below the k-th distance is kept, and the final
-    * (distCol, vec_id) sort picks the exact top-k of the probed rows. The
-    * only other case has the rows at ranks k..c all at one distance from
-    * the key: c − k + 1 exact ties, 50 at k = 1 and more at every larger
-    * k. */
+    * The numCandidates cap cannot change the LSH tier's top-k under the
+    * total order (distCol, vec_id) unless exact distance ties straddle it.
+    * MLlib keeps the c = numCandidates(k) ≥ k probed rows of least distCol
+    * and breaks ties at the c-th distance arbitrarily, so every row
+    * strictly closer than the c-th distance is kept. If the k-th distance
+    * is below the c-th, every row at or below the k-th distance is kept,
+    * and the final (distCol, vec_id) sort picks the exact top-k of the
+    * probed rows. The only other case has the rows at ranks k..c all at
+    * one distance from the key: c − k + 1 exact ties, 50 at k = 1 and more
+    * at every larger k. */
   def searchWithFallback(spark: SparkSession, dir: String, queryVecId: Long,
                          limit: Int = Config.DefaultLimit,
                          langs: Seq[String] = Seq("en", "fr")): DataFrame = {
     val k = math.max(1, math.min(limit, Config.MaxLimit))
     try {
-      val idx = index(spark, dir)
-      val rows = spark.read.schema(idx.schema).parquet(idx.path)
-      val isQuery = udf((id: Long) => id == queryVecId)
-      val key = rows.filter(isQuery(col("vec_id"))).select(col("features")).collect()
-        .headOption.getOrElse(throw new NoSuchElementException(s"vec_id $queryVecId is not in $dir"))
-        .getAs[Vector](0)
-      // P1 pre-filter lands in the index scan, BEFORE the bucket probe;
-      // numCandidates cap, then exact re-rank of the candidate pool
-      idx.model.approxNearestNeighbors(rows.filter(col("lang").isin(langs: _*)), key,
-          Config.numCandidates(k))
-        .orderBy(col("distCol"), col("vec_id"))
-        .limit(k)
-        .select(col("vec_id"), col("label"))
+      val sig = signature(spark, dir)
+      val exact = !forceLshTier.value && sig.embeddingBytes <= exactTierBudget
+      built(spark, dir, sig.text, exact) match {
+        case copy: Resident =>
+          val top = copy.topK(queryVecId, k, langs)
+          exactServed.incrementAndGet()
+          spark.createDataFrame(top.asJava, ResultSchema)
+        case idx: Index =>
+          val rows = spark.read.schema(idx.schema).parquet(idx.path)
+          val isQuery = udf((id: Long) => id == queryVecId)
+          val key = rows.filter(isQuery(col("vec_id"))).select(col("features")).collect()
+            .headOption.getOrElse(throw new NoSuchElementException(s"vec_id $queryVecId is not in $dir"))
+            .getAs[Vector](0)
+          // P1 pre-filter lands in the index scan, BEFORE the bucket probe;
+          // numCandidates cap, then exact re-rank of the candidate pool
+          val top = idx.model.approxNearestNeighbors(rows.filter(col("lang").isin(langs: _*)), key,
+              Config.numCandidates(k))
+            .orderBy(col("distCol"), col("vec_id"))
+            .limit(k)
+            .select(col("vec_id"), col("label"))
+          lshServed.incrementAndGet()
+          top
+      }
     } catch {
       case NonFatal(e) =>
         degraded.incrementAndGet()
-        log.warn(s"search for vec_id $queryVecId in $dir degraded from ANN to the exact scan: " +
+        log.warn(s"search for vec_id $queryVecId in $dir degraded to the exact Spark scan: " +
           s"${e.getClass.getName}: ${e.getMessage}")
         // degrade to the exact path (search.py:27-38), same output schema
         search(spark, dir, queryVecId, k, langs)

@@ -14,6 +14,13 @@ class ScaleSpec extends SparkSpec {
       when(col("id") % 10 =!= 0, lit(0L)).otherwise(col("id") % 97).as("k"),
       (col("id") % 1000).cast("double").as("v"))
 
+  /** Run `body` on a fresh temporary directory, deleted afterwards. */
+  private def withTempDir(prefix: String)(body: String => Unit): Unit = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
+    try body(dir.toString)
+    finally org.apache.commons.io.FileUtils.deleteQuietly(dir)
+  }
+
   test("salted aggregation equals direct groupBy on a skewed key") {
     val direct = skewed.groupBy("k")
       .agg(sum("v").as("sum_v"), count(lit(1)).as("cnt"))
@@ -114,26 +121,27 @@ class ScaleSpec extends SparkSpec {
       .selectExpr("(px * 65536) div (mx + 1) AS x",
         "(py * 65536) div (my + 1) AS y")
       .withColumn("z", graft.operators.LayoutOps.zCol)
-    val dir = java.nio.file.Files.createTempDirectory("zorder").toString
-    xy.repartitionByRange(16, col("z")).sortWithinPartitions(col("z"))
-      .write.mode("overwrite").parquet(s"$dir/zorder")
-    xy.repartition(16).write.mode("overwrite").parquet(s"$dir/naive")
-    def meanSpans(path: String): (Double, Double) = {
-      val r = spark.read.parquet(path)
-        .withColumn("f", input_file_name())
-        .groupBy(col("f"))
-        .agg((max(col("x")) - min(col("x"))).as("xs"),
-          (max(col("y")) - min(col("y"))).as("ys"))
-        .agg(avg(col("xs")), avg(col("ys"))).head()
-      (r.getDouble(0), r.getDouble(1))
+    withTempDir("zorder") { dir =>
+      xy.repartitionByRange(16, col("z")).sortWithinPartitions(col("z"))
+        .write.mode("overwrite").parquet(s"$dir/zorder")
+      xy.repartition(16).write.mode("overwrite").parquet(s"$dir/naive")
+      def meanSpans(path: String): (Double, Double) = {
+        val r = spark.read.parquet(path)
+          .withColumn("f", input_file_name())
+          .groupBy(col("f"))
+          .agg((max(col("x")) - min(col("x"))).as("xs"),
+            (max(col("y")) - min(col("y"))).as("ys"))
+          .agg(avg(col("xs")), avg(col("ys"))).head()
+        (r.getDouble(0), r.getDouble(1))
+      }
+      val (zx, zy) = meanSpans(s"$dir/zorder")
+      val (nx, ny) = meanSpans(s"$dir/naive")
+      // the naive (hash-scattered) layout spans ~the full domain per file;
+      // the Morton layout must narrow BOTH dims — this is exactly what
+      // parquet footer min/max pruning sees
+      assert(zx < nx / 2, s"x footprint: zorder $zx vs naive $nx")
+      assert(zy < ny / 2, s"y footprint: zorder $zy vs naive $ny")
     }
-    val (zx, zy) = meanSpans(s"$dir/zorder")
-    val (nx, ny) = meanSpans(s"$dir/naive")
-    // the naive (hash-scattered) layout spans ~the full domain per file;
-    // the Morton layout must narrow BOTH dims — this is exactly what
-    // parquet footer min/max pruning sees
-    assert(zx < nx / 2, s"x footprint: zorder $zx vs naive $nx")
-    assert(zy < ny / 2, s"y footprint: zorder $zy vs naive $ny")
   }
 
   test("runtime bloom filter prunes the fact scan from a selective dim filter") {
@@ -166,68 +174,70 @@ class ScaleSpec extends SparkSpec {
     // file's bin, one shuffle partition per bin (repartition by the bin
     // column is hash-constant per bin, so partitionBy splits emit
     // exactly one data file per bin dir), then a partitioned write.
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact").toString
-    val plan = operators.LayoutOps.compactionPlan(spark, sf)
-      .select(col("file_id"), col("bin"))
-    Tables.t(spark, sf, "events")
-      .withColumn("file_id", expr("unix_micros(ts) div 600000000"))
-      .join(broadcast(plan), Seq("file_id"))
-      .drop("file_id")
-      .repartition(col("bin"))
-      .write.partitionBy("bin").parquet(s"$dir/compacted")
-    val expected = QueryRegistry.byName("q152_compaction_binpack")
-      .fn(spark, sf).collect()
-      .map(r => r.getAs[Long]("bin") -> r.getAs[Long]("n_rows")).toMap
-    val binDirs = new java.io.File(s"$dir/compacted").listFiles()
-      .filter(_.isDirectory).filter(_.getName.startsWith("bin="))
-    assert(binDirs.map(_.getName.stripPrefix("bin=").toLong).toSet ==
-      expected.keySet, "materialized bins differ from the plan")
-    binDirs.foreach { b =>
-      val files = b.listFiles().filter(_.getName.endsWith(".parquet"))
-      assert(files.length == 1,
-        s"${b.getName}: compaction left ${files.length} files")
+    withTempDir("graft_compact") { dir =>
+      val plan = operators.LayoutOps.compactionPlan(spark, sf)
+        .select(col("file_id"), col("bin"))
+      Tables.t(spark, sf, "events")
+        .withColumn("file_id", expr("unix_micros(ts) div 600000000"))
+        .join(broadcast(plan), Seq("file_id"))
+        .drop("file_id")
+        .repartition(col("bin"))
+        .write.partitionBy("bin").parquet(s"$dir/compacted")
+      val expected = QueryRegistry.byName("q152_compaction_binpack")
+        .fn(spark, sf).collect()
+        .map(r => r.getAs[Long]("bin") -> r.getAs[Long]("n_rows")).toMap
+      val binDirs = new java.io.File(s"$dir/compacted").listFiles()
+        .filter(_.isDirectory).filter(_.getName.startsWith("bin="))
+      assert(binDirs.map(_.getName.stripPrefix("bin=").toLong).toSet ==
+        expected.keySet, "materialized bins differ from the plan")
+      binDirs.foreach { b =>
+        val files = b.listFiles().filter(_.getName.endsWith(".parquet"))
+        assert(files.length == 1,
+          s"${b.getName}: compaction left ${files.length} files")
+      }
+      val actual = spark.read.parquet(s"$dir/compacted").groupBy("bin").count()
+        .collect().map(r => r.getAs[Long]("bin") -> r.getAs[Long]("count")).toMap
+      assert(actual == expected, "per-bin row counts diverge from the plan")
     }
-    val actual = spark.read.parquet(s"$dir/compacted").groupBy("bin").count()
-      .collect().map(r => r.getAs[Long]("bin") -> r.getAs[Long]("count")).toMap
-    assert(actual == expected, "per-bin row counts diverge from the plan")
   }
 
   test("ScaleGen invariants: replica 0 byte-identical, cipher preserves " +
     "lengths/frequencies, replicas share no vocabulary") {
-    val out = java.nio.file.Files.createTempDirectory("scalegen-test").toString
-    ScaleGen.generate(spark, sf, out, reps = 3)
-    val src = Tables.t(spark, sf, "documents")
-    val gen = spark.read.parquet(s"$out/documents.parquet")
-    val n = src.count()
-    assert(gen.count() == 3 * n, "row count must be reps x source")
-    // replica 0 byte-identical to the source
-    assert(gen.filter(col("doc_id") < n).exceptAll(src).isEmpty)
-    // cipher preserves text lengths exactly (substitution, not insertion)
-    val lenMismatch = gen.filter(length(col("text")) =!= col("n_chars")).count()
-    assert(lenMismatch == 0, "alphabet rotation changed a text length")
-    // per-replica word-frequency PROFILE identical: the multiset of
-    // word-frequency counts is invariant under a vocabulary bijection
-    def freqProfile(repLo: Long, repHi: Long): Seq[(Long, Long)] = gen
-      .filter(col("doc_id") >= repLo && col("doc_id") < repHi)
-      .select(explode(split(col("text"), " ")).as("w"))
-      .groupBy(col("w")).count()
-      .groupBy(col("count")).count()
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
-    assert(freqProfile(0, n) == freqProfile(n, 2 * n),
-      "replica 1 lost the source Zipf profile")
-    // replicas share no vocabulary (the property that keeps content-keyed
-    // operators linear instead of quadratic in the replica count)
-    val shared = gen.filter(col("doc_id") < n)
-      .select(explode(split(col("text"), " ")).as("w")).distinct()
-      .intersect(gen.filter(col("doc_id") >= n && col("doc_id") < 2 * n)
-        .select(explode(split(col("text"), " ")).as("w")).distinct())
-      .count()
-    assert(shared == 0, s"replicas share $shared words")
-    // keys shift consistently: every replica joins within itself
-    val ords = spark.read.parquet(s"$out/orders.parquet")
-    val custs = spark.read.parquet(s"$out/customer.parquet")
-    val orphan = ords.join(custs, ords("o_custkey") === custs("c_custkey"), "left_anti").count()
-    assert(orphan == 0, s"$orphan orders reference customers outside their replica")
+    withTempDir("scalegen-test") { out =>
+      ScaleGen.generate(spark, sf, out, reps = 3)
+      val src = Tables.t(spark, sf, "documents")
+      val gen = spark.read.parquet(s"$out/documents.parquet")
+      val n = src.count()
+      assert(gen.count() == 3 * n, "row count must be reps x source")
+      // replica 0 byte-identical to the source
+      assert(gen.filter(col("doc_id") < n).exceptAll(src).isEmpty)
+      // cipher preserves text lengths exactly (substitution, not insertion)
+      val lenMismatch = gen.filter(length(col("text")) =!= col("n_chars")).count()
+      assert(lenMismatch == 0, "alphabet rotation changed a text length")
+      // per-replica word-frequency PROFILE identical: the multiset of
+      // word-frequency counts is invariant under a vocabulary bijection
+      def freqProfile(repLo: Long, repHi: Long): Seq[(Long, Long)] = gen
+        .filter(col("doc_id") >= repLo && col("doc_id") < repHi)
+        .select(explode(split(col("text"), " ")).as("w"))
+        .groupBy(col("w")).count()
+        .groupBy(col("count")).count()
+        .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
+      assert(freqProfile(0, n) == freqProfile(n, 2 * n),
+        "replica 1 lost the source Zipf profile")
+      // replicas share no vocabulary (the property that keeps content-keyed
+      // operators linear instead of quadratic in the replica count)
+      val shared = gen.filter(col("doc_id") < n)
+        .select(explode(split(col("text"), " ")).as("w")).distinct()
+        .intersect(gen.filter(col("doc_id") >= n && col("doc_id") < 2 * n)
+          .select(explode(split(col("text"), " ")).as("w")).distinct())
+        .count()
+      assert(shared == 0, s"replicas share $shared words")
+      // keys shift consistently: every replica joins within itself
+      val ords = spark.read.parquet(s"$out/orders.parquet")
+      val custs = spark.read.parquet(s"$out/customer.parquet")
+      val orphan = ords.join(custs, ords("o_custkey") === custs("c_custkey"), "left_anti").count()
+      assert(orphan == 0, s"$orphan orders reference customers outside their replica")
+    }
   }
 
   test("ScaleGen perm mode: bijective substitution, no duplicate classes, " +
@@ -240,44 +250,45 @@ class ScaleSpec extends SparkSpec {
     // CLASSES — distinct texts and distinct embeddings are exactly reps x
     // the source's, which is what keeps content-keyed operators measuring
     // the plan instead of generator duplicates.
-    val out = java.nio.file.Files.createTempDirectory("scalegen-perm").toString
-    ScaleGen.generate(spark, sf, out, reps = 3, perm = true)
-    val src = Tables.t(spark, sf, "documents")
-    val gen = spark.read.parquet(s"$out/documents.parquet")
-    val n = src.count()
-    assert(gen.count() == 3 * n, "row count must be reps x source")
-    assert(gen.filter(col("doc_id") < n).exceptAll(src).isEmpty,
-      "replica 0 must stay byte-identical")
-    // substitution (a bijection) preserves every text length
-    assert(gen.filter(length(col("text")) =!= col("n_chars")).count() == 0,
-      "permutation changed a text length")
-    // bijection invariance: replica word-frequency profile == source's
-    def freqProfile(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] = df
-      .select(explode(split(col("text"), " ")).as("w"))
-      .groupBy(col("w")).count()
-      .groupBy(col("count")).count()
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
-    assert(freqProfile(gen.filter(col("doc_id") >= n && col("doc_id") < 2 * n))
-      == freqProfile(src), "replica 1 lost the source Zipf profile")
-    // no duplicate content classes across replicas
-    val srcTexts = src.select(col("text")).distinct().count()
-    assert(gen.select(col("text")).distinct().count() == 3 * srcTexts,
-      "perm replicas must not collide on text content")
-    val srcVecs = Tables.t(spark, sf, "embeddings")
-    val genVecs = spark.read.parquet(s"$out/embeddings.parquet")
-    val srcDistinct = srcVecs.select(col("embedding")).distinct().count()
-    assert(genVecs.select(col("embedding")).distinct().count() == 3 * srcDistinct,
-      "perm replicas must not collide on embeddings")
-    // the sign flip is orthogonal: norms preserved exactly per replica
-    val vecStride = srcVecs.agg(max(col("vec_id"))).head().getLong(0) + 1
-    val normDelta = genVecs
-      .selectExpr("aggregate(embedding, 0D, (a, x) -> a + x * x) AS n2",
-        "vec_id")
-      .join(srcVecs.selectExpr(
-        "aggregate(embedding, 0D, (a, x) -> a + x * x) AS n2_src",
-        "vec_id AS src_id"),
-        pmod(col("vec_id"), lit(vecStride)) === col("src_id"))
-      .filter(abs(col("n2") - col("n2_src")) > 1e-3).count()
-    assert(normDelta == 0, "sign flip must preserve embedding norms")
+    withTempDir("scalegen-perm") { out =>
+      ScaleGen.generate(spark, sf, out, reps = 3, perm = true)
+      val src = Tables.t(spark, sf, "documents")
+      val gen = spark.read.parquet(s"$out/documents.parquet")
+      val n = src.count()
+      assert(gen.count() == 3 * n, "row count must be reps x source")
+      assert(gen.filter(col("doc_id") < n).exceptAll(src).isEmpty,
+        "replica 0 must stay byte-identical")
+      // substitution (a bijection) preserves every text length
+      assert(gen.filter(length(col("text")) =!= col("n_chars")).count() == 0,
+        "permutation changed a text length")
+      // bijection invariance: replica word-frequency profile == source's
+      def freqProfile(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] = df
+        .select(explode(split(col("text"), " ")).as("w"))
+        .groupBy(col("w")).count()
+        .groupBy(col("count")).count()
+        .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
+      assert(freqProfile(gen.filter(col("doc_id") >= n && col("doc_id") < 2 * n))
+        == freqProfile(src), "replica 1 lost the source Zipf profile")
+      // no duplicate content classes across replicas
+      val srcTexts = src.select(col("text")).distinct().count()
+      assert(gen.select(col("text")).distinct().count() == 3 * srcTexts,
+        "perm replicas must not collide on text content")
+      val srcVecs = Tables.t(spark, sf, "embeddings")
+      val genVecs = spark.read.parquet(s"$out/embeddings.parquet")
+      val srcDistinct = srcVecs.select(col("embedding")).distinct().count()
+      assert(genVecs.select(col("embedding")).distinct().count() == 3 * srcDistinct,
+        "perm replicas must not collide on embeddings")
+      // the sign flip is orthogonal: norms preserved exactly per replica
+      val vecStride = srcVecs.agg(max(col("vec_id"))).head().getLong(0) + 1
+      val normDelta = genVecs
+        .selectExpr("aggregate(embedding, 0D, (a, x) -> a + x * x) AS n2",
+          "vec_id")
+        .join(srcVecs.selectExpr(
+          "aggregate(embedding, 0D, (a, x) -> a + x * x) AS n2_src",
+          "vec_id AS src_id"),
+          pmod(col("vec_id"), lit(vecStride)) === col("src_id"))
+        .filter(abs(col("n2") - col("n2_src")) > 1e-3).count()
+      assert(normDelta == 0, "sign flip must preserve embedding norms")
+    }
   }
 }
