@@ -189,9 +189,11 @@ object QueryRegistry {
     // lineitem at sf0.1/1/10); ~4M edge rows per task ≈ 60-130 MB of
     // (long,long) shuffle input lands the measured optimum at each
     // decade (8 / 8 / 30) and keeps growing linearly past it. AQE stays
-    // ON (runtime-variable plan: the conditional broadcast flips to
-    // shuffle-keyed past 100k nodes) — the derived width only caps the
-    // per-superstep task count AQE's coalescing cannot recover on the
+    // ON (runtime-variable plan). Under the broadcast gate (below 100k
+    // nodes) the supersteps are dense jobs with no shuffle, so the width
+    // and AQE shape only the lanes build (the orders ⋈ lineitem distinct);
+    // past the gate they also cap the per-superstep task count of the
+    // shuffle-keyed joins, which AQE's coalescing cannot recover on the
     // map side.
     "q154_pagerank_customer" -> { (s, d) =>
       val edges = 2L * Tables.cachedRowCount(s, d, "lineitem")

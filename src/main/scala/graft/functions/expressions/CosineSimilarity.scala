@@ -93,9 +93,9 @@ case class DotProduct(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Native integer squared-L2 over array<long>, same shape (used inside
-  * q128's per-centroid transform lambda, where the fused eval replaces an
-  * interpreted zip_with+aggregate tree). */
+/** Native integer squared-L2 over array<long>, same shape (q128's final
+  * assignment calls it once per centroid and q132 once per row, where the
+  * fused eval replaces an interpreted zip_with+aggregate tree). */
 case class SqDistL2(left: Expression, right: Expression)
     extends BinaryExpression {
 

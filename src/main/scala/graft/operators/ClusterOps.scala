@@ -2,7 +2,8 @@ package graft.operators
 
 import graft.GraftQuery
 import graft.Tables._
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 
 /** Corpus clustering — the capability the reference's missing
@@ -29,64 +30,144 @@ object ClusterOps {
   private val K = 8
   private val Iters = 2
 
+  /** An embedding quantized to integer micro-units. */
+  private def micro(embedding: Column): Column =
+    transform(embedding, x => round(x.cast("double") * 1e6).cast("long"))
+
+  /** (`vec_id`, `ev`): each embedding quantized to integer micro-units. */
+  private[graft] def quantized(embeddings: DataFrame): DataFrame =
+    embeddings.select(col("vec_id"), micro(col("embedding")).as("ev"))
+
+  /** One partition's quantized vectors: ids, and the vectors laid end to
+    * end (vector j spans `flat(off(j)) until flat(off(j + 1))`). A null
+    * vector is left out — it is assigned no cluster and adds to no sum. */
+  private final case class VecBlock(id: Array[Long], off: Array[Int], flat: Array[Long])
+
+  private def vecBlock(rows: Iterator[InternalRow]): VecBlock = {
+    val id = Array.newBuilder[Long]
+    val off = Array.newBuilder[Int]
+    val flat = Array.newBuilder[Long]
+    var end = 0
+    off += 0
+    rows.foreach { row =>
+      if (!row.isNullAt(1)) {
+        val v = row.getArray(1).toLongArray()
+        id += row.getLong(0)
+        flat ++= v
+        end += v.length
+        off += end
+      }
+    }
+    VecBlock(id.result(), off.result(), flat.result())
+  }
+
+  /** Index of the nearest centroid to `v(from until to)`: the integer
+    * squared-L2 of `VectorKernels.sqDistL2` (over the shorter length),
+    * ties to the lowest cluster id. */
+  private def nearest(v: Array[Long], from: Int, to: Int, cents: Array[Array[Long]]): Int = {
+    var best = 0
+    var bestD = Long.MaxValue
+    var c = 0
+    while (c < cents.length) {
+      val cv = cents(c)
+      val n = math.min(to - from, cv.length)
+      var acc = 0L
+      var i = 0
+      while (i < n) {
+        val d = v(from + i) - cv(i)
+        acc += d * d
+        i += 1
+      }
+      if (acc < bestD) { best = c; bestD = acc }
+      c += 1
+    }
+    best
+  }
+
+  /** Integer Lloyd over `ev` (`vec_id`, `ev`): seeds are the vectors with
+    * `vec_id` < k in id order, then `Iters` update rounds. The vectors are
+    * read once into cached primitive blocks (one job, which also returns
+    * the seeds), and each round is one [[DenseSuperstep.sum]] job that
+    * sums every cluster's members per position, with a member count per
+    * position. The driver then takes each mean truncated toward zero,
+    * `(s - s % n) / n`; an empty cluster keeps its previous centroid.
+    * Returns the k learned centroids. */
+  private[graft] def lloydCentroids(ev: DataFrame): Array[Array[Long]] =
+    DenseSuperstep.withBlocks(ev.queryExecution.toRdd)(vecBlock) { blocks =>
+      val summaries = blocks.map { b =>
+        val seeds = b.id.indices.filter(j => b.id(j) < K)
+          .map(j => (b.id(j), b.flat.slice(b.off(j), b.off(j + 1))))
+        val dim = b.id.indices.map(j => b.off(j + 1) - b.off(j)).foldLeft(0)(math.max)
+        (dim, seeds)
+      }.collect()
+      val dim = summaries.map(_._1).foldLeft(0)(math.max)
+      var cents = summaries.flatMap(_._2).sortBy(_._1).map(_._2)
+      require(cents.length == K,
+        s"k-means needs exactly $K seed vectors (vec_id < $K), found ${cents.length}")
+      for (_ <- 1 to Iters) {
+        // [0, K*dim): per (cluster, position) sums; [K*dim, 2*K*dim): counts
+        val acc = DenseSuperstep.sum(blocks, cents, 2 * K * dim) { (b, cs, acc) =>
+          var j = 0
+          while (j < b.id.length) {
+            val from = b.off(j)
+            val base = nearest(b.flat, from, b.off(j + 1), cs) * dim
+            var i = from
+            while (i < b.off(j + 1)) {
+              val slot = base + i - from
+              acc(slot) = Math.addExact(acc(slot), b.flat(i))
+              acc(K * dim + slot) += 1
+              i += 1
+            }
+            j += 1
+          }
+        }
+        cents = Array.tabulate(K) { c =>
+          // positions present are a prefix: every member spans 0 until its length
+          val len = (0 until dim).takeWhile(p => acc(K * dim + c * dim + p) > 0).length
+          if (len == 0) cents(c)
+          else Array.tabulate(len) { p =>
+            val sum = acc(c * dim + p)
+            val n = acc(K * dim + c * dim + p)
+            (sum - sum % n) / n
+          }
+        }
+      }
+      cents
+    }
+
+  /** Each vector's nearest centroid (`cluster`, ties to the lowest id) and
+    * its integer squared-L2 distance (`dist`), as a lazy map over `ev`. */
+  private[graft] def assign(ev: DataFrame, cents: Array[Array[Long]]): DataFrame = {
+    import graft.functions.expressions.CosineSimilarity.sq_dist_l2
+    ev.withColumn("dists",
+        array(cents.toSeq.map(c => sq_dist_l2(col("ev"), lit(c))): _*))
+      // array_position: FIRST index of the min → ties break to the
+      // lowest cluster id (the oracle orders by (dist, cluster))
+      .select(col("vec_id"),
+        (expr("array_position(dists, array_min(dists))") - 1).cast("long").as("cluster"),
+        array_min(col("dists")).as("dist"))
+  }
+
   /** q128 — k-means corpus clustering (integer Lloyd, k=8, 2 update
     * rounds + final assignment). Output: each vector's final cluster and
     * its integer squared-L2 distance to the learned centroid.
     *
-    * Scale shape (the part that matters at 100 TB): the ASSIGNMENT pass is
-    * shuffle-free — the k×dim centroid table is one broadcast row and the
-    * argmin is a per-row map over the corpus scan; the UPDATE pass is one
-    * hash aggregation keyed by (cluster, dim) — k·dim = 512 reduce keys
-    * regardless of corpus size, partial-aggregated map-side. Lloyd at
-    * cluster scale IS exactly these two primitives per round; nothing
-    * grows with the data but the scans. Empty clusters keep their previous
-    * centroid (deterministic, engine-portable). */
+    * Scale shape: the state is k × dim = 8 × 64 longs, so it always fits
+    * the driver. The quantized corpus is read once into cached primitive
+    * blocks; each update round is ONE shuffle-free job that assigns every
+    * vector against the broadcast centroids and sums cluster members into
+    * a dense k·dim array ([[lloydCentroids]]). The final assignment is a
+    * per-row map over the corpus scan against the learned centroids as
+    * literals. Nothing grows with the data but the scans. Empty clusters
+    * keep their previous centroid (deterministic, engine-portable). */
   private val q128 = GraftQuery(
     "q128_kmeans_lloyd_assign",
     (s, d) => {
-      val ev = t(s, d, "embeddings").select(col("vec_id"),
-        transform(col("embedding"),
-          x => round(x.cast("double") * 1e6).cast("long")).as("ev"))
-
-      // seed centroids: quantized vectors 0..k-1, one row array<array<long>>
-      var cents: DataFrame = ev.filter(col("vec_id") < K)
-        .agg(array_sort(collect_list(struct(col("vec_id"), col("ev")))).as("p"))
-        .select(transform(col("p"), p => p.getField("ev")).as("cents"))
-
-      // fused integer kernel: one eval per (row × centroid) instead of an
-      // interpreted zip_with+aggregate tree (same exact-arithmetic result)
-      import graft.functions.expressions.CosineSimilarity.sq_dist_l2
-      def assign(c: DataFrame): DataFrame = ev.crossJoin(broadcast(c))
-        .withColumn("dists",
-          transform(col("cents"), cv => sq_dist_l2(col("ev"), cv)))
-        // array_position: FIRST index of the min → ties break to the
-        // lowest cluster id (the oracle orders by (dist, cluster))
-        .withColumn("cluster",
-          (expr("array_position(dists, array_min(dists))") - 1).cast("long"))
-        .withColumn("dist", array_min(col("dists")))
-        .select(col("vec_id"), col("ev"), col("cluster"), col("dist"))
-
-      for (_ <- 1 to Iters) {
-        val a = assign(cents)
-        // exact integer mean truncated toward zero: (s - s % n) / n is an
-        // exactly-representable integer on both engines
-        val sums = a.select(col("cluster"), posexplode(col("ev")).as(Seq("pos", "e")))
-          .groupBy(col("cluster"), col("pos"))
-          .agg(sum(col("e")).as("se"), count(lit(1)).as("n"))
-          .select(col("cluster"), col("pos"),
-            ((col("se") - col("se") % col("n")) / col("n")).cast("long").as("m"))
-        val newMap = sums.groupBy(col("cluster"))
-          .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
-          .select(col("cluster"), transform(col("pm"), p => p.getField("m")).as("c"))
-          .agg(map_from_entries(collect_list(struct(col("cluster"), col("c")))).as("m"))
-        cents = newMap.crossJoin(cents)
-          .select(transform(sequence(lit(0), lit(K - 1)), i =>
-            coalesce(element_at(col("m"), i.cast("long")),
-              element_at(col("cents"), i + 1))).as("cents"))
-      }
-
-      assign(cents)
-        .select(col("vec_id"), col("cluster"), col("dist"))
+      val ev = quantized(t(s, d, "embeddings"))
+      val out = assign(ev, lloydCentroids(ev))
+      // a corpus read as one partition sorts in place: no sampling job
+      // and no range exchange (toRdd is the setup's, already planned)
+      (if (ev.queryExecution.toRdd.getNumPartitions == 1) out.coalesce(1) else out)
         .orderBy(col("vec_id"))
     },
     Some("""WITH ev AS (SELECT vec_id,
@@ -164,9 +245,7 @@ object ClusterOps {
       import graft.functions.VectorFunctions.cosine
       import graft.functions.expressions.CosineSimilarity.sq_dist_l2
       val ev = t(s, d, "embeddings").select(col("vec_id"), col("label"),
-        col("embedding"),
-        transform(col("embedding"),
-          x => round(x.cast("double") * 1e6).cast("long")).as("ev"))
+        col("embedding"), micro(col("embedding")).as("ev"))
       val cent = ev
         .select(col("label"), posexplode(col("ev")).as(Seq("pos", "e")))
         .groupBy(col("label"), col("pos"))

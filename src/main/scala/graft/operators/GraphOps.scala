@@ -3,6 +3,7 @@ package graft.operators
 import graft.GraftQuery
 import graft.Tables._
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 
 /** Graph ranking over engine tables — the link-authority quality signal a
@@ -17,12 +18,17 @@ import org.apache.spark.sql.functions._
   * `(17*s) div 20`, teleport base `150000 div N`. Dangling-node mass is
   * dropped (the standard simplification; identical on both engines).
   *
-  * Scale shape: one superstep = edges ⋈ ranks (shuffle keyed by src, or a
-  * broadcast probe when the node table is provably small) → one hash
-  * aggregation keyed by dst. Ranks stay node-sized; only the edge scan is
-  * fact-scale. This is exactly q121's label-propagation physique with a
-  * different per-round combine — nothing grows with iteration count but
-  * plan depth, which the fixed round count bounds.
+  * Scale shape: while the node spine fits under `BroadcastRowLimit`, each
+  * superstep is ONE Spark job over cached primitive edge arrays
+  * ([[DenseSuperstep]]): every partition sums the per-edge contributions
+  * `r div od` into a dense node-indexed `long` array against the broadcast
+  * contribution vector, the partial arrays are summed exactly on the
+  * driver, and the driver computes the next ranks. Nothing is shuffled
+  * after the edge list is read once. Past the gate, one superstep is
+  * edges ⋈ ranks ⋈ out-degrees (shuffle keyed by src) → one hash
+  * aggregation keyed by dst — q121's label-propagation physique with a
+  * different per-round combine. Both paths give the same integer ranks:
+  * long addition is associative.
   */
 object GraphOps {
 
@@ -32,32 +38,43 @@ object GraphOps {
     * `broadcast()` hint OVERRIDES Spark's size check, so a hard-pinned
     * hint — correct for the 25-node nation graph — would ship a
     * billion-node rank table to every executor (or OOM the driver
-    * collecting it) on a real graph. Every per-superstep hint below is
-    * therefore CONDITIONAL on the measured row count of the table being
-    * shipped: under the limit it broadcasts (node-sized probe, zero
-    * fact shuffle), over it the superstep joins run shuffle-keyed — the
-    * q81/q121 label-propagation physique, which already runs
-    * un-broadcast over ~50k doc nodes. 100k (long,long) rows is a few
-    * MB: comfortably executor-resident, far under the broadcast hard
+    * collecting it) on a real graph. Every node-sized broadcast below —
+    * q137/q148's conditional hints and PageRank's dense superstep state —
+    * is therefore CONDITIONAL on the measured row count of the table being
+    * shipped: under the limit it broadcasts, over it the joins run
+    * shuffle-keyed — the q81/q121 label-propagation physique, which
+    * already runs un-broadcast over ~50k doc nodes. 100k longs is under
+    * 1 MB: comfortably executor-resident, far under the broadcast hard
     * cap, re-shipped once per superstep. Counting the table costs one
     * bounded job against the localCheckpoint'd edge list / dim table —
-    * the same price q131's checkpoint already pays, and what a catalog's
-    * table statistics would answer for free on a real deployment. */
+    * what a catalog's table statistics would answer for free on a real
+    * deployment. */
   private val DefaultBroadcastRowLimit = 100000L
 
-  /** Test hook: force the shuffle-keyed superstep path on tiny graphs so
-    * the broadcast/shuffle parity pin (QueriesSpec) can exercise both
-    * physical strategies on the same data. A DynamicVariable (ADVICE r8:
-    * the previous plain mutable global could leak the forced path into
+  /** Test hook: force the shuffle-keyed path on tiny graphs so the
+    * dense/shuffle parity pins (QueriesSpec, IterativeKernelsSpec) can
+    * exercise both strategies on the same data. A DynamicVariable (ADVICE
+    * r8: the previous plain mutable global could leak the forced path into
     * plans built concurrently by a parallel suite) — the limit is only
-    * read at PLAN BUILD time on the calling thread, so `withValue`
-    * scopes it to exactly the test's own construction. Production code
-    * never sets it. */
+    * read at PLAN BUILD time on the calling thread, so `withValue` scopes
+    * it to exactly the test's own construction. Production code never
+    * sets it. */
   private[graft] val broadcastRowLimitOverride =
     new scala.util.DynamicVariable[Option[Long]](None)
 
   private def BroadcastRowLimit: Long =
     broadcastRowLimitOverride.value.getOrElse(DefaultBroadcastRowLimit)
+
+  private val denseSteps = new java.util.concurrent.atomic.AtomicLong
+  private val shuffleSteps = new java.util.concurrent.atomic.AtomicLong
+
+  /** How many PageRank supersteps ran as one dense job, since the JVM
+    * started. */
+  def denseSuperstepCount: Long = denseSteps.get
+
+  /** How many PageRank supersteps were built as the shuffle-keyed join
+    * plan, since the JVM started. */
+  def shuffleSuperstepCount: Long = shuffleSteps.get
 
   private def bcIf(small: Boolean)(df: DataFrame): DataFrame =
     if (small) broadcast(df) else df
@@ -115,53 +132,45 @@ object GraphOps {
   private def tradeEdges(s: SparkSession, d: String): DataFrame =
     tradeEdgesPlan(s, d).localCheckpoint()
 
-  /** Fixed-superstep exact-integer PageRank kernel over an arbitrary
-    * directed edge list (`src`,`dst`) and node spine (`node`); returns
-    * (`node`,`r`) with r in micro-units. `small` gates the per-superstep
-    * broadcast of the node-sized tables (ranks, out-degrees, dst sums) —
-    * pass the measured node count's verdict, never a hard-pinned hint. */
   /** Out-degrees (`src`, `od`) of an edge list — built ONCE per query
-    * and threaded into [[pageRankRanks]] (q131 also joins it into its
-    * output; passing it avoids a second identical aggregation). */
-  private def outDegrees(edges: DataFrame): DataFrame =
+    * and threaded into [[pageRankRanksChecked]] (q131 also joins it into
+    * its output; passing it avoids a second identical aggregation). */
+  private[graft] def outDegrees(edges: DataFrame): DataFrame =
     edges.groupBy(col("src")).agg(count(lit(1)).cast("long").as("od"))
 
-  private def pageRankRanks(nodes: DataFrame, edges: DataFrame,
-                            outdeg: DataFrame, iters: Int, small: Boolean,
-                            mass: Long = 1000000L): DataFrame =
-    pageRankRanksChecked(nodes, edges, outdeg, iters, small, mass)._1
-
-  /** As [[pageRankRanks]], but ALSO returns a 1-row `mass_ok` frame:
-    * the AND over supersteps of [[InvariantChecks.pageRankMassCheck]]'s
-    * conservation identity (edge-aggregated inflow == node-computed
-    * outflow). The check frames are built lazily alongside the chain;
-    * a caller that only takes `_1` pays nothing for them. q131 carries
-    * `mass_ok` as a result column (oracle pins it TRUE), which keeps the
-    * superstep aggregation verified past the scale where the unrolled
-    * DuckDB twin DNFs (VERDICT r8 #1). */
-  private def pageRankRanksChecked(nodes: DataFrame, edges: DataFrame,
-                                   outdeg: DataFrame, iters: Int,
-                                   small: Boolean,
-                                   mass: Long = 1000000L): (DataFrame, DataFrame) = {
+  /** Fixed-superstep exact-integer PageRank over an arbitrary directed
+    * edge list (`src`,`dst`) and node spine (`node`), as the shuffle-keyed
+    * join plan for graphs past the broadcast gate. Returns (`node`,`r`)
+    * with r in micro-units, and a 1-row `mass_ok` frame: the AND over
+    * supersteps of [[InvariantChecks.pageRankMassCheck]]'s conservation
+    * identity (edge-aggregated inflow == node-computed outflow). The
+    * check frames are built lazily alongside the chain; a caller that only
+    * takes `_1` pays nothing for them. q131 carries `mass_ok` as a result
+    * column (oracle pins it TRUE), which keeps the superstep aggregation
+    * verified past the scale where the unrolled DuckDB twin DNFs
+    * (VERDICT r8 #1). */
+  private[graft] def pageRankRanksChecked(nodes: DataFrame, edges: DataFrame,
+                                          outdeg: DataFrame, iters: Int,
+                                          mass: Long): (DataFrame, DataFrame) = {
     // total rank mass in integer units; sized to the graph so per-node
     // ranks keep resolution (1e6 for the 25-node nation graph, 1e12 for
     // the ~165k-node customer graph — mass div nn must stay well above 1).
     // Overflow headroom: every intermediate is <= 17 * mass < 2^63 / 5e5.
     val tele = mass * 3 / 20 // the 0.15 teleport share, exact (mass % 20 == 0)
-    val bc = bcIf(small) _
     val st = nodes.agg(count(lit(1)).cast("long").as("nn"))
     var ranks = nodes.crossJoin(broadcast(st))
       .select(col("node"), expr(s"$mass div nn").as("r"))
     var checks = List.empty[DataFrame]
     for (i <- 1 to iters) {
+      shuffleSteps.incrementAndGet()
       val sums = edges
-        .join(bc(ranks.withColumnRenamed("node", "src")), Seq("src"))
-        .join(bc(outdeg), Seq("src"))
+        .join(ranks.withColumnRenamed("node", "src"), Seq("src"))
+        .join(outdeg, Seq("src"))
         .select(col("dst").as("node"), expr("r div od").as("c"))
         .groupBy(col("node")).agg(sum(col("c")).as("s"))
       checks ::= InvariantChecks.pageRankMassCheck(ranks, outdeg, sums)
         .select(col("ok").as(s"ok$i"))
-      ranks = nodes.join(bc(sums), Seq("node"), "left")
+      ranks = nodes.join(sums, Seq("node"), "left")
         .crossJoin(broadcast(st))
         .select(col("node"),
           expr(s"$tele div nn + (17 * coalesce(s, 0L)) div 20").as("r"))
@@ -171,26 +180,114 @@ object GraphOps {
     (ranks, massOk)
   }
 
+  /** Dense PageRank result: the spine's node ids ascending, with each
+    * node's final rank and out-degree, and the conservation verdict over
+    * every superstep. */
+  private[graft] final case class DenseRanks(node: Array[Long], r: Array[Long],
+                                             od: Array[Long], massOk: Boolean)
+
+  /** One partition's edges as dense spine indices. An edge whose `src` is
+    * outside the spine is dropped; one whose `dst` is outside it keeps the
+    * index `ids.length`, the slot of contributions that reach no node. */
+  private final case class EdgeBlock(src: Array[Int], dst: Array[Int])
+
+  private def edgeBlock(rows: Iterator[InternalRow], ids: Array[Long]): EdgeBlock = {
+    val src = Array.newBuilder[Int]
+    val dst = Array.newBuilder[Int]
+    rows.foreach { row =>
+      val s = if (row.isNullAt(0)) -1 else java.util.Arrays.binarySearch(ids, row.getLong(0))
+      if (s >= 0) {
+        val d = if (row.isNullAt(1)) -1 else java.util.Arrays.binarySearch(ids, row.getLong(1))
+        src += s
+        dst += (if (d >= 0) d else ids.length)
+      }
+    }
+    EdgeBlock(src.result(), dst.result())
+  }
+
+  /** Test hook: sees, and may alter, each dense superstep's summed inflow
+    * before the driver checks and applies it. Production code never sets
+    * it. */
+  private[graft] val inflowTap = new scala.util.DynamicVariable[Array[Long] => Unit](_ => ())
+
+  /** The same PageRank as [[pageRankRanksChecked]], for a spine under the
+    * broadcast gate: the spine is collected and indexed once, the edges
+    * are read once into cached [[EdgeBlock]]s (one job, which also counts
+    * out-degrees), and each superstep is one [[DenseSuperstep.sum]] job.
+    * The join plan's semantics carry over exactly: duplicate edges count
+    * each time, dangling mass is dropped, and every division truncates
+    * toward zero. `mass_ok` is the identity inflow == Σ (r − r mod od),
+    * with contributions to out-of-spine nodes counted in the inflow. The
+    * spine must hold distinct, non-null ids, as a key column does. */
+  private[graft] def pageRankDense(nodes: DataFrame, edges: DataFrame,
+                                   iters: Int, mass: Long): DenseRanks = {
+    val spine = nodes.select(col("node").cast("long")).collect()
+    require(!spine.exists(_.isNullAt(0)), "PageRank node spine holds a null id")
+    val ids = spine.map(_.getLong(0)).sorted
+    require((1 until ids.length).forall(i => ids(i - 1) != ids(i)),
+      "PageRank node spine holds a duplicate id")
+    val n = ids.length
+    val tele = mass * 3 / 20
+    val rows = edges.select(col("src").cast("long"), col("dst").cast("long"))
+      .queryExecution.toRdd
+    DenseSuperstep.withBroadcast(nodes.sparkSession.sparkContext, ids) { bcIds =>
+      DenseSuperstep.withBlocks(rows)(edgeBlock(_, bcIds.value)) { blocks =>
+        val od = DenseSuperstep.sum(blocks, (), n) { (b, _, acc) =>
+          b.src.foreach(i => acc(i) += 1)
+        }
+        var r = Array.fill(n)(mass / n)
+        var massOk = true
+        for (_ <- 1 to iters) {
+          denseSteps.incrementAndGet()
+          val c = Array.tabulate(n)(i => if (od(i) > 0) r(i) / od(i) else 0L)
+          val inflow = DenseSuperstep.sum(blocks, c, n + 1) { (b, c, acc) =>
+            var e = 0
+            while (e < b.src.length) {
+              val d = b.dst(e)
+              acc(d) = Math.addExact(acc(d), c(b.src(e)))
+              e += 1
+            }
+          }
+          inflowTap.value(inflow)
+          val outflow = (0 until n).foldLeft(0L) { (a, i) =>
+            if (od(i) > 0) Math.addExact(a, r(i) - r(i) % od(i)) else a
+          }
+          massOk &&= inflow.foldLeft(0L)(Math.addExact) == outflow
+          r = Array.tabulate(n)(i =>
+            Math.addExact(tele / n, Math.multiplyExact(17L, inflow(i)) / 20))
+        }
+        DenseRanks(ids, r, od, massOk)
+      }
+    }
+  }
+
   private val q131 = GraftQuery(
     "q131_pagerank_trade_graph",
     (s, d) => {
-      val edges = tradeEdges(s, d)
+      import s.implicits._
       val nodes = t(s, d, "nation").select(col("n_nationkey").as("node"))
       val small = cachedCount(s, d, "nation_rows", Seq("nation")) {
         t(s, d, "nation").count()
       } <= BroadcastRowLimit
-      val bc = bcIf(small) _
-      val outdeg = outDegrees(edges)
-      val (ranks, massOk) =
-        pageRankRanksChecked(nodes, edges, outdeg, Iters, small)
+      // (node, r, od, mass_ok) for every spine node
+      val ranks = if (small) {
+        val pr = pageRankDense(nodes, tradeEdgesPlan(s, d), Iters, 1000000L)
+        pr.node.indices.map(i => (pr.node(i), pr.r(i), pr.od(i), pr.massOk))
+          .toDF("node", "r", "od", "mass_ok")
+      } else {
+        val edges = tradeEdges(s, d)
+        val outdeg = outDegrees(edges)
+        val (r, massOk) =
+          pageRankRanksChecked(nodes, edges, outdeg, Iters, 1000000L)
+        r.join(outdeg.withColumnRenamed("src", "node"), Seq("node"), "left")
+          .crossJoin(broadcast(massOk))
+          .select(col("node"), col("r"), coalesce(col("od"), lit(0L)).as("od"),
+            col("mass_ok"))
+      }
       ranks
         .join(t(s, d, "nation"), col("node") === col("n_nationkey"))
-        .join(bc(outdeg.withColumnRenamed("src", "node")), Seq("node"), "left")
-        .crossJoin(broadcast(massOk))
-        .select(col("node").as("nation_key"), col("n_name"),
-          col("r").as("pr_micro"),
-          coalesce(col("od"), lit(0L)).as("out_deg"),
-          col("mass_ok"))
+        .select(col("n_nationkey").as("nation_key"), col("n_name"),
+          col("r").as("pr_micro"), col("od").as("out_deg"), col("mass_ok"))
         .orderBy(col("pr_micro").desc, col("nation_key"))
     },
     Some("""WITH edges AS (
@@ -408,48 +505,29 @@ object GraphOps {
   /** q154 — PageRank at CUSTOMER granularity: the identical integer
     * PageRank kernel as q131 run over the customer↔supplier co-trading
     * graph (~165k nodes at sf1, node ids: customers raw, suppliers in
-    * the negative range), where the node count CROSSES BroadcastRowLimit at
-    * sf1 — so ScaleBench's big side exercises the SHUFFLE-KEYED
-    * superstep while the small sfs keep the broadcast plan, and both
-    * produce bit-identical ranks (the conditional hint changes the
-    * physical join strategy, never the dataflow). 2 supersteps (the
-    * DuckDB twin unrolls them); output is the top-100 nodes by rank —
-    * TakeOrderedAndProject, so the output stays bounded while the
-    * superstep compute scales with the graph. */
+    * the negative range). 2 supersteps (the DuckDB twin unrolls them);
+    * output is the top-100 nodes by rank.
+    *
+    * Scale shape: under BroadcastRowLimit (every sf below 1) the lanes
+    * join runs once into cached dense edge arrays and each superstep is
+    * one shuffle-free job ([[pageRankDense]]); the top-100 is taken on the
+    * driver and returned as a local frame. The node count CROSSES the
+    * limit at sf1, so ScaleBench's big side runs the SHUFFLE-KEYED join
+    * superstep over a checkpointed lane list and a TakeOrderedAndProject
+    * top-100. Both paths produce bit-identical ranks. */
   val q154 = GraftQuery(
     "q154_pagerank_customer",
     (s, d) => {
-      // SERIALIZED checkpoint blocks: lanes is the one fact-SCALED edge
-      // list the graph family materializes (~0.98 x lineitem rows — 587M
-      // at sf100), and the default deserialized MEMORY_AND_DISK level
-      // unrolls each partition as row OBJECTS through the memory store;
-      // at 1000x that unroll OOM'd a 60g heap (32 concurrent tasks,
-      // GCLocker retry storm) in the third-decade probe. Serialized
-      // blocks unroll as compact bytes (~20 B/row vs ~100+ B object
-      // graphs), spill predictably, and every superstep re-read is one
-      // in-memory deserialize scan — the storage level a real cluster
-      // would pick for a fact-derived edge list.
-      // r15 (VERDICT r14 #5): LAZY local checkpoint — same serialized
-      // storage level and the same materialize-once posture, but the
-      // checkpoint rides the query's own (single) action instead of a
-      // separate eager driver-synchronized job whose barrier idled the
-      // box during the lanes tail. The shuffle map stages feeding the
-      // distinct still run exactly once (shuffle dependencies are shared);
-      // only the final dedup stage can, in the worst concurrent-stage
-      // case, re-read already-written shuffle data before the block
-      // cache fills. Same-window A/B at sf0.1 (2 clean passes each):
-      // 2.088 -> 1.766 s (OPTIMIZATION_r15.md).
+      import s.implicits._
       val lanes = t(s, d, "orders")
         .join(t(s, d, "lineitem"), col("l_orderkey") === col("o_orderkey"))
         .select(col("o_custkey").as("c"), col("l_suppkey").as("p"))
         .distinct()
-        .localCheckpoint(false,
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
       // supplier node ids live in the NEGATIVE range (-suppkey-1):
       // collision-free against the non-negative customer keys at ANY
       // scale factor — a fixed additive offset (1e9) would silently
       // merge distinct nodes once c_custkey crossed it (~sf6,700)
-      val edges = lanes
+      def edges(lanes: DataFrame): DataFrame = lanes
         .select(col("c").as("src"), (-col("p") - 1L).as("dst"))
         .union(lanes
           .select((-col("p") - 1L).as("src"), col("c").as("dst")))
@@ -473,10 +551,36 @@ object GraphOps {
       // intermediate far inside Long. The DuckDB twin computes the SAME
       // greatest(1e12, nn*6e6) from its own node count.
       val mass = math.max(1000000000000L, nNodes * 6000000L)
-      pageRankRanks(nodes, edges, outDegrees(edges), 2,
-          nNodes <= BroadcastRowLimit, mass = mass)
-        .select(col("node"), col("r").as("pr_units"))
-        .orderBy(col("pr_units").desc, col("node")).limit(100)
+      if (nNodes <= BroadcastRowLimit) {
+        // the dense path reads the edge list exactly once, so the lanes
+        // need no checkpoint: one scan emits both directions of a lane.
+        // The top-100 comes back as a local frame.
+        val both = lanes.select(explode(array(
+          struct(col("c").as("src"), (-col("p") - 1L).as("dst")),
+          struct((-col("p") - 1L).as("src"), col("c").as("dst")))).as("e"))
+          .select(col("e.src"), col("e.dst"))
+        val pr = pageRankDense(nodes, both, 2, mass)
+        pr.node.indices.sortBy(i => (-pr.r(i), pr.node(i))).take(100)
+          .map(i => (pr.node(i), pr.r(i))).toDF("node", "pr_units")
+      } else {
+        // SERIALIZED checkpoint blocks: lanes is the one fact-SCALED edge
+        // list the graph family materializes (~0.98 x lineitem rows — 587M
+        // at sf100), and the default deserialized MEMORY_AND_DISK level
+        // unrolls each partition as row OBJECTS through the memory store;
+        // at 1000x that unroll OOM'd a 60g heap (32 concurrent tasks,
+        // GCLocker retry storm) in the third-decade probe. Serialized
+        // blocks unroll as compact bytes (~20 B/row vs ~100+ B object
+        // graphs), spill predictably, and every superstep re-read is one
+        // in-memory deserialize scan. LAZY (r15, VERDICT r14 #5): the
+        // checkpoint rides the query's own action instead of a separate
+        // eager job whose barrier idled the box during the lanes tail
+        // (2.088 -> 1.766 s at sf0.1, OPTIMIZATION_r15.md).
+        val e = edges(lanes.localCheckpoint(false,
+          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
+        pageRankRanksChecked(nodes, e, outDegrees(e), 2, mass)._1
+          .select(col("node"), col("r").as("pr_units"))
+          .orderBy(col("pr_units").desc, col("node")).limit(100)
+      }
     },
     Some("""WITH lanes AS (
         SELECT DISTINCT o.o_custkey AS c, l.l_suppkey AS p
@@ -508,9 +612,9 @@ object GraphOps {
              FROM r1 n LEFT JOIN c2 ON c2.node = n.node, st)
       SELECT node, r AS pr_units FROM r2
       ORDER BY pr_units DESC, node LIMIT 100"""),
-    note = "customer-granularity PageRank: node count crosses the " +
-      "broadcast threshold at sf1, so the superstep joins run " +
-      "shuffle-keyed there — the node-count-honest degradation path")
+    note = "customer-granularity PageRank: one dense job per superstep " +
+      "under the broadcast threshold; the node count crosses it at sf1, " +
+      "where the superstep joins run shuffle-keyed")
 
   val all: Seq[GraftQuery] = Seq(q131, q137, q148, q154)
 }

@@ -410,11 +410,12 @@ class QueriesSpec extends SparkSpec {
     assert(SearchService.searchWithFallback(spark, sf, -1, limit = 5).count() == 0)
     assert(SearchService.degradedCount == before + 1)
     // with no tables both paths fail, and the ANN failure is still counted
-    val tmp = java.nio.file.Files.createTempDirectory("graft_missing").toString
-    intercept[org.apache.spark.sql.AnalysisException] {
-      SearchService.searchWithFallback(spark, tmp, 0, limit = 5)
+    withTempDir("graft_missing") { tmp =>
+      intercept[org.apache.spark.sql.AnalysisException] {
+        SearchService.searchWithFallback(spark, tmp, 0, limit = 5)
+      }
+      assert(SearchService.degradedCount == before + 2)
     }
-    assert(SearchService.degradedCount == before + 2)
   }
 
   test("filtered ANN path returns k rows that ALL satisfy the metadata filter") {
@@ -1178,13 +1179,22 @@ class QueriesSpec extends SparkSpec {
     val name = "q154_pagerank_customer"
     def run() = QueryRegistry.byName(name).fn(spark, sf).collect()
       .map(r => (r.getAs[Long]("node"), r.getAs[Long]("pr_units"))).toSeq
+    import operators.GraphOps.{denseSuperstepCount, shuffleSuperstepCount}
+    def steps() = (denseSuperstepCount, shuffleSuperstepCount)
+    val s0 = steps()
     val viaBroadcast = run() // 165 nodes at sf0.001 -> under the limit
+    val s1 = steps()
     // DynamicVariable scoping (ADVICE r8): the forced shuffle path is
     // confined to plans built inside withValue on THIS thread
     val viaShuffle =
       operators.GraphOps.broadcastRowLimitOverride.withValue(Some(0L)) {
         run() // every conditional hint now takes the shuffle path
       }
+    val s2 = steps()
+    // q154 runs 2 supersteps: the first run took only the dense path, the
+    // forced run only the shuffle-keyed one
+    assert(s1._1 - s0._1 == 2 && s1._2 == s0._2, s"first run moved $s0 -> $s1")
+    assert(s2._1 == s1._1 && s2._2 - s1._2 == 2, s"forced run moved $s1 -> $s2")
     assert(viaBroadcast.nonEmpty && viaBroadcast == viaShuffle,
       "conditional broadcast hint changed the RESULT, not just the plan")
     // descending total order with node tiebreak; bounded output

@@ -19,23 +19,27 @@ class RunnerSpec extends SparkSpec {
   test("Verify.dump over two named queries writes exactly their dirs and oracle entries") {
     val names = Seq("q01_pricing_summary", "q02_filter_project_topk")
     assert(names.forall(SparkEntry.oracleSql.contains))
-    val out = Files.createTempDirectory("verify-subset").resolve("out")
-    Verify.dump(spark, sf, out.toString, names)
-    assert(!spark.sparkContext.isStopped)
-    assert(listDir(out) == names.toSet + "oracle_sql.json")
-    names.foreach(n => assert(Files.exists(out.resolve(s"$n/_SUCCESS")), n))
-    val oracle = new ObjectMapper().readTree(Files.readString(out.resolve("oracle_sql.json")))
-    val entries = oracle.properties.asScala.map(e => e.getKey -> e.getValue.asText).toMap
-    assert(entries == SparkEntry.oracleSql.filter(kv => names.contains(kv._1)))
+    withTempDir("verify-subset") { tmp =>
+      val out = Paths.get(tmp, "out")
+      Verify.dump(spark, sf, out.toString, names)
+      assert(!spark.sparkContext.isStopped)
+      assert(listDir(out) == names.toSet + "oracle_sql.json")
+      names.foreach(n => assert(Files.exists(out.resolve(s"$n/_SUCCESS")), n))
+      val oracle = new ObjectMapper().readTree(Files.readString(out.resolve("oracle_sql.json")))
+      val entries = oracle.properties.asScala.map(e => e.getKey -> e.getValue.asText).toMap
+      assert(entries == SparkEntry.oracleSql.filter(kv => names.contains(kv._1)))
+    }
   }
 
   test("Verify.dump fails on an unknown name before anything is written") {
-    val out = Files.createTempDirectory("verify-unknown").resolve("out")
-    val e = intercept[IllegalArgumentException] {
-      Verify.dump(spark, sf, out.toString, Seq("q01_pricing_summary", "q_no_such_query"))
+    withTempDir("verify-unknown") { tmp =>
+      val out = Paths.get(tmp, "out")
+      val e = intercept[IllegalArgumentException] {
+        Verify.dump(spark, sf, out.toString, Seq("q01_pricing_summary", "q_no_such_query"))
+      }
+      assert(e.getMessage.contains("q_no_such_query"))
+      assert(!Files.exists(out))
     }
-    assert(e.getMessage.contains("q_no_such_query"))
-    assert(!Files.exists(out))
   }
 
   test("Profile rejects an unknown name before it starts a session") {
@@ -55,8 +59,10 @@ class RunnerSpec extends SparkSpec {
   }
 
   test("Bench.gitLine gives an empty commit outside a git checkout") {
-    val outside = Files.createTempDirectory("not-a-checkout").toFile
-    assert(Bench.gitLine(Seq("git", "rev-parse", "HEAD"), outside) == "")
+    withTempDir("not-a-checkout") { tmp =>
+      val outside = new java.io.File(tmp)
+      assert(Bench.gitLine(Seq("git", "rev-parse", "HEAD"), outside) == "")
+    }
   }
 
   private val mainRoot = Paths.get("src/main/scala")

@@ -14,13 +14,6 @@ class ScaleSpec extends SparkSpec {
       when(col("id") % 10 =!= 0, lit(0L)).otherwise(col("id") % 97).as("k"),
       (col("id") % 1000).cast("double").as("v"))
 
-  /** Run `body` on a fresh temporary directory, deleted afterwards. */
-  private def withTempDir(prefix: String)(body: String => Unit): Unit = {
-    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
-    try body(dir.toString)
-    finally org.apache.commons.io.FileUtils.deleteQuietly(dir)
-  }
-
   test("salted aggregation equals direct groupBy on a skewed key") {
     val direct = skewed.groupBy("k")
       .agg(sum("v").as("sum_v"), count(lit(1)).as("cnt"))

@@ -13,7 +13,6 @@ import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 
 /** The two tiers behind `SearchService.searchWithFallback`.
   *
@@ -26,13 +25,9 @@ import org.scalatest.BeforeAndAfterAll
   * per-request pipeline it replaced returned, costs at most two jobs and
   * no code generation per warm request, sees a rewritten table at once,
   * and builds one index for concurrent first requests. */
-class SearchIndexSpec extends SparkSpec with BeforeAndAfterAll {
+class SearchIndexSpec extends SparkSpec {
   private val sf01 = "/root/testdata/sf0.01"
   private val allLangs = Seq("de", "en", "es", "fr", "zh")
-  private val copies = new java.util.concurrent.ConcurrentLinkedQueue[String]
-
-  override def afterAll(): Unit =
-    copies.forEach(d => org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
 
   private def ids(dir: String, id: Long, limit: Int, langs: Seq[String]): Seq[Long] =
     SearchService.searchWithFallback(spark, dir, id, limit, langs)
@@ -90,14 +85,12 @@ class SearchIndexSpec extends SparkSpec with BeforeAndAfterAll {
       .sortBy { case (vid, s) => (-s, vid) }.take(k).map(_._1)
   }
 
-  /** A private copy of the two tables the search reads. */
-  private def copyTables(): String = {
-    val tmp = Files.createTempDirectory("graft_search_index")
-    copies.add(tmp.toString)
+  /** Run `body` over a private copy of the two tables the search reads. */
+  private def withTables[A](body: String => A): A = withTempDir("graft_search_index") { tmp =>
     Seq("embeddings", "documents").foreach { n =>
-      Files.copy(Paths.get(s"$sf01/$n.parquet"), tmp.resolve(s"$n.parquet"))
+      Files.copy(Paths.get(s"$sf01/$n.parquet"), Paths.get(tmp, s"$n.parquet"))
     }
-    tmp.toString
+    body(tmp)
   }
 
   /** Replace table `name` of `dir` with `df`, written beside it first. */
@@ -166,41 +159,43 @@ class SearchIndexSpec extends SparkSpec with BeforeAndAfterAll {
   }
 
   lshTest("the next search after the embeddings table is rewritten reflects the new vectors") {
-    val dir = copyTables()
-    val query = 3L
-    val old = ids(dir, query, 10, allLangs)
-    assert(old == unindexed(dir, query, 10, allLangs))
-    val oldIndex = SearchService.indexPath(dir).get
-    // give a vector outside the old top-10 the query's own embedding
-    val target = spark.read.parquet(s"$dir/embeddings.parquet").select(max(col("vec_id"))).head().getLong(0)
-    assert(!old.contains(target))
-    plant(dir, query, Set(target))
-    val fresh = ids(dir, query, 10, allLangs)
-    assert(fresh.take(2) == Seq(query, target))
-    assert(fresh == unindexed(dir, query, 10, allLangs))
-    assert(SearchService.indexPath(dir).get != oldIndex)
-    assert(!Files.exists(Paths.get(oldIndex)), "the superseded index was left behind")
+    withTables { dir =>
+      val query = 3L
+      val old = ids(dir, query, 10, allLangs)
+      assert(old == unindexed(dir, query, 10, allLangs))
+      val oldIndex = SearchService.indexPath(dir).get
+      // give a vector outside the old top-10 the query's own embedding
+      val target = spark.read.parquet(s"$dir/embeddings.parquet").select(max(col("vec_id"))).head().getLong(0)
+      assert(!old.contains(target))
+      plant(dir, query, Set(target))
+      val fresh = ids(dir, query, 10, allLangs)
+      assert(fresh.take(2) == Seq(query, target))
+      assert(fresh == unindexed(dir, query, 10, allLangs))
+      assert(SearchService.indexPath(dir).get != oldIndex)
+      assert(!Files.exists(Paths.get(oldIndex)), "the superseded index was left behind")
+    }
   }
 
   lshTest("concurrent first requests build one index, outside the table dir, never persisted") {
-    val dir = copyTables()
-    val builds = SearchService.indexBuilds
-    val degraded = SearchService.degradedCount
-    val persisted = spark.sparkContext.getPersistentRDDs.keySet
-    val pool = Executors.newFixedThreadPool(4)
-    val sizes = try {
-      (0 until 4).map { i =>
-        pool.submit(new Callable[Int] { def call(): Int = ids(dir, i.toLong, 10, Seq("en")).size })
-      }.map(_.get)
-    } finally pool.shutdown()
-    assert(sizes.forall(_ == 10))
-    assert(SearchService.indexBuilds == builds + 1)
-    assert(SearchService.degradedCount == degraded)
-    assert(spark.sparkContext.getPersistentRDDs.keySet == persisted)
-    val path = SearchService.indexPath(dir).get
-    assert(Files.isDirectory(Paths.get(path)))
-    assert(path.startsWith(SparkFiles.getRootDirectory()) && !path.startsWith(dir))
-    assert(new java.io.File(dir).list().toSet == Set("embeddings.parquet", "documents.parquet"))
+    withTables { dir =>
+      val builds = SearchService.indexBuilds
+      val degraded = SearchService.degradedCount
+      val persisted = spark.sparkContext.getPersistentRDDs.keySet
+      val pool = Executors.newFixedThreadPool(4)
+      val sizes = try {
+        (0 until 4).map { i =>
+          pool.submit(new Callable[Int] { def call(): Int = ids(dir, i.toLong, 10, Seq("en")).size })
+        }.map(_.get)
+      } finally pool.shutdown()
+      assert(sizes.forall(_ == 10))
+      assert(SearchService.indexBuilds == builds + 1)
+      assert(SearchService.degradedCount == degraded)
+      assert(spark.sparkContext.getPersistentRDDs.keySet == persisted)
+      val path = SearchService.indexPath(dir).get
+      assert(Files.isDirectory(Paths.get(path)))
+      assert(path.startsWith(SparkFiles.getRootDirectory()) && !path.startsWith(dir))
+      assert(new java.io.File(dir).list().toSet == Set("embeddings.parquet", "documents.parquet"))
+    }
   }
 
   test("every request adds 1 to exactly one of the tier and degrade counters; " +
@@ -248,29 +243,31 @@ class SearchIndexSpec extends SparkSpec with BeforeAndAfterAll {
   }
 
   test("the exact tier orders exact score ties by vec_id") {
-    val dir = copyTables()
-    val query = 300L
-    val planted = Set(5L, 299L, 301L, 480L)
-    plant(dir, query, planted)
-    val got = ids(dir, query, 10, allLangs)
-    assert(got.take(5) == (planted + query).toSeq.sorted)
-    assert(got == exactTopK(dir, query, 10, allLangs))
+    withTables { dir =>
+      val query = 300L
+      val planted = Set(5L, 299L, 301L, 480L)
+      plant(dir, query, planted)
+      val got = ids(dir, query, 10, allLangs)
+      assert(got.take(5) == (planted + query).toSeq.sorted)
+      assert(got == exactTopK(dir, query, 10, allLangs))
+    }
   }
 
   test("a vector without a document is a valid key and never a filtered result") {
-    val dir = copyTables()
-    val (orphan, twin) = (250L, 40L)
-    plant(dir, twin, Set(orphan))
-    rewrite(dir, "documents",
-      spark.read.parquet(s"$sf01/documents.parquet").filter(col("doc_id") =!= orphan))
-    val degraded = SearchService.degradedCount
-    val fromOrphan = ids(dir, orphan, 20, allLangs)
-    assert(fromOrphan.head == twin && !fromOrphan.contains(orphan))
-    assert(fromOrphan == exactTopK(dir, orphan, 20, allLangs))
-    val fromTwin = ids(dir, twin, 100, allLangs)
-    assert(fromTwin.head == twin && !fromTwin.contains(orphan))
-    assert(fromTwin == exactTopK(dir, twin, 100, allLangs))
-    assert(SearchService.degradedCount == degraded)
+    withTables { dir =>
+      val (orphan, twin) = (250L, 40L)
+      plant(dir, twin, Set(orphan))
+      rewrite(dir, "documents",
+        spark.read.parquet(s"$sf01/documents.parquet").filter(col("doc_id") =!= orphan))
+      val degraded = SearchService.degradedCount
+      val fromOrphan = ids(dir, orphan, 20, allLangs)
+      assert(fromOrphan.head == twin && !fromOrphan.contains(orphan))
+      assert(fromOrphan == exactTopK(dir, orphan, 20, allLangs))
+      val fromTwin = ids(dir, twin, 100, allLangs)
+      assert(fromTwin.head == twin && !fromTwin.contains(orphan))
+      assert(fromTwin == exactTopK(dir, twin, 100, allLangs))
+      assert(SearchService.degradedCount == degraded)
+    }
   }
 
   test("a warm exact-tier request for an unseen vec_id runs no Spark job") {
@@ -284,40 +281,42 @@ class SearchIndexSpec extends SparkSpec with BeforeAndAfterAll {
 
   test("the next exact-tier search after the embeddings table is rewritten " +
     "sees the new vectors and drops the old copy") {
-    val dir = copyTables()
-    val query = 3L
-    val old = ids(dir, query, 10, allLangs)
-    assert(old == exactTopK(dir, query, 10, allLangs))
-    val oldCopy = new WeakReference(SearchService.residentCopy(dir).get)
-    val target = 499L
-    assert(!old.contains(target))
-    plant(dir, query, Set(target))
-    val fresh = ids(dir, query, 10, allLangs)
-    assert(fresh.take(2) == Seq(query, target))
-    assert(fresh == exactTopK(dir, query, 10, allLangs))
-    // refersTo never makes the old copy strongly reachable again
-    assert(!oldCopy.refersTo(SearchService.residentCopy(dir).get))
-    var gcs = 0
-    while (!oldCopy.refersTo(null) && gcs < 20) { System.gc(); Thread.sleep(50); gcs += 1 }
-    assert(oldCopy.refersTo(null), "the superseded copy is still reachable")
+    withTables { dir =>
+      val query = 3L
+      val old = ids(dir, query, 10, allLangs)
+      assert(old == exactTopK(dir, query, 10, allLangs))
+      val oldCopy = new WeakReference(SearchService.residentCopy(dir).get)
+      val target = 499L
+      assert(!old.contains(target))
+      plant(dir, query, Set(target))
+      val fresh = ids(dir, query, 10, allLangs)
+      assert(fresh.take(2) == Seq(query, target))
+      assert(fresh == exactTopK(dir, query, 10, allLangs))
+      // refersTo never makes the old copy strongly reachable again
+      assert(!oldCopy.refersTo(SearchService.residentCopy(dir).get))
+      var gcs = 0
+      while (!oldCopy.refersTo(null) && gcs < 20) { System.gc(); Thread.sleep(50); gcs += 1 }
+      assert(oldCopy.refersTo(null), "the superseded copy is still reachable")
+    }
   }
 
   test("concurrent first exact-tier requests build one copy and persist nothing") {
-    val dir = copyTables()
-    val builds = SearchService.indexBuilds
-    val (exact, _, degraded) = counters
-    val persisted = spark.sparkContext.getPersistentRDDs.keySet
-    val pool = Executors.newFixedThreadPool(4)
-    val got = try {
-      (0 until 4).map { i =>
-        pool.submit(new Callable[Seq[Long]] { def call(): Seq[Long] = ids(dir, i.toLong, 10, Seq("en")) })
-      }.map(_.get)
-    } finally pool.shutdown()
-    assert(got.zipWithIndex.forall { case (g, i) => g == exactTopK(dir, i.toLong, 10, Seq("en")) })
-    assert(SearchService.indexBuilds == builds + 1)
-    assert(counters._1 == exact + 4 && counters._3 == degraded)
-    assert(spark.sparkContext.getPersistentRDDs.keySet == persisted)
-    assert(SearchService.indexPath(dir).isEmpty, "the exact tier wrote an LSH index")
-    assert(new java.io.File(dir).list().toSet == Set("embeddings.parquet", "documents.parquet"))
+    withTables { dir =>
+      val builds = SearchService.indexBuilds
+      val (exact, _, degraded) = counters
+      val persisted = spark.sparkContext.getPersistentRDDs.keySet
+      val pool = Executors.newFixedThreadPool(4)
+      val got = try {
+        (0 until 4).map { i =>
+          pool.submit(new Callable[Seq[Long]] { def call(): Seq[Long] = ids(dir, i.toLong, 10, Seq("en")) })
+        }.map(_.get)
+      } finally pool.shutdown()
+      assert(got.zipWithIndex.forall { case (g, i) => g == exactTopK(dir, i.toLong, 10, Seq("en")) })
+      assert(SearchService.indexBuilds == builds + 1)
+      assert(counters._1 == exact + 4 && counters._3 == degraded)
+      assert(spark.sparkContext.getPersistentRDDs.keySet == persisted)
+      assert(SearchService.indexPath(dir).isEmpty, "the exact tier wrote an LSH index")
+      assert(new java.io.File(dir).list().toSet == Set("embeddings.parquet", "documents.parquet"))
+    }
   }
 }

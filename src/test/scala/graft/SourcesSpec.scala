@@ -10,36 +10,40 @@ class SourcesSpec extends SparkSpec {
   import spark.implicits._
 
   test("multiLine JSON profile source (S6) with nested arrays") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_json")
-    val f = dir.resolve("sample_profile.json")
-    java.nio.file.Files.writeString(f,
-      """{"reviews": [{"movieTitle": "Stalker", "rating": 5, "text": "..."}],
-         |"watched_movies": ["Stalker", "The Bicycle Thief"],
-         |"liked_movies": ["Stalker"],
-         |"favorite_genres": ["Drama", "Sci-Fi"]}""".stripMargin)
-    val profile = spark.read.option("multiLine", true).json(f.toString)
-    assert(profile.count() == 1)
-    val row = profile.head()
-    assert(row.getAs[scala.collection.Seq[String]]("watched_movies").length == 2)
-    // the exclusion pattern (movie_generator.py:201-204): watched movies
-    // broadcast-anti-joined against a candidate list
-    val watched = profile.select(explode(col("watched_movies")).as("title"))
-    val candidates = Seq("Stalker", "Heat", "The Bicycle Thief", "Alien")
-      .toDF("title")
-    val fresh = candidates.join(broadcast(watched), Seq("title"), "left_anti")
-    assert(fresh.as[String].collect().toSet == Set("Heat", "Alien"))
+    withTempDir("graft_json") { tmp =>
+      val dir = java.nio.file.Paths.get(tmp)
+      val f = dir.resolve("sample_profile.json")
+      java.nio.file.Files.writeString(f,
+        """{"reviews": [{"movieTitle": "Stalker", "rating": 5, "text": "..."}],
+           |"watched_movies": ["Stalker", "The Bicycle Thief"],
+           |"liked_movies": ["Stalker"],
+           |"favorite_genres": ["Drama", "Sci-Fi"]}""".stripMargin)
+      val profile = spark.read.option("multiLine", true).json(f.toString)
+      assert(profile.count() == 1)
+      val row = profile.head()
+      assert(row.getAs[scala.collection.Seq[String]]("watched_movies").length == 2)
+      // the exclusion pattern (movie_generator.py:201-204): watched movies
+      // broadcast-anti-joined against a candidate list
+      val watched = profile.select(explode(col("watched_movies")).as("title"))
+      val candidates = Seq("Stalker", "Heat", "The Bicycle Thief", "Alien")
+        .toDF("title")
+      val fresh = candidates.join(broadcast(watched), Seq("title"), "left_anti")
+      assert(fresh.as[String].collect().toSet == Set("Heat", "Alien"))
+    }
   }
 
   test("CSV source round-trip with schema") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_csv")
-    val f = dir.resolve("movies.csv")
-    java.nio.file.Files.writeString(f,
-      "title,year\nThe Bicycle Thief,1948\nStalker,1979\n")
-    val df = spark.read.option("header", true)
-      .schema("title STRING, year INT").csv(f.toString)
-    assert(df.count() == 2)
-    assert(df.filter(col("year") === 1948).head().getAs[String]("title") ==
-      "The Bicycle Thief")
+    withTempDir("graft_csv") { tmp =>
+      val dir = java.nio.file.Paths.get(tmp)
+      val f = dir.resolve("movies.csv")
+      java.nio.file.Files.writeString(f,
+        "title,year\nThe Bicycle Thief,1948\nStalker,1979\n")
+      val df = spark.read.option("header", true)
+        .schema("title STRING, year INT").csv(f.toString)
+      assert(df.count() == 2)
+      assert(df.filter(col("year") === 1948).head().getAs[String]("title") ==
+        "The Bicycle Thief")
+    }
   }
 
   test("schema assertions on the vector tables (S8 analog: the reference's index probe)") {
@@ -74,54 +78,57 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("partitioned parquet write + partition-pruned read") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_part").toString
-    Tables.t(spark, sf, "documents")
-      .write.partitionBy("lang").mode("overwrite").parquet(dir)
-    val back = spark.read.parquet(dir).filter(col("lang") === "en")
-    // partition pruning: only the lang=en directory is scanned
-    val scan = back.queryExecution.executedPlan.toString
-    assert(back.count() > 0)
-    assert(back.select("doc_id").distinct().count() == back.count())
+    withTempDir("graft_part") { dir =>
+      Tables.t(spark, sf, "documents")
+        .write.partitionBy("lang").mode("overwrite").parquet(dir)
+      val back = spark.read.parquet(dir).filter(col("lang") === "en")
+      // partition pruning: only the lang=en directory is scanned
+      val scan = back.queryExecution.executedPlan.toString
+      assert(back.count() > 0)
+      assert(back.select("doc_id").distinct().count() == back.count())
+    }
   }
 
   test("ORC source round-trip with predicate pushdown (second columnar format)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_orc").toString
-    val docs = Tables.t(spark, sf, "documents")
-    docs.write.mode("overwrite").orc(dir)
-    val back = spark.read.orc(dir).filter(col("doc_id") < 100)
-      .select("doc_id", "lang")
-    assert(back.count() ==
-      docs.filter(col("doc_id") < 100).count())
-    // the filter reaches the ORC scan (pushdown parity with parquet)
-    val f = back.queryExecution.explainString(
-      org.apache.spark.sql.execution.FormattedMode)
-    assert(f.contains("PushedFilters") && f.contains("LessThan(doc_id"), f)
+    withTempDir("graft_orc") { dir =>
+      val docs = Tables.t(spark, sf, "documents")
+      docs.write.mode("overwrite").orc(dir)
+      val back = spark.read.orc(dir).filter(col("doc_id") < 100)
+        .select("doc_id", "lang")
+      assert(back.count() ==
+        docs.filter(col("doc_id") < 100).count())
+      // the filter reaches the ORC scan (pushdown parity with parquet)
+      val f = back.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)
+      assert(f.contains("PushedFilters") && f.contains("LessThan(doc_id"), f)
+    }
   }
 
   test("malformed JSON records are quarantined, not fatal (PERMISSIVE mode)") {
     // at 100 TB some input WILL be corrupt; the pipeline contract is
     // quarantine-and-continue, never job failure or silent drop
-    val dir = java.nio.file.Files.createTempDirectory("graft_badjson").toString
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(dir, "in.jsonl"),
-      """{"id": 1, "v": "ok"}
-        |{"id": 2 "v": "missing comma"}
-        |{"id": 3, "v": "ok too"}
-        |not json at all
-        |""".stripMargin)
-    val schema = "id LONG, v STRING, _corrupt_record STRING"
-    val df = spark.read.schema(schema)
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .json(dir).cache() // corrupt-record column requires a materialized scan
-    try {
-      val good = df.filter(col("_corrupt_record").isNull)
-      val bad = df.filter(col("_corrupt_record").isNotNull)
-      assert(good.count() == 2 && bad.count() == 2)
-      assert(good.select("id").collect().map(_.getLong(0)).toSet == Set(1L, 3L))
-      // the quarantined rows carry the raw text for replay/debugging
-      assert(bad.select("_corrupt_record").collect()
-        .forall(r => r.getString(0).nonEmpty))
-    } finally df.unpersist()
+    withTempDir("graft_badjson") { dir =>
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(dir, "in.jsonl"),
+        """{"id": 1, "v": "ok"}
+          |{"id": 2 "v": "missing comma"}
+          |{"id": 3, "v": "ok too"}
+          |not json at all
+          |""".stripMargin)
+      val schema = "id LONG, v STRING, _corrupt_record STRING"
+      val df = spark.read.schema(schema)
+        .option("mode", "PERMISSIVE")
+        .option("columnNameOfCorruptRecord", "_corrupt_record")
+        .json(dir).cache() // corrupt-record column requires a materialized scan
+      try {
+        val good = df.filter(col("_corrupt_record").isNull)
+        val bad = df.filter(col("_corrupt_record").isNotNull)
+        assert(good.count() == 2 && bad.count() == 2)
+        assert(good.select("id").collect().map(_.getLong(0)).toSet == Set(1L, 3L))
+        // the quarantined rows carry the raw text for replay/debugging
+        assert(bad.select("_corrupt_record").collect()
+          .forall(r => r.getString(0).nonEmpty))
+      } finally df.unpersist()
+    }
   }
 }

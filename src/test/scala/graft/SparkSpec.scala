@@ -26,4 +26,11 @@ trait SparkSpec extends AnyFunSuite {
   lazy val sf: String = "/root/testdata/sf0.001"
 
   def init(): Unit = spark.sparkContext.setLogLevel("WARN")
+
+  /** Run `body` on a fresh temporary directory, deleted afterwards. */
+  def withTempDir[A](prefix: String)(body: String => A): A = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
+    try body(dir.toString)
+    finally org.apache.commons.io.FileUtils.deleteQuietly(dir)
+  }
 }

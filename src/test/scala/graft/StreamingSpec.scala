@@ -208,29 +208,30 @@ class StreamingSpec extends SparkSpec {
 
   test("foreachBatch curation loop: parse+dedup+merge across micro-batches") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_curation").toString
-    val corpusDir = s"$dir/corpus"
-    val mem = MemoryStream[String]
-    // batch 1: two movies
-    mem.addData(
-      "TITLE: The Bicycle Thief\nYEAR: 1948\nGENRES: Drama\nPLOT: a",
-      "TITLE: Stalker\nYEAR: 1979\nGENRES: SciFi\nPLOT: b")
-    val q1 = graft.streaming.StreamingCuration.start(
-      mem.toDF().withColumnRenamed("value", "raw"), corpusDir, s"$dir/ckpt")
-    q1.awaitTermination()
-    assert(spark.read.parquet(corpusDir).count() == 2)
-    // batch 2: one exact dup, one fuzzy dup (±1 year), one new
-    mem.addData(
-      "TITLE: the bicycle thief\nYEAR: 1948\nGENRES: Drama\nPLOT: dup",
-      "TITLE: The Bicycle Thieves\nYEAR: 1949\nGENRES: Drama\nPLOT: fuzzy dup",
-      "TITLE: Heat\nYEAR: 1995\nGENRES: Crime\nPLOT: new")
-    val q2 = graft.streaming.StreamingCuration.start(
-      mem.toDF().withColumnRenamed("value", "raw"), corpusDir, s"$dir/ckpt")
-    q2.awaitTermination()
-    val corpus = spark.read.parquet(corpusDir)
-    assert(corpus.count() == 3) // both dups rejected, Heat added
-    assert(corpus.select("title").as[String].collect().toSet ==
-      Set("The Bicycle Thief", "Stalker", "Heat"))
+    withTempDir("graft_curation") { dir =>
+      val corpusDir = s"$dir/corpus"
+      val mem = MemoryStream[String]
+      // batch 1: two movies
+      mem.addData(
+        "TITLE: The Bicycle Thief\nYEAR: 1948\nGENRES: Drama\nPLOT: a",
+        "TITLE: Stalker\nYEAR: 1979\nGENRES: SciFi\nPLOT: b")
+      val q1 = graft.streaming.StreamingCuration.start(
+        mem.toDF().withColumnRenamed("value", "raw"), corpusDir, s"$dir/ckpt")
+      q1.awaitTermination()
+      assert(spark.read.parquet(corpusDir).count() == 2)
+      // batch 2: one exact dup, one fuzzy dup (±1 year), one new
+      mem.addData(
+        "TITLE: the bicycle thief\nYEAR: 1948\nGENRES: Drama\nPLOT: dup",
+        "TITLE: The Bicycle Thieves\nYEAR: 1949\nGENRES: Drama\nPLOT: fuzzy dup",
+        "TITLE: Heat\nYEAR: 1995\nGENRES: Crime\nPLOT: new")
+      val q2 = graft.streaming.StreamingCuration.start(
+        mem.toDF().withColumnRenamed("value", "raw"), corpusDir, s"$dir/ckpt")
+      q2.awaitTermination()
+      val corpus = spark.read.parquet(corpusDir)
+      assert(corpus.count() == 3) // both dups rejected, Heat added
+      assert(corpus.select("title").as[String].collect().toSet ==
+        Set("The Bicycle Thief", "Stalker", "Heat"))
+    }
   }
 
   /** (path, md5) fingerprint of every data file under a directory. */
@@ -248,57 +249,59 @@ class StreamingSpec extends SparkSpec {
 
   test("partition-pruned merge: untouched corpus partitions stay byte-identical") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_prune").toString
-    val corpusDir = s"$dir/corpus"
-    val mem = MemoryStream[String]
-    // batch 1: buckets yb=194 (1948) and yb=199 (1995)
-    mem.addData(
-      "TITLE: The Bicycle Thief\nYEAR: 1948\nGENRES: Drama\nPLOT: a",
-      "TITLE: Heat\nYEAR: 1995\nGENRES: Crime\nPLOT: b")
-    val q1 = graft.streaming.StreamingCuration.start(
-      mem.toDF().withColumnRenamed("value", "raw"), corpusDir, s"$dir/ckpt")
-    q1.awaitTermination()
-    val fp194 = dirFingerprint(s"$corpusDir/yb=194")
-    assert(fp194.nonEmpty)
-    // batch 2 touches only bucket 199 (1996 → fresh row; 1948 dup rejected)
-    mem.addData(
-      "TITLE: the bicycle thief\nYEAR: 1948\nGENRES: Drama\nPLOT: dup",
-      "TITLE: Fargo\nYEAR: 1996\nGENRES: Crime\nPLOT: new")
-    val q2 = graft.streaming.StreamingCuration.start(
-      mem.toDF().withColumnRenamed("value", "raw"), corpusDir, s"$dir/ckpt")
-    q2.awaitTermination()
-    // the 1948 bucket was neither rewritten nor renamed: same files, same bytes
-    assert(dirFingerprint(s"$corpusDir/yb=194") == fp194,
-      "untouched partition was rewritten")
-    val corpus = spark.read.parquet(corpusDir)
-    assert(corpus.count() == 3)
-    assert(corpus.select("title").as[String].collect().toSet ==
-      Set("The Bicycle Thief", "Heat", "Fargo"))
-    // no staging/backup leftovers after a clean swap
-    assert(new java.io.File(dir).listFiles().map(_.getName).toSet == Set("corpus", "ckpt"))
+    withTempDir("graft_prune") { dir =>
+      val corpusDir = s"$dir/corpus"
+      val mem = MemoryStream[String]
+      // batch 1: buckets yb=194 (1948) and yb=199 (1995)
+      mem.addData(
+        "TITLE: The Bicycle Thief\nYEAR: 1948\nGENRES: Drama\nPLOT: a",
+        "TITLE: Heat\nYEAR: 1995\nGENRES: Crime\nPLOT: b")
+      val q1 = graft.streaming.StreamingCuration.start(
+        mem.toDF().withColumnRenamed("value", "raw"), corpusDir, s"$dir/ckpt")
+      q1.awaitTermination()
+      val fp194 = dirFingerprint(s"$corpusDir/yb=194")
+      assert(fp194.nonEmpty)
+      // batch 2 touches only bucket 199 (1996 → fresh row; 1948 dup rejected)
+      mem.addData(
+        "TITLE: the bicycle thief\nYEAR: 1948\nGENRES: Drama\nPLOT: dup",
+        "TITLE: Fargo\nYEAR: 1996\nGENRES: Crime\nPLOT: new")
+      val q2 = graft.streaming.StreamingCuration.start(
+        mem.toDF().withColumnRenamed("value", "raw"), corpusDir, s"$dir/ckpt")
+      q2.awaitTermination()
+      // the 1948 bucket was neither rewritten nor renamed: same files, same bytes
+      assert(dirFingerprint(s"$corpusDir/yb=194") == fp194,
+        "untouched partition was rewritten")
+      val corpus = spark.read.parquet(corpusDir)
+      assert(corpus.count() == 3)
+      assert(corpus.select("title").as[String].collect().toSet ==
+        Set("The Bicycle Thief", "Heat", "Fargo"))
+      // no staging/backup leftovers after a clean swap
+      assert(new java.io.File(dir).listFiles().map(_.getName).toSet == Set("corpus", "ckpt"))
+    }
   }
 
   test("interrupted swap: bucket parked in the backup dir is restored on recovery") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_recover").toString
-    val corpusDir = s"$dir/corpus"
-    val mem = MemoryStream[String]
-    mem.addData("TITLE: Stalker\nYEAR: 1979\nGENRES: SciFi\nPLOT: a")
-    val q1 = graft.streaming.StreamingCuration.start(
-      mem.toDF().withColumnRenamed("value", "raw"), corpusDir, s"$dir/ckpt")
-    q1.awaitTermination()
-    val fp = dirFingerprint(s"$corpusDir/yb=197")
-    // simulate a crash between the two swap renames: live bucket moved to
-    // the backup dir, replacement never arrived
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"${corpusDir}_prev_9"))
-    fs.rename(new org.apache.hadoop.fs.Path(s"$corpusDir/yb=197"),
-      new org.apache.hadoop.fs.Path(s"${corpusDir}_prev_9/yb=197"))
-    assert(dirFingerprint(s"$corpusDir/yb=197").isEmpty)
-    graft.streaming.StreamingCuration.recoverInterruptedSwap(spark, corpusDir)
-    assert(dirFingerprint(s"$corpusDir/yb=197") == fp, "bucket not restored")
-    assert(!new java.io.File(s"${corpusDir}_prev_9").exists())
+    withTempDir("graft_recover") { dir =>
+      val corpusDir = s"$dir/corpus"
+      val mem = MemoryStream[String]
+      mem.addData("TITLE: Stalker\nYEAR: 1979\nGENRES: SciFi\nPLOT: a")
+      val q1 = graft.streaming.StreamingCuration.start(
+        mem.toDF().withColumnRenamed("value", "raw"), corpusDir, s"$dir/ckpt")
+      q1.awaitTermination()
+      val fp = dirFingerprint(s"$corpusDir/yb=197")
+      // simulate a crash between the two swap renames: live bucket moved to
+      // the backup dir, replacement never arrived
+      val fs = org.apache.hadoop.fs.FileSystem.get(
+        spark.sparkContext.hadoopConfiguration)
+      fs.mkdirs(new org.apache.hadoop.fs.Path(s"${corpusDir}_prev_9"))
+      fs.rename(new org.apache.hadoop.fs.Path(s"$corpusDir/yb=197"),
+        new org.apache.hadoop.fs.Path(s"${corpusDir}_prev_9/yb=197"))
+      assert(dirFingerprint(s"$corpusDir/yb=197").isEmpty)
+      graft.streaming.StreamingCuration.recoverInterruptedSwap(spark, corpusDir)
+      assert(dirFingerprint(s"$corpusDir/yb=197") == fp, "bucket not restored")
+      assert(!new java.io.File(s"${corpusDir}_prev_9").exists())
+    }
   }
 
   test("crash matrix: a crash before EVERY swap op converges after replay") {
@@ -340,18 +343,20 @@ class StreamingSpec extends SparkSpec {
       if (fired) go() // restart from the same checkpoint: batch 2 replays
       fired
     }
-    val cleanDir = java.nio.file.Files.createTempDirectory("graft_cm0").toString
-    runBoth(cleanDir, None)
-    val expect = corpusSet(s"$cleanDir/corpus")
-    assert(expect.size == 4)
-    for (k <- 0 until 7) {
-      val dir = java.nio.file.Files.createTempDirectory(s"graft_cm$k").toString
-      val fired = runBoth(dir, Some(k))
-      assert(fired, s"crash point $k never reached — op map changed")
-      assert(corpusSet(s"$dir/corpus") == expect, s"crash at op $k diverged")
-      // replay must leave no staging/backup leftovers
-      assert(new java.io.File(dir).listFiles().map(_.getName).toSet ==
-        Set("corpus", "ckpt"), s"crash at op $k left debris")
+    withTempDir("graft_cm0") { cleanDir =>
+      runBoth(cleanDir, None)
+      val expect = corpusSet(s"$cleanDir/corpus")
+      assert(expect.size == 4)
+      for (k <- 0 until 7) {
+        withTempDir(s"graft_cm$k") { dir =>
+          val fired = runBoth(dir, Some(k))
+          assert(fired, s"crash point $k never reached — op map changed")
+          assert(corpusSet(s"$dir/corpus") == expect, s"crash at op $k diverged")
+          // replay must leave no staging/backup leftovers
+          assert(new java.io.File(dir).listFiles().map(_.getName).toSet ==
+            Set("corpus", "ckpt"), s"crash at op $k left debris")
+        }
+      }
     }
   }
 
@@ -464,115 +469,121 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("processBatch equals the formulation it replaced on 12 seeded batches") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_curation_eq").toString
-    val (batches, planted) = curationBatches(5, 12)
-    batches.zipWithIndex.foreach { case (b, i) =>
-      val raw = b.toDF("raw")
-      graft.streaming.StreamingCuration.processBatch(s"$dir/new")(raw, i.toLong)
-      referenceBatch(s"$dir/ref")(raw, i.toLong)
+    withTempDir("graft_curation_eq") { dir =>
+      val (batches, planted) = curationBatches(5, 12)
+      batches.zipWithIndex.foreach { case (b, i) =>
+        val raw = b.toDF("raw")
+        graft.streaming.StreamingCuration.processBatch(s"$dir/new")(raw, i.toLong)
+        referenceBatch(s"$dir/ref")(raw, i.toLong)
+      }
+      val got = corpusRows(s"$dir/new")
+      assert(got == corpusRows(s"$dir/ref"))
+      val keys = spark.read.parquet(s"$dir/new").select(lower(trim(col("title"))), col("year"))
+        .as[(String, Int)].collect()
+      assert(keys.length == got.size && keys.toSet == planted,
+        "every duplicate, invalid record and repeat must be dropped, every new title kept")
     }
-    val got = corpusRows(s"$dir/new")
-    assert(got == corpusRows(s"$dir/ref"))
-    val keys = spark.read.parquet(s"$dir/new").select(lower(trim(col("title"))), col("year"))
-      .as[(String, Int)].collect()
-    assert(keys.length == got.size && keys.toSet == planted,
-      "every duplicate, invalid record and repeat must be dropped, every new title kept")
   }
 
   test("a warm curation batch into an existing corpus runs at most 6 jobs, none inferring a schema") {
     val sc = spark.sparkContext
-    val corpusDir = java.nio.file.Files.createTempDirectory("graft_curation_cost").toString + "/corpus"
-    val (batches, _) = curationBatches(9, 4)
-    batches.take(3).zipWithIndex.foreach { case (b, i) =>
-      graft.streaming.StreamingCuration.processBatch(corpusDir)(b.toDF("raw"), i.toLong)
+    withTempDir("graft_curation_cost") { tmp =>
+      val corpusDir = s"$tmp/corpus"
+      val (batches, _) = curationBatches(9, 4)
+      batches.take(3).zipWithIndex.foreach { case (b, i) =>
+        graft.streaming.StreamingCuration.processBatch(corpusDir)(b.toDF("raw"), i.toLong)
+      }
+      val group = "curation-batch-cost"
+      val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+            jobs.add(e.stageInfos.map(_.details).mkString("\n"))
+      }
+      val raw = batches(3).toDF("raw")
+      sc.addSparkListener(listener)
+      sc.setJobGroup(group, "warm curation batch")
+      try graft.streaming.StreamingCuration.processBatch(corpusDir)(raw, 3L) finally {
+        sc.clearJobGroup()
+        org.apache.spark.ListenerBusDrain(sc)
+        sc.removeSparkListener(listener)
+      }
+      import scala.jdk.CollectionConverters._
+      val details = jobs.asScala.toSeq
+      assert(details.nonEmpty && details.size <= 6, s"${details.size} jobs")
+      // a job started while a reader resolves its relation is a schema inference
+      assert(!details.exists(_.contains("DataFrameReader")), details.mkString("\n---\n"))
     }
-    val group = "curation-batch-cost"
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
-          jobs.add(e.stageInfos.map(_.details).mkString("\n"))
-    }
-    val raw = batches(3).toDF("raw")
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "warm curation batch")
-    try graft.streaming.StreamingCuration.processBatch(corpusDir)(raw, 3L) finally {
-      sc.clearJobGroup()
-      org.apache.spark.ListenerBusDrain(sc)
-      sc.removeSparkListener(listener)
-    }
-    import scala.jdk.CollectionConverters._
-    val details = jobs.asScala.toSeq
-    assert(details.nonEmpty && details.size <= 6, s"${details.size} jobs")
-    // a job started while a reader resolves its relation is a schema inference
-    assert(!details.exists(_.contains("DataFrameReader")), details.mkString("\n---\n"))
   }
 
   test("processBatch leaves no RDD persisted, after a clean batch or a failed swap") {
     val sc = spark.sparkContext
-    val corpusDir = java.nio.file.Files.createTempDirectory("graft_curation_cache").toString + "/corpus"
-    val (batches, _) = curationBatches(13, 2)
-    val persisted = sc.getPersistentRDDs.keySet
-    graft.streaming.StreamingCuration.processBatch(corpusDir)(batches(0).toDF("raw"), 0L)
-    assert(sc.getPersistentRDDs.keySet == persisted, "a clean batch left a cache")
-    graft.streaming.StreamingCuration.swapFault = i =>
-      if (i == 2) throw new RuntimeException(s"injected crash at op $i")
-    val e = try intercept[RuntimeException] {
-      graft.streaming.StreamingCuration.processBatch(corpusDir)(batches(1).toDF("raw"), 1L)
-    } finally graft.streaming.StreamingCuration.swapFault = _ => ()
-    assert(e.getMessage.contains("injected crash"))
-    assert(sc.getPersistentRDDs.keySet == persisted, "a failed batch left a cache")
+    withTempDir("graft_curation_cache") { tmp =>
+      val corpusDir = s"$tmp/corpus"
+      val (batches, _) = curationBatches(13, 2)
+      val persisted = sc.getPersistentRDDs.keySet
+      graft.streaming.StreamingCuration.processBatch(corpusDir)(batches(0).toDF("raw"), 0L)
+      assert(sc.getPersistentRDDs.keySet == persisted, "a clean batch left a cache")
+      graft.streaming.StreamingCuration.swapFault = i =>
+        if (i == 2) throw new RuntimeException(s"injected crash at op $i")
+      val e = try intercept[RuntimeException] {
+        graft.streaming.StreamingCuration.processBatch(corpusDir)(batches(1).toDF("raw"), 1L)
+      } finally graft.streaming.StreamingCuration.swapFault = _ => ()
+      assert(e.getMessage.contains("injected crash"))
+      assert(sc.getPersistentRDDs.keySet == persisted, "a failed batch left a cache")
+    }
   }
 
   test("streaming content dedup: LSH sketch store admits only never-seen docs") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_cdedup").toString
-    val store = s"$dir/store"
-    val mem = MemoryStream[(Long, String)]
-    def go(): Unit = {
-      val q = graft.streaming.StreamingContentDedup.start(
-        mem.toDF().toDF("doc_id", "text"), store, s"$dir/ckpt")
-      q.awaitTermination()
+    withTempDir("graft_cdedup") { dir =>
+      val store = s"$dir/store"
+      val mem = MemoryStream[(Long, String)]
+      def go(): Unit = {
+        val q = graft.streaming.StreamingContentDedup.start(
+          mem.toDF().toDF("doc_id", "text"), store, s"$dir/ckpt")
+        q.awaitTermination()
+      }
+      val a = "the quick brown fox jumps over the lazy dog while the cat sleeps"
+      val b = "completely different content about spark partitions and shuffles at scale"
+      val c = "fresh unrelated text mentioning minhash signatures and band buckets"
+      mem.addData((1L, a), (2L, b))
+      go()
+      // batch 2: near-dup of a (one appended word → jaccard 11/12), exact dup
+      // of b, a new doc, and an in-batch identical pair (min doc_id survives)
+      mem.addData((3L, a + " tail"), (4L, b), (5L, c), (6L, c))
+      go()
+      def docIds: Set[Long] = spark.read.parquet(s"$store/docs")
+        .select("doc_id").as[Long].collect().toSet
+      assert(docIds == Set(1L, 2L, 5L))
+      // replay idempotence: re-running batch 1 against the post-write store
+      // (own partition excluded from the dedup read) changes nothing
+      val b2 = Seq((3L, a + " tail"), (4L, b), (5L, c), (6L, c))
+        .toDF("doc_id", "text")
+      graft.streaming.StreamingContentDedup.processBatch(store)(b2, 1L)
+      assert(docIds == Set(1L, 2L, 5L), "replayed batch changed the store")
+      // the sketch store carries one row per (admitted doc, band)
+      val sk = spark.read.parquet(s"$store/sketches")
+      assert(sk.select("doc_id").as[Long].collect().toSet == Set(1L, 2L, 5L))
+      assert(sk.groupBy("doc_id").count().select("count").as[Long]
+        .collect().forall(_ == graft.functions.HashFunctions.NumBands))
+      // sketches are cell-partitioned under the batch (batch=N/cell=C dirs)
+      // so a later batch's corpus probe partition-prunes on the cells it
+      // touches — same physical contract as BandIndexStore (BandIndexSpec)
+      val batchDirs = new java.io.File(s"$store/sketches").listFiles()
+        .filter(_.isDirectory).map(_.getName).toSet
+      assert(batchDirs.exists(_.startsWith("batch=")))
+      assert(batchDirs.forall(d => !d.startsWith("batch=") ||
+        new java.io.File(s"$store/sketches/$d").listFiles()
+          .filter(_.isDirectory).forall(_.getName.startsWith("cell="))))
+      val someCell = sk.select("cell").as[Int].head()
+      val prunedPlan = sk.filter(col("cell") === someCell)
+        .queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode)
+      assert(prunedPlan.contains("PartitionFilters") &&
+        prunedPlan.contains("cell"),
+        s"cell filter did not become a partition filter:\n$prunedPlan")
     }
-    val a = "the quick brown fox jumps over the lazy dog while the cat sleeps"
-    val b = "completely different content about spark partitions and shuffles at scale"
-    val c = "fresh unrelated text mentioning minhash signatures and band buckets"
-    mem.addData((1L, a), (2L, b))
-    go()
-    // batch 2: near-dup of a (one appended word → jaccard 11/12), exact dup
-    // of b, a new doc, and an in-batch identical pair (min doc_id survives)
-    mem.addData((3L, a + " tail"), (4L, b), (5L, c), (6L, c))
-    go()
-    def docIds: Set[Long] = spark.read.parquet(s"$store/docs")
-      .select("doc_id").as[Long].collect().toSet
-    assert(docIds == Set(1L, 2L, 5L))
-    // replay idempotence: re-running batch 1 against the post-write store
-    // (own partition excluded from the dedup read) changes nothing
-    val b2 = Seq((3L, a + " tail"), (4L, b), (5L, c), (6L, c))
-      .toDF("doc_id", "text")
-    graft.streaming.StreamingContentDedup.processBatch(store)(b2, 1L)
-    assert(docIds == Set(1L, 2L, 5L), "replayed batch changed the store")
-    // the sketch store carries one row per (admitted doc, band)
-    val sk = spark.read.parquet(s"$store/sketches")
-    assert(sk.select("doc_id").as[Long].collect().toSet == Set(1L, 2L, 5L))
-    assert(sk.groupBy("doc_id").count().select("count").as[Long]
-      .collect().forall(_ == graft.functions.HashFunctions.NumBands))
-    // sketches are cell-partitioned under the batch (batch=N/cell=C dirs)
-    // so a later batch's corpus probe partition-prunes on the cells it
-    // touches — same physical contract as BandIndexStore (BandIndexSpec)
-    val batchDirs = new java.io.File(s"$store/sketches").listFiles()
-      .filter(_.isDirectory).map(_.getName).toSet
-    assert(batchDirs.exists(_.startsWith("batch=")))
-    assert(batchDirs.forall(d => !d.startsWith("batch=") ||
-      new java.io.File(s"$store/sketches/$d").listFiles()
-        .filter(_.isDirectory).forall(_.getName.startsWith("cell="))))
-    val someCell = sk.select("cell").as[Int].head()
-    val prunedPlan = sk.filter(col("cell") === someCell)
-      .queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-    assert(prunedPlan.contains("PartitionFilters") &&
-      prunedPlan.contains("cell"),
-      s"cell filter did not become a partition filter:\n$prunedPlan")
   }
 
   test("indexed streaming ingest: verdicts match q125 batch-for-batch across restarts") {
@@ -583,50 +594,52 @@ class StreamingSpec extends SparkSpec {
     // B = %10==7, so batch B's verdicts must equal the q125 registry row
     // (whose corpus side is everything except B) bit-for-bit.
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_idxstream").toString
-    val idx = s"$dir/index"
-    val docs = Tables.t(spark, sf, "documents")
-      .select(col("doc_id"), col("text")).as[(Long, String)].collect()
-    def slice(p: Long => Boolean) = docs.filter(t => p(t._1)).toIndexedSeq
-    val mem = MemoryStream[(Long, String)]
-    def go(): Unit = {
-      // each go() is a NEW query resuming from the same checkpoint — every
-      // batch boundary in this test is also a restart boundary
-      val q = graft.streaming.StreamingContentDedup.startIndexed(
-        mem.toDF().toDF("doc_id", "text"), idx, s"$dir/ckpt")
-      q.awaitTermination()
+    withTempDir("graft_idxstream") { dir =>
+      val idx = s"$dir/index"
+      val docs = Tables.t(spark, sf, "documents")
+        .select(col("doc_id"), col("text")).as[(Long, String)].collect()
+      def slice(p: Long => Boolean) = docs.filter(t => p(t._1)).toIndexedSeq
+      val mem = MemoryStream[(Long, String)]
+      def go(): Unit = {
+        // each go() is a NEW query resuming from the same checkpoint — every
+        // batch boundary in this test is also a restart boundary
+        val q = graft.streaming.StreamingContentDedup.startIndexed(
+          mem.toDF().toDF("doc_id", "text"), idx, s"$dir/ckpt")
+        q.awaitTermination()
+      }
+      mem.addData(slice(id => id % 10 != 3 && id % 10 != 7)); go() // batch 0: C
+      mem.addData(slice(_ % 10 == 3)); go()                        // batch 1: A
+      mem.addData(slice(_ % 10 == 7)); go()                        // batch 2: B
+      def verdicts(b: Long): Seq[(Long, Long, Double)] =
+        spark.read.parquet(s"$idx/verdicts").filter(col("batch") === b)
+          .select("doc_id", "dup_of", "jaccard").as[(Long, Long, Double)]
+          .collect().sortBy(_._1).toIndexedSeq
+      // batch 0 probed an empty index: every doc unique
+      assert(verdicts(0).nonEmpty && verdicts(0).forall(v => v._2 == -1L))
+      // batch 1's verdicts == BandIndexStore.probe over an index of C alone
+      withTempDir("graft_idxref") { refDir =>
+        operators.BandIndexStore.build(spark, sf,
+          col("doc_id") % 10 =!= 3 && col("doc_id") % 10 =!= 7, refDir)
+        val refA = operators.BandIndexStore
+          .probe(spark, sf, col("doc_id") % 10 === 3, refDir)
+          .as[(Long, Long, Double)].collect().sortBy(_._1).toIndexedSeq
+        assert(verdicts(1) == refA, s"batch A: stream=${verdicts(1)} ref=$refA")
+        // batch 2's verdicts == the q125 registry row on the union corpus
+        val want = QueryRegistry.byName("q125_incremental_neardup").fn(spark, sf)
+          .as[(Long, Long, Double)].collect().sortBy(_._1).toIndexedSeq
+        assert(verdicts(2) == want, s"batch B: stream=${verdicts(2)} ref=$want")
+        // crash-replay idempotence: re-running batch 1 against the grown index
+        // (own partitions excluded from every read) must not change verdicts
+        // or duplicate index rows
+        val sigsBefore = spark.read.parquet(s"$idx/sigs").count()
+        graft.streaming.StreamingContentDedup.processBatchIndexed(idx)(
+          slice(_ % 10 == 3).toDF("doc_id", "text"), 1L)
+        assert(verdicts(1) == refA, "replayed batch changed its verdicts")
+        assert(spark.read.parquet(s"$idx/sigs").count() == sigsBefore)
+        assert(spark.read.parquet(s"$idx/sigs")
+          .groupBy("doc_id").count().filter(col("count") > 1).isEmpty)
+      }
     }
-    mem.addData(slice(id => id % 10 != 3 && id % 10 != 7)); go() // batch 0: C
-    mem.addData(slice(_ % 10 == 3)); go()                        // batch 1: A
-    mem.addData(slice(_ % 10 == 7)); go()                        // batch 2: B
-    def verdicts(b: Long): Seq[(Long, Long, Double)] =
-      spark.read.parquet(s"$idx/verdicts").filter(col("batch") === b)
-        .select("doc_id", "dup_of", "jaccard").as[(Long, Long, Double)]
-        .collect().sortBy(_._1).toIndexedSeq
-    // batch 0 probed an empty index: every doc unique
-    assert(verdicts(0).nonEmpty && verdicts(0).forall(v => v._2 == -1L))
-    // batch 1's verdicts == BandIndexStore.probe over an index of C alone
-    val refDir = java.nio.file.Files.createTempDirectory("graft_idxref").toString
-    operators.BandIndexStore.build(spark, sf,
-      col("doc_id") % 10 =!= 3 && col("doc_id") % 10 =!= 7, refDir)
-    val refA = operators.BandIndexStore
-      .probe(spark, sf, col("doc_id") % 10 === 3, refDir)
-      .as[(Long, Long, Double)].collect().sortBy(_._1).toIndexedSeq
-    assert(verdicts(1) == refA, s"batch A: stream=${verdicts(1)} ref=$refA")
-    // batch 2's verdicts == the q125 registry row on the union corpus
-    val want = QueryRegistry.byName("q125_incremental_neardup").fn(spark, sf)
-      .as[(Long, Long, Double)].collect().sortBy(_._1).toIndexedSeq
-    assert(verdicts(2) == want, s"batch B: stream=${verdicts(2)} ref=$want")
-    // crash-replay idempotence: re-running batch 1 against the grown index
-    // (own partitions excluded from every read) must not change verdicts
-    // or duplicate index rows
-    val sigsBefore = spark.read.parquet(s"$idx/sigs").count()
-    graft.streaming.StreamingContentDedup.processBatchIndexed(idx)(
-      slice(_ % 10 == 3).toDF("doc_id", "text"), 1L)
-    assert(verdicts(1) == refA, "replayed batch changed its verdicts")
-    assert(spark.read.parquet(s"$idx/sigs").count() == sigsBefore)
-    assert(spark.read.parquet(s"$idx/sigs")
-      .groupBy("doc_id").count().filter(col("count") > 1).isEmpty)
   }
 
   test("legacy sketch store without cell column still probes (unpruned fallback)") {
@@ -634,78 +647,80 @@ class StreamingSpec extends SparkSpec {
     // batch only) must not throw AnalysisException on resume — the probe
     // falls back to an unpruned corpus read
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_legacy").toString
-    val store = s"$dir/store"
-    val a = "the quick brown fox jumps over the lazy dog while the cat sleeps"
-    // hand-write a legacy-layout sketch store: per-band rows, batch dirs,
-    // NO cell column (what the pre-r6 writer produced)
-    val legacy = graft.streaming.StreamingContentDedup.getClass
-      .getDeclaredMethods.find(_.getName == "sketched").get
-    legacy.setAccessible(true)
-    val sk0 = legacy.invoke(graft.streaming.StreamingContentDedup,
-        Seq((1L, a)).toDF("doc_id", "text"))
-      .asInstanceOf[org.apache.spark.sql.DataFrame]
-      .drop("cell").withColumn("batch", lit(0L))
-    sk0.write.partitionBy("batch").parquet(s"$store/sketches")
-    Seq((1L, a)).toDF("doc_id", "text").withColumn("batch", lit(0L))
-      .write.partitionBy("batch").parquet(s"$store/docs")
-    // resume with the NEW writer: an exact dup of doc 1 plus a fresh doc
-    val b = "completely different content about spark partitions and shuffles at scale"
-    graft.streaming.StreamingContentDedup.processBatch(store)(
-      Seq((2L, a), (3L, b)).toDF("doc_id", "text"), 1L)
-    val admitted = spark.read.parquet(s"$store/docs")
-      .select("doc_id").as[Long].collect().toSet
-    assert(admitted == Set(1L, 3L), s"got $admitted")
+    withTempDir("graft_legacy") { dir =>
+      val store = s"$dir/store"
+      val a = "the quick brown fox jumps over the lazy dog while the cat sleeps"
+      // hand-write a legacy-layout sketch store: per-band rows, batch dirs,
+      // NO cell column (what the pre-r6 writer produced)
+      val legacy = graft.streaming.StreamingContentDedup.getClass
+        .getDeclaredMethods.find(_.getName == "sketched").get
+      legacy.setAccessible(true)
+      val sk0 = legacy.invoke(graft.streaming.StreamingContentDedup,
+          Seq((1L, a)).toDF("doc_id", "text"))
+        .asInstanceOf[org.apache.spark.sql.DataFrame]
+        .drop("cell").withColumn("batch", lit(0L))
+      sk0.write.partitionBy("batch").parquet(s"$store/sketches")
+      Seq((1L, a)).toDF("doc_id", "text").withColumn("batch", lit(0L))
+        .write.partitionBy("batch").parquet(s"$store/docs")
+      // resume with the NEW writer: an exact dup of doc 1 plus a fresh doc
+      val b = "completely different content about spark partitions and shuffles at scale"
+      graft.streaming.StreamingContentDedup.processBatch(store)(
+        Seq((2L, a), (3L, b)).toDF("doc_id", "text"), 1L)
+      val admitted = spark.read.parquet(s"$store/docs")
+        .select("doc_id").as[Long].collect().toSet
+      assert(admitted == Set(1L, 3L), s"got $admitted")
+    }
   }
 
   test("streaming vector search answers each batch identically to the indexed point probe") {
     implicit val sqlCtx = spark.sqlContext
     import graft.streaming.StreamingVectorSearch
-    val dir = java.nio.file.Files.createTempDirectory("graft_svsearch").toString
-    val idx = s"$dir/index"
-    graft.operators.IndexedVectorStore.build(
-      spark, Tables.t(spark, sf, "embeddings"), idx)
-    // query stream = six of the store's own vectors, so every streamed
-    // answer has an exact reference: IndexedVectorStore.search on the
-    // same id probes the same cells with the same scoring
-    val qids = Seq(0L, 7L, 42L, 111L, 256L, 499L)
-    val qvecs = Tables.t(spark, sf, "embeddings")
-      .filter(col("vec_id").isin(qids: _*))
-      .select(col("vec_id").as("qid"), col("embedding"))
-      .as[(Long, Array[Float])].collect()
-    val mem = MemoryStream[(Long, Array[Float])]
-    def go(): Unit = {
-      val q = StreamingVectorSearch.start(
-        mem.toDF().toDF("qid", "embedding"), idx, s"$dir/out", s"$dir/ckpt",
-        k = 10)
-      q.awaitTermination()
+    withTempDir("graft_svsearch") { dir =>
+      val idx = s"$dir/index"
+      graft.operators.IndexedVectorStore.build(
+        spark, Tables.t(spark, sf, "embeddings"), idx)
+      // query stream = six of the store's own vectors, so every streamed
+      // answer has an exact reference: IndexedVectorStore.search on the
+      // same id probes the same cells with the same scoring
+      val qids = Seq(0L, 7L, 42L, 111L, 256L, 499L)
+      val qvecs = Tables.t(spark, sf, "embeddings")
+        .filter(col("vec_id").isin(qids: _*))
+        .select(col("vec_id").as("qid"), col("embedding"))
+        .as[(Long, Array[Float])].collect()
+      val mem = MemoryStream[(Long, Array[Float])]
+      def go(): Unit = {
+        val q = StreamingVectorSearch.start(
+          mem.toDF().toDF("qid", "embedding"), idx, s"$dir/out", s"$dir/ckpt",
+          k = 10)
+        q.awaitTermination()
+      }
+      val (a, b) = qvecs.splitAt(3)
+      mem.addData(a.toIndexedSeq); go() // restart at the batch boundary
+      mem.addData(b.toIndexedSeq); go()
+      val got = spark.read.parquet(s"$dir/out/batch=*")
+        .select("qid", "rank", "vec_id", "label")
+        .collect()
+        .groupBy(_.getAs[Long]("qid"))
+        .view.mapValues(_.map(r => (r.getAs[Int]("rank"),
+          r.getAs[Long]("vec_id"), r.getAs[String]("label"))).sortBy(_._1).toSeq)
+        .toMap
+      assert(got.keySet == qids.toSet)
+      qids.foreach { q =>
+        val want = graft.operators.IndexedVectorStore.search(spark, idx, q, 10)
+          .collect().map(r => (r.getAs[Int]("rank"),
+            r.getAs[Long]("vec_id"), r.getAs[String]("label"))).toSeq
+        assert(got(q) == want, s"qid $q: stream=${got(q)} point=$want")
+        // the query's own vector is in the store: it must rank first
+        assert(got(q).head._2 == q)
+      }
+      // the probe scan must partition-prune on the store's cell dirs
+      val batch = qvecs.take(3).toSeq.toDF("qid", "embedding")
+      val plan = StreamingVectorSearch.answerBatch(spark, idx, batch, 10)
+        .queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode)
+      assert(plan.contains("PartitionFilters") && plan.contains("bucket"),
+        s"probe scan not partition-pruned:\n$plan")
     }
-    val (a, b) = qvecs.splitAt(3)
-    mem.addData(a.toIndexedSeq); go() // restart at the batch boundary
-    mem.addData(b.toIndexedSeq); go()
-    val got = spark.read.parquet(s"$dir/out/batch=*")
-      .select("qid", "rank", "vec_id", "label")
-      .collect()
-      .groupBy(_.getAs[Long]("qid"))
-      .view.mapValues(_.map(r => (r.getAs[Int]("rank"),
-        r.getAs[Long]("vec_id"), r.getAs[String]("label"))).sortBy(_._1).toSeq)
-      .toMap
-    assert(got.keySet == qids.toSet)
-    qids.foreach { q =>
-      val want = graft.operators.IndexedVectorStore.search(spark, idx, q, 10)
-        .collect().map(r => (r.getAs[Int]("rank"),
-          r.getAs[Long]("vec_id"), r.getAs[String]("label"))).toSeq
-      assert(got(q) == want, s"qid $q: stream=${got(q)} point=$want")
-      // the query's own vector is in the store: it must rank first
-      assert(got(q).head._2 == q)
-    }
-    // the probe scan must partition-prune on the store's cell dirs
-    val batch = qvecs.take(3).toSeq.toDF("qid", "embedding")
-    val plan = StreamingVectorSearch.answerBatch(spark, idx, batch, 10)
-      .queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-    assert(plan.contains("PartitionFilters") && plan.contains("bucket"),
-      s"probe scan not partition-pruned:\n$plan")
   }
 
   test("streaming vector search: injected crashes around the batch write all replay to the clean answers") {
@@ -723,35 +738,36 @@ class StreamingSpec extends SparkSpec {
       .select(col("vec_id").as("qid"), col("embedding"))
       .as[(Long, Array[Float])].collect()
     def runScenario(crashAt: Option[Int]): Set[(Long, Int, Long)] = {
-      val dir = java.nio.file.Files.createTempDirectory("graft_svcrash").toString
-      val idx = s"$dir/index"
-      graft.operators.IndexedVectorStore.build(
-        spark, Tables.t(spark, sf, "embeddings"), idx)
-      val mem = MemoryStream[(Long, Array[Float])]
-      def go(): Unit = {
-        val q = StreamingVectorSearch.start(
-          mem.toDF().toDF("qid", "embedding"), idx, s"$dir/out", s"$dir/ckpt",
-          k = 5)
-        q.awaitTermination()
-      }
-      mem.addData(qvecs.take(1).toIndexedSeq); go() // batch 0 always clean
-      var fired = false
-      StreamingVectorSearch.servingFault = i =>
-        if (crashAt.contains(i)) {
-          fired = true; throw new RuntimeException(s"injected crash at op $i")
+      withTempDir("graft_svcrash") { dir =>
+        val idx = s"$dir/index"
+        graft.operators.IndexedVectorStore.build(
+          spark, Tables.t(spark, sf, "embeddings"), idx)
+        val mem = MemoryStream[(Long, Array[Float])]
+        def go(): Unit = {
+          val q = StreamingVectorSearch.start(
+            mem.toDF().toDF("qid", "embedding"), idx, s"$dir/out", s"$dir/ckpt",
+            k = 5)
+          q.awaitTermination()
         }
-      mem.addData(qvecs.drop(1).toIndexedSeq)
-      try go() catch { case _: Exception => () } finally {
-        StreamingVectorSearch.servingFault = _ => ()
+        mem.addData(qvecs.take(1).toIndexedSeq); go() // batch 0 always clean
+        var fired = false
+        StreamingVectorSearch.servingFault = i =>
+          if (crashAt.contains(i)) {
+            fired = true; throw new RuntimeException(s"injected crash at op $i")
+          }
+        mem.addData(qvecs.drop(1).toIndexedSeq)
+        try go() catch { case _: Exception => () } finally {
+          StreamingVectorSearch.servingFault = _ => ()
+        }
+        if (crashAt.isDefined) {
+          assert(fired, "crash point never reached — op map changed")
+          go() // replay batch 1 from the checkpoint
+        }
+        spark.read.parquet(s"$dir/out/batch=*")
+          .select("qid", "rank", "vec_id").collect()
+          .map(r => (r.getAs[Long]("qid"), r.getAs[Int]("rank"),
+            r.getAs[Long]("vec_id"))).toSet
       }
-      if (crashAt.isDefined) {
-        assert(fired, "crash point never reached — op map changed")
-        go() // replay batch 1 from the checkpoint
-      }
-      spark.read.parquet(s"$dir/out/batch=*")
-        .select("qid", "rank", "vec_id").collect()
-        .map(r => (r.getAs[Long]("qid"), r.getAs[Int]("rank"),
-          r.getAs[Long]("vec_id"))).toSet
     }
     val clean = runScenario(None)
     assert(clean.map(_._1) == qids.toSet, "clean run missing queries")
@@ -764,8 +780,7 @@ class StreamingSpec extends SparkSpec {
     import graft.streaming.StreamingCompaction
     def rows(i: Int): Seq[(Long, String)] =
       (i * 10 until i * 10 + 10).map(k => (k.toLong, s"payload_$k" * 40))
-    def runScenario(crashAt: Option[Int]): (Set[Long], String) = {
-      val dir = java.nio.file.Files.createTempDirectory("graft_scompact").toString
+    def runScenario(crashAt: Option[Int], dir: String): (Set[Long], String) = {
       val table = s"$dir/table"
       val mem = MemoryStream[(Long, String)]
       def go(): Unit = {
@@ -798,32 +813,34 @@ class StreamingSpec extends SparkSpec {
       assert(ids.length == ids.distinct.length, "compaction duplicated rows")
       (ids.toSet, table)
     }
-    val (clean, cleanTable) = runScenario(None)
-    assert(clean == (0L until 60L).toSet, "clean run lost rows")
-    // physical layout after the second compaction: exactly one data file
-    // per bin dir, live holds nothing (batch 5 was consumed), and every
-    // bin's ACTUAL byte total respects the packing bound
-    val base = new java.io.File(s"$cleanTable/v2")
-    assert(base.isDirectory, "expected base version v2")
-    val binDirs = base.listFiles().filter(_.isDirectory)
-      .filter(_.getName.startsWith("bin="))
-    assert(binDirs.nonEmpty)
-    val sizes = binDirs.map { b =>
-      val fs = b.listFiles().filter(_.getName.endsWith(".parquet"))
-      assert(fs.length == 1, s"${b.getName}: ${fs.length} files")
-      fs.head.length()
-    }
-    assert(sizes.sum > 0 && sizes.forall(_ < 8192 + sizes.max))
-    assert(!new java.io.File(s"$cleanTable/live").exists() ||
-      new java.io.File(s"$cleanTable/live").listFiles().isEmpty)
-    // crash before the pointer commit and after it: both replay to the
-    // clean result, and the second compaction sweeps all debris
-    for (k <- 0 to 1) {
-      val (got, table) = runScenario(Some(k))
-      assert(got == clean, s"crash at op $k diverged")
-      val vdirs = new java.io.File(table).listFiles()
-        .filter(_.isDirectory).map(_.getName).filter(_.startsWith("v")).toSet
-      assert(vdirs.size == 1, s"crash at op $k left stale versions: $vdirs")
+    withTempDir("graft_scompact") { cleanDir =>
+      val (clean, cleanTable) = runScenario(None, cleanDir)
+      assert(clean == (0L until 60L).toSet, "clean run lost rows")
+      // physical layout after the second compaction: exactly one data file
+      // per bin dir, live holds nothing (batch 5 was consumed), and every
+      // bin's ACTUAL byte total respects the packing bound
+      val base = new java.io.File(s"$cleanTable/v2")
+      assert(base.isDirectory, "expected base version v2")
+      val binDirs = base.listFiles().filter(_.isDirectory)
+        .filter(_.getName.startsWith("bin="))
+      assert(binDirs.nonEmpty)
+      val sizes = binDirs.map { b =>
+        val fs = b.listFiles().filter(_.getName.endsWith(".parquet"))
+        assert(fs.length == 1, s"${b.getName}: ${fs.length} files")
+        fs.head.length()
+      }
+      assert(sizes.sum > 0 && sizes.forall(_ < 8192 + sizes.max))
+      assert(!new java.io.File(s"$cleanTable/live").exists() ||
+        new java.io.File(s"$cleanTable/live").listFiles().isEmpty)
+      // crash before the pointer commit and after it: both replay to the
+      // clean result, and the second compaction sweeps all debris
+      for (k <- 0 to 1) withTempDir("graft_scompact") { dir =>
+        val (got, table) = runScenario(Some(k), dir)
+        assert(got == clean, s"crash at op $k diverged")
+        val vdirs = new java.io.File(table).listFiles()
+          .filter(_.isDirectory).map(_.getName).filter(_.startsWith("v")).toSet
+        assert(vdirs.size == 1, s"crash at op $k left stale versions: $vdirs")
+      }
     }
   }
 
@@ -833,41 +850,42 @@ class StreamingSpec extends SparkSpec {
     // or every subsequent read/ingest on the table throws forever
     implicit val sqlCtx = spark.sqlContext
     import graft.streaming.StreamingCompaction
-    val dir = java.nio.file.Files.createTempDirectory("graft_torn").toString
-    val table = s"$dir/table"
-    def batch(i: Int) = (i * 10 until i * 10 + 10)
-      .map(k => (k.toLong, s"p_$k" * 30)).toDF("id", "payload")
-    (0 to 2).foreach(i => // batch 2 trips maxLive=3 -> compaction -> v1
-      StreamingCompaction.processBatch(table, 8192, 3)(batch(i), i.toLong))
-    assert(new java.io.File(s"$table/v1").isDirectory)
-    // ADVICE r8: beyond unparseable fragments, a torn-but-PARSEABLE
-    // truncation ("v=2;upTo=1" cut from "v=2;upTo=12") and a payload
-    // whose crc does not seal its body must both read as absent — the
-    // write-ahead trusts only fully-written states
-    for (torn <- Seq("", "v=", "v=2;upT", "v=2;upTo=1",
-      "v=2;upTo=1;crc=deadbeef")) {
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$table/_CURRENT.tmp"), torn.getBytes)
-      val ids = StreamingCompaction.snapshot(spark, table)
-        .select("id").as[Long].collect().toSet
-      assert(ids == (0L until 30L).toSet, s"torn tmp '$torn' broke reads")
+    withTempDir("graft_torn") { dir =>
+      val table = s"$dir/table"
+      def batch(i: Int) = (i * 10 until i * 10 + 10)
+        .map(k => (k.toLong, s"p_$k" * 30)).toDF("id", "payload")
+      (0 to 2).foreach(i => // batch 2 trips maxLive=3 -> compaction -> v1
+        StreamingCompaction.processBatch(table, 8192, 3)(batch(i), i.toLong))
+      assert(new java.io.File(s"$table/v1").isDirectory)
+      // ADVICE r8: beyond unparseable fragments, a torn-but-PARSEABLE
+      // truncation ("v=2;upTo=1" cut from "v=2;upTo=12") and a payload
+      // whose crc does not seal its body must both read as absent — the
+      // write-ahead trusts only fully-written states
+      for (torn <- Seq("", "v=", "v=2;upT", "v=2;upTo=1",
+        "v=2;upTo=1;crc=deadbeef")) {
+        java.nio.file.Files.write(
+          java.nio.file.Paths.get(s"$table/_CURRENT.tmp"), torn.getBytes)
+        val ids = StreamingCompaction.snapshot(spark, table)
+          .select("id").as[Long].collect().toSet
+        assert(ids == (0L until 30L).toSet, s"torn tmp '$torn' broke reads")
+      }
+      // and the table still ingests + compacts past the debris
+      (3 to 5).foreach(i =>
+        StreamingCompaction.processBatch(table, 8192, 3)(batch(i), i.toLong))
+      assert(StreamingCompaction.snapshot(spark, table)
+        .select("id").as[Long].collect().toSet == (0L until 60L).toSet)
+      // migration: a MAIN pointer written by the pre-crc code (unsealed,
+      // rename-atomic so never torn) must still parse — demanding the seal
+      // there would reset a healthy table to v0 and let the next
+      // compact+sweep destroy the base
+      val current = java.nio.file.Paths.get(s"$table/_CURRENT")
+      val sealed_ = new String(java.nio.file.Files.readAllBytes(current), "UTF-8")
+      java.nio.file.Files.write(current,
+        sealed_.substring(0, sealed_.lastIndexOf(";crc=")).getBytes("UTF-8"))
+      assert(StreamingCompaction.snapshot(spark, table)
+        .select("id").as[Long].collect().toSet == (0L until 60L).toSet,
+        "unsealed legacy _CURRENT no longer parses")
     }
-    // and the table still ingests + compacts past the debris
-    (3 to 5).foreach(i =>
-      StreamingCompaction.processBatch(table, 8192, 3)(batch(i), i.toLong))
-    assert(StreamingCompaction.snapshot(spark, table)
-      .select("id").as[Long].collect().toSet == (0L until 60L).toSet)
-    // migration: a MAIN pointer written by the pre-crc code (unsealed,
-    // rename-atomic so never torn) must still parse — demanding the seal
-    // there would reset a healthy table to v0 and let the next
-    // compact+sweep destroy the base
-    val current = java.nio.file.Paths.get(s"$table/_CURRENT")
-    val sealed_ = new String(java.nio.file.Files.readAllBytes(current), "UTF-8")
-    java.nio.file.Files.write(current,
-      sealed_.substring(0, sealed_.lastIndexOf(";crc=")).getBytes("UTF-8"))
-    assert(StreamingCompaction.snapshot(spark, table)
-      .select("id").as[Long].collect().toSet == (0L until 60L).toSet,
-      "unsealed legacy _CURRENT no longer parses")
   }
 
   test("streaming compaction: full bins carry forward by link, not rewrite") {
@@ -877,61 +895,63 @@ class StreamingSpec extends SparkSpec {
     // under-filled tail + live batches, not the whole table
     implicit val sqlCtx = spark.sqlContext
     import graft.streaming.StreamingCompaction
-    val dir = java.nio.file.Files.createTempDirectory("graft_carry").toString
-    val table = s"$dir/table"
-    // ~3 KB incompressible payload per row -> every batch file > target
-    def batch(i: Int) = (i * 10 until i * 10 + 10).map { k =>
-      val s = (1 to 3000).map(j => ('a' + ((k * 31 + j * 17) % 26)).toChar)
-        .mkString
-      (k.toLong, s)
-    }.toDF("id", "payload")
-    def ino(p: java.nio.file.Path): Any =
-      java.nio.file.Files.getAttribute(p, "unix:ino")
-    def binFiles(v: String): Map[String, java.nio.file.Path] =
-      new java.io.File(s"$table/$v").listFiles()
-        .filter(f => f.isDirectory && f.getName.startsWith("bin="))
-        .flatMap(_.listFiles().filter(_.getName.endsWith(".parquet")))
-        .map(f => f.getName -> f.toPath).toMap
-    (0 to 2).foreach(i => // all three live files >= target -> all carried
-      StreamingCompaction.processBatch(table, 2048, 3)(batch(i), i.toLong))
-    val v1 = binFiles("v1")
-    assert(v1.size == 3, s"expected 3 carried bins in v1, got ${v1.keySet}")
-    val v1Inodes = v1.map { case (n, p) => n -> ino(p) }
-    (3 to 5).foreach(i => // second cycle: v1's 3 files must carry again
-      StreamingCompaction.processBatch(table, 2048, 3)(batch(i), i.toLong))
-    val v2 = binFiles("v2")
-    assert(v2.size == 6, s"expected 6 bins in v2, got ${v2.keySet}")
-    v1Inodes.foreach { case (name, inode) =>
-      assert(v2.contains(name), s"carried file $name missing from v2")
-      assert(ino(v2(name)) == inode,
-        s"$name was rewritten (new inode), not carried by link")
+    withTempDir("graft_carry") { dir =>
+      val table = s"$dir/table"
+      // ~3 KB incompressible payload per row -> every batch file > target
+      def batch(i: Int) = (i * 10 until i * 10 + 10).map { k =>
+        val s = (1 to 3000).map(j => ('a' + ((k * 31 + j * 17) % 26)).toChar)
+          .mkString
+        (k.toLong, s)
+      }.toDF("id", "payload")
+      def ino(p: java.nio.file.Path): Any =
+        java.nio.file.Files.getAttribute(p, "unix:ino")
+      def binFiles(v: String): Map[String, java.nio.file.Path] =
+        new java.io.File(s"$table/$v").listFiles()
+          .filter(f => f.isDirectory && f.getName.startsWith("bin="))
+          .flatMap(_.listFiles().filter(_.getName.endsWith(".parquet")))
+          .map(f => f.getName -> f.toPath).toMap
+      (0 to 2).foreach(i => // all three live files >= target -> all carried
+        StreamingCompaction.processBatch(table, 2048, 3)(batch(i), i.toLong))
+      val v1 = binFiles("v1")
+      assert(v1.size == 3, s"expected 3 carried bins in v1, got ${v1.keySet}")
+      val v1Inodes = v1.map { case (n, p) => n -> ino(p) }
+      (3 to 5).foreach(i => // second cycle: v1's 3 files must carry again
+        StreamingCompaction.processBatch(table, 2048, 3)(batch(i), i.toLong))
+      val v2 = binFiles("v2")
+      assert(v2.size == 6, s"expected 6 bins in v2, got ${v2.keySet}")
+      v1Inodes.foreach { case (name, inode) =>
+        assert(v2.contains(name), s"carried file $name missing from v2")
+        assert(ino(v2(name)) == inode,
+          s"$name was rewritten (new inode), not carried by link")
+      }
+      // and the committed view is still exactly the ingested rows
+      assert(StreamingCompaction.snapshot(spark, table)
+        .select("id").as[Long].collect().toSet == (0L until 60L).toSet)
     }
-    // and the committed view is still exactly the ingested rows
-    assert(StreamingCompaction.snapshot(spark, table)
-      .select("id").as[Long].collect().toSet == (0L until 60L).toSet)
   }
 
   test("checkpoint-resume: restarted query does not recount processed data") {
     implicit val sqlCtx = spark.sqlContext
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-    val mem = MemoryStream[Ev]
-    val agg = mem.toDF().groupBy("user_id").agg(count(lit(1)).as("n"))
+    withTempDir("graft_ckpt") { ckpt =>
+      val mem = MemoryStream[Ev]
+      val agg = mem.toDF().groupBy("user_id").agg(count(lit(1)).as("n"))
 
-    mem.addData(Ev(1, ts("2024-01-01 00:00:00"), 1, "click", 1.0))
-    val q1 = agg.writeStream.format("memory").queryName("ckpt_out1")
-      .outputMode("complete").option("checkpointLocation", ckpt).start()
-    q1.processAllAvailable(); q1.stop()
-    assert(spark.table("ckpt_out1").filter(col("user_id") === 1)
-      .head().getAs[Long]("n") == 1L)
+      mem.addData(Ev(1, ts("2024-01-01 00:00:00"), 1, "click", 1.0))
+      val q1 = agg.writeStream.format("memory").queryName("ckpt_out1")
+        .outputMode("complete").option("checkpointLocation", ckpt).start()
+      q1.processAllAvailable(); q1.stop()
+      assert(spark.table("ckpt_out1").filter(col("user_id") === 1)
+        .head().getAs[Long]("n") == 1L)
 
-    // restart from the same checkpoint; add one more event
-    mem.addData(Ev(2, ts("2024-01-01 00:01:00"), 1, "click", 1.0))
-    val q2 = agg.writeStream.format("memory").queryName("ckpt_out2")
-      .outputMode("complete").option("checkpointLocation", ckpt).start()
-    q2.processAllAvailable(); q2.stop()
-    // state restored (1) + new event (1) = 2 — not 1, not 3
-    assert(spark.table("ckpt_out2").filter(col("user_id") === 1)
-      .head().getAs[Long]("n") == 2L)
+      // restart from the same checkpoint; add one more event
+      mem.addData(Ev(2, ts("2024-01-01 00:01:00"), 1, "click", 1.0))
+      val q2 = agg.writeStream.format("memory").queryName("ckpt_out2")
+        .outputMode("complete").option("checkpointLocation", ckpt).start()
+      q2.processAllAvailable(); q2.stop()
+      // state restored (1) + new event (1) = 2 — not 1, not 3
+      assert(spark.table("ckpt_out2").filter(col("user_id") === 1)
+        .head().getAs[Long]("n") == 2L)
+    }
   }
 
   test("streaming percolation fires the q151 rules per batch, across a restart") {
@@ -941,48 +961,49 @@ class StreamingSpec extends SparkSpec {
     // boundary; the accumulated (doc, rule) matches must equal an
     // independent per-doc scan and aggregate to q151's counts.
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_perc").toString
-    val stored = operators.RetrievalOps.storedQueriesMulti(spark, sf)
-      .select(col("qid"), col("n_required"),
-        array_compact(array(col("term1"), col("term2"), col("term3")))
-          .as("terms"))
-      .localCheckpoint() // freeze the registry (window over corpus stats)
-    val docs = Tables.t(spark, sf, "documents")
-      .select(col("doc_id"), col("text")).as[(Long, String)].collect()
-    val mem = MemoryStream[(Long, String)]
-    def go(): Unit = {
-      // each go() is a NEW query resuming from the checkpoint: the batch
-      // boundary is also a restart boundary (stateless op — trivially
-      // exactly-once)
-      val q = graft.streaming.StreamingOps
-        .percolateStream(mem.toDF().toDF("doc_id", "text"), stored)
-        .writeStream.format("parquet")
-        .option("path", s"$dir/matches")
-        .option("checkpointLocation", s"$dir/ckpt")
-        .start()
-      q.processAllAvailable(); q.stop()
+    withTempDir("graft_perc") { dir =>
+      val stored = operators.RetrievalOps.storedQueriesMulti(spark, sf)
+        .select(col("qid"), col("n_required"),
+          array_compact(array(col("term1"), col("term2"), col("term3")))
+            .as("terms"))
+        .localCheckpoint() // freeze the registry (window over corpus stats)
+      val docs = Tables.t(spark, sf, "documents")
+        .select(col("doc_id"), col("text")).as[(Long, String)].collect()
+      val mem = MemoryStream[(Long, String)]
+      def go(): Unit = {
+        // each go() is a NEW query resuming from the checkpoint: the batch
+        // boundary is also a restart boundary (stateless op — trivially
+        // exactly-once)
+        val q = graft.streaming.StreamingOps
+          .percolateStream(mem.toDF().toDF("doc_id", "text"), stored)
+          .writeStream.format("parquet")
+          .option("path", s"$dir/matches")
+          .option("checkpointLocation", s"$dir/ckpt")
+          .start()
+        q.processAllAvailable(); q.stop()
+      }
+      val (a, b) = docs.splitAt(docs.length / 2)
+      mem.addData(a.toIndexedSeq); go()
+      mem.addData(b.toIndexedSeq); go()
+      val got = spark.read.parquet(s"$dir/matches")
+        .select("doc_id", "qid").as[(Long, Long)].collect().toSet
+      // independent pin: plain Scala over the collected docs + registry
+      val reg = stored.collect().map(r => (r.getAs[Long]("qid"),
+        r.getAs[Long]("n_required"), r.getAs[Seq[String]]("terms").toSet))
+      val want = (for {
+        (id, text) <- docs
+        toks = text.toLowerCase.split(" ").toSet
+        (qid, nReq, terms) <- reg
+        if terms.count(toks) == nReq
+      } yield (id, qid)).toSet
+      assert(want.nonEmpty && got == want)
+      // and the per-rule totals equal the q151 registry row
+      val q151 = QueryRegistry.byName("q151_percolate_multiterm")
+        .fn(spark, sf).collect()
+        .map(r => r.getAs[Long]("qid") -> r.getAs[Long]("n_matching_docs")).toMap
+      val counts = got.groupBy(_._2).view.mapValues(_.size.toLong).toMap
+      assert(q151.forall { case (qid, n) => counts.getOrElse(qid, 0L) == n })
     }
-    val (a, b) = docs.splitAt(docs.length / 2)
-    mem.addData(a.toIndexedSeq); go()
-    mem.addData(b.toIndexedSeq); go()
-    val got = spark.read.parquet(s"$dir/matches")
-      .select("doc_id", "qid").as[(Long, Long)].collect().toSet
-    // independent pin: plain Scala over the collected docs + registry
-    val reg = stored.collect().map(r => (r.getAs[Long]("qid"),
-      r.getAs[Long]("n_required"), r.getAs[Seq[String]]("terms").toSet))
-    val want = (for {
-      (id, text) <- docs
-      toks = text.toLowerCase.split(" ").toSet
-      (qid, nReq, terms) <- reg
-      if terms.count(toks) == nReq
-    } yield (id, qid)).toSet
-    assert(want.nonEmpty && got == want)
-    // and the per-rule totals equal the q151 registry row
-    val q151 = QueryRegistry.byName("q151_percolate_multiterm")
-      .fn(spark, sf).collect()
-      .map(r => r.getAs[Long]("qid") -> r.getAs[Long]("n_matching_docs")).toMap
-    val counts = got.groupBy(_._2).view.mapValues(_.size.toLong).toMap
-    assert(q151.forall { case (qid, n) => counts.getOrElse(qid, 0L) == n })
   }
 
   test("streaming percolation honors negation rules (q155 registry)") {
@@ -1223,124 +1244,125 @@ class StreamingSpec extends SparkSpec {
       (((id * 31 + j * 17) % 97).toFloat / 97f) - 0.5f)
     def lifecycle(crash: Boolean): (Set[String], Set[Long],
         Map[Long, Seq[(Int, Long)]]) = {
-      val dir = java.nio.file.Files.createTempDirectory("graft_e2e").toString
-      val corpusDir = s"$dir/corpus"
-      // ---- stage 1: curation (3 micro-batches; batch 1 carries an
-      // exact dup, a fuzzy ±1-year dup, and the content near-dup)
-      val raw = MemoryStream[String]
-      def curate(): Unit = {
-        val q = StreamingCuration.start(
-          raw.toDF().withColumnRenamed("value", "raw"),
-          corpusDir, s"$dir/ckpt_cur")
-        q.awaitTermination()
-      }
-      raw.addData(movie("Alpha Dawn", 1990, pa), movie("Beta City", 1991, pb))
-      curate()
-      raw.addData(movie("alpha dawn", 1990, "exact dup"),
-        movie("Alpha Dawnn", 1991, "fuzzy dup"),
-        movie("Gamma Road", 1995, pg))
-      if (crash) { // crash inside the swap choreography, then replay
-        var fired = false
-        StreamingCuration.swapFault = i =>
-          if (i == 2) { fired = true; throw new RuntimeException("crash") }
-        try curate() catch { case _: Exception => () } finally {
-          StreamingCuration.swapFault = _ => ()
+      withTempDir("graft_e2e") { dir =>
+        val corpusDir = s"$dir/corpus"
+        // ---- stage 1: curation (3 micro-batches; batch 1 carries an
+        // exact dup, a fuzzy ±1-year dup, and the content near-dup)
+        val raw = MemoryStream[String]
+        def curate(): Unit = {
+          val q = StreamingCuration.start(
+            raw.toDF().withColumnRenamed("value", "raw"),
+            corpusDir, s"$dir/ckpt_cur")
+          q.awaitTermination()
         }
-        assert(fired, "curation crash point never reached")
-      }
-      curate()
-      raw.addData(movie("Delta Sea", 2001, pd),
-        movie("Beta Citty", 1990, "fuzzy dup of beta"))
-      curate()
-      val corpus = spark.read.parquet(corpusDir)
-        .select(col("year").cast("long").as("doc_id"), col("title"),
-          col("plot").as("text"))
-        .as[(Long, String, String)].collect().sortBy(_._1)
-      val titles = corpus.map(_._2).toSet
-      // ---- stage 2: content near-dup over the curated docs (doc_id =
-      // year — unique by construction), split in two insertion batches
-      val idx = s"$dir/index"
-      val docsMem = MemoryStream[(Long, String)]
-      def dedup(): Unit = {
-        val q = StreamingContentDedup.startIndexed(
-          docsMem.toDF().toDF("doc_id", "text"), idx, s"$dir/ckpt_dd")
-        q.awaitTermination()
-      }
-      val (older, newer) = corpus.map(c => (c._1, c._3)).partition(_._1 <= 1991)
-      docsMem.addData(older.toIndexedSeq); dedup()
-      docsMem.addData(newer.toIndexedSeq); dedup()
-      if (crash) // crash after batch 1's writes, before its commit:
-        StreamingContentDedup.processBatchIndexed(idx)( // replay must be
-          newer.toSeq.toDF("doc_id", "text"), 1L)       // idempotent
-      val verdicts = spark.read.parquet(s"$idx/verdicts")
-        // the batch partition column type-infers as int32
-        .select(col("doc_id"), col("dup_of"), col("batch").cast("long"))
-        .collect()
-        .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("dup_of"),
-          r.getAs[Long]("batch")))
-      val admitted = verdicts.filter(_._2 == -1L).map(_._1).toSet
-      val textOf = corpus.map(c => c._1 -> c._3).toMap
-      // ---- stage 3: admitted docs into the compacted doc table, one
-      // ingest batch per dedup batch; maxLive=2 -> batch 1 compacts
-      val table = s"$dir/table"
-      def ingest(b: Long): Unit = {
-        val ids = verdicts.filter(v => v._3 == b && v._2 == -1L).map(_._1)
-        StreamingCompaction.processBatch(table, 4096, 2)(
-          ids.map(i => (i, textOf(i))).toSeq.toDF("doc_id", "text"), b)
-      }
-      ingest(0L)
-      if (crash) {
-        var fired = false
-        StreamingCompaction.compactionFault = i =>
-          if (i == 0) { fired = true; throw new RuntimeException("crash") }
-        try ingest(1L) catch { case _: Exception => () } finally {
-          StreamingCompaction.compactionFault = _ => ()
+        raw.addData(movie("Alpha Dawn", 1990, pa), movie("Beta City", 1991, pb))
+        curate()
+        raw.addData(movie("alpha dawn", 1990, "exact dup"),
+          movie("Alpha Dawnn", 1991, "fuzzy dup"),
+          movie("Gamma Road", 1995, pg))
+        if (crash) { // crash inside the swap choreography, then replay
+          var fired = false
+          StreamingCuration.swapFault = i =>
+            if (i == 2) { fired = true; throw new RuntimeException("crash") }
+          try curate() catch { case _: Exception => () } finally {
+            StreamingCuration.swapFault = _ => ()
+          }
+          assert(fired, "curation crash point never reached")
         }
-        assert(fired, "compaction crash point never reached")
-      }
-      ingest(1L)
-      val snapshot = StreamingCompaction.snapshot(spark, table)
-        .select("doc_id").as[Long].collect().toSet
-      assert(snapshot == admitted,
-        s"compacted table $snapshot != admitted $admitted")
-      // ---- stage 4: serve ANN queries over the final table's embeddings
-      val store = s"$dir/vstore"
-      graft.operators.IndexedVectorStore.build(spark,
-        snapshot.toSeq.sorted.map(i => (i, emb(i), s"d$i"))
-          .toDF("vec_id", "embedding", "label"), store)
-      val qMem = MemoryStream[(Long, Array[Float])]
-      def serve(): Unit = {
-        val q = StreamingVectorSearch.start(
-          qMem.toDF().toDF("qid", "embedding"), store, s"$dir/answers",
-          s"$dir/ckpt_sv", k = 3)
-        q.awaitTermination()
-      }
-      qMem.addData((1990L, emb(1990L)), (2001L, emb(2001L)))
-      if (crash) {
-        var fired = false
-        StreamingVectorSearch.servingFault = i =>
-          if (i == 0) { fired = true; throw new RuntimeException("crash") }
-        try serve() catch { case _: Exception => () } finally {
-          StreamingVectorSearch.servingFault = _ => ()
+        curate()
+        raw.addData(movie("Delta Sea", 2001, pd),
+          movie("Beta Citty", 1990, "fuzzy dup of beta"))
+        curate()
+        val corpus = spark.read.parquet(corpusDir)
+          .select(col("year").cast("long").as("doc_id"), col("title"),
+            col("plot").as("text"))
+          .as[(Long, String, String)].collect().sortBy(_._1)
+        val titles = corpus.map(_._2).toSet
+        // ---- stage 2: content near-dup over the curated docs (doc_id =
+        // year — unique by construction), split in two insertion batches
+        val idx = s"$dir/index"
+        val docsMem = MemoryStream[(Long, String)]
+        def dedup(): Unit = {
+          val q = StreamingContentDedup.startIndexed(
+            docsMem.toDF().toDF("doc_id", "text"), idx, s"$dir/ckpt_dd")
+          q.awaitTermination()
         }
-        assert(fired, "serving crash point never reached")
+        val (older, newer) = corpus.map(c => (c._1, c._3)).partition(_._1 <= 1991)
+        docsMem.addData(older.toIndexedSeq); dedup()
+        docsMem.addData(newer.toIndexedSeq); dedup()
+        if (crash) // crash after batch 1's writes, before its commit:
+          StreamingContentDedup.processBatchIndexed(idx)( // replay must be
+            newer.toSeq.toDF("doc_id", "text"), 1L)       // idempotent
+        val verdicts = spark.read.parquet(s"$idx/verdicts")
+          // the batch partition column type-infers as int32
+          .select(col("doc_id"), col("dup_of"), col("batch").cast("long"))
+          .collect()
+          .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("dup_of"),
+            r.getAs[Long]("batch")))
+        val admitted = verdicts.filter(_._2 == -1L).map(_._1).toSet
+        val textOf = corpus.map(c => c._1 -> c._3).toMap
+        // ---- stage 3: admitted docs into the compacted doc table, one
+        // ingest batch per dedup batch; maxLive=2 -> batch 1 compacts
+        val table = s"$dir/table"
+        def ingest(b: Long): Unit = {
+          val ids = verdicts.filter(v => v._3 == b && v._2 == -1L).map(_._1)
+          StreamingCompaction.processBatch(table, 4096, 2)(
+            ids.map(i => (i, textOf(i))).toSeq.toDF("doc_id", "text"), b)
+        }
+        ingest(0L)
+        if (crash) {
+          var fired = false
+          StreamingCompaction.compactionFault = i =>
+            if (i == 0) { fired = true; throw new RuntimeException("crash") }
+          try ingest(1L) catch { case _: Exception => () } finally {
+            StreamingCompaction.compactionFault = _ => ()
+          }
+          assert(fired, "compaction crash point never reached")
+        }
+        ingest(1L)
+        val snapshot = StreamingCompaction.snapshot(spark, table)
+          .select("doc_id").as[Long].collect().toSet
+        assert(snapshot == admitted,
+          s"compacted table $snapshot != admitted $admitted")
+        // ---- stage 4: serve ANN queries over the final table's embeddings
+        val store = s"$dir/vstore"
+        graft.operators.IndexedVectorStore.build(spark,
+          snapshot.toSeq.sorted.map(i => (i, emb(i), s"d$i"))
+            .toDF("vec_id", "embedding", "label"), store)
+        val qMem = MemoryStream[(Long, Array[Float])]
+        def serve(): Unit = {
+          val q = StreamingVectorSearch.start(
+            qMem.toDF().toDF("qid", "embedding"), store, s"$dir/answers",
+            s"$dir/ckpt_sv", k = 3)
+          q.awaitTermination()
+        }
+        qMem.addData((1990L, emb(1990L)), (2001L, emb(2001L)))
+        if (crash) {
+          var fired = false
+          StreamingVectorSearch.servingFault = i =>
+            if (i == 0) { fired = true; throw new RuntimeException("crash") }
+          try serve() catch { case _: Exception => () } finally {
+            StreamingVectorSearch.servingFault = _ => ()
+          }
+          assert(fired, "serving crash point never reached")
+        }
+        serve()
+        val served = spark.read.parquet(s"$dir/answers/batch=*")
+          .select("qid", "rank", "vec_id").collect()
+          .groupBy(_.getAs[Long]("qid"))
+          .view.mapValues(_.map(r => (r.getAs[Int]("rank"),
+            r.getAs[Long]("vec_id"))).sortBy(_._1).toSeq).toMap
+        // served answers == the batch pipeline's point probe on the SAME
+        // final store
+        served.keys.foreach { q =>
+          val want = graft.operators.IndexedVectorStore
+            .search(spark, store, q, 3).collect()
+            .map(r => (r.getAs[Int]("rank"), r.getAs[Long]("vec_id"))).toSeq
+          assert(served(q) == want, s"qid $q: served=${served(q)} batch=$want")
+          assert(served(q).head._2 == q, s"qid $q does not rank itself first")
+        }
+        (titles, admitted, served)
       }
-      serve()
-      val served = spark.read.parquet(s"$dir/answers/batch=*")
-        .select("qid", "rank", "vec_id").collect()
-        .groupBy(_.getAs[Long]("qid"))
-        .view.mapValues(_.map(r => (r.getAs[Int]("rank"),
-          r.getAs[Long]("vec_id"))).sortBy(_._1).toSeq).toMap
-      // served answers == the batch pipeline's point probe on the SAME
-      // final store
-      served.keys.foreach { q =>
-        val want = graft.operators.IndexedVectorStore
-          .search(spark, store, q, 3).collect()
-          .map(r => (r.getAs[Int]("rank"), r.getAs[Long]("vec_id"))).toSeq
-        assert(served(q) == want, s"qid $q: served=${served(q)} batch=$want")
-        assert(served(q).head._2 == q, s"qid $q does not rank itself first")
-      }
-      (titles, admitted, served)
     }
     val clean = lifecycle(crash = false)
     // stage-level expectations by construction
