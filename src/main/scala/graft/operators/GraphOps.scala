@@ -18,17 +18,17 @@ import org.apache.spark.sql.functions._
   * `(17*s) div 20`, teleport base `150000 div N`. Dangling-node mass is
   * dropped (the standard simplification; identical on both engines).
   *
-  * Scale shape: while the node spine fits under `BroadcastRowLimit`, each
-  * superstep is ONE Spark job over cached primitive edge arrays
-  * ([[DenseSuperstep]]): every partition sums the per-edge contributions
-  * `r div od` into a dense node-indexed `long` array against the broadcast
-  * contribution vector, the partial arrays are summed exactly on the
-  * driver, and the driver computes the next ranks. Nothing is shuffled
-  * after the edge list is read once. Past the gate, one superstep is
-  * edges ⋈ ranks ⋈ out-degrees (shuffle keyed by src) → one hash
-  * aggregation keyed by dst — q121's label-propagation physique with a
-  * different per-round combine. Both paths give the same integer ranks:
-  * long addition is associative.
+  * Scale shape: the node spine is `nation`, 25 rows at every scale
+  * factor, so each superstep is ONE Spark job over cached primitive edge
+  * arrays ([[pageRankDense]] on [[DenseSuperstep]]): every partition sums
+  * the per-edge contributions `r div od` into a dense node-indexed `long`
+  * array against the broadcast contribution vector, the partial arrays are
+  * summed exactly on the driver, and the driver computes the next ranks.
+  * Nothing is shuffled after the edge list is read once. The same kernel
+  * serves q154's customer graph while it fits under `BroadcastRowLimit`;
+  * past the gate q154 runs the shuffle-keyed join superstep
+  * ([[pageRankRanksChecked]]), which gives the same integer ranks: long
+  * addition is associative.
   */
 object GraphOps {
 
@@ -38,9 +38,9 @@ object GraphOps {
     * `broadcast()` hint OVERRIDES Spark's size check, so a hard-pinned
     * hint — correct for the 25-node nation graph — would ship a
     * billion-node rank table to every executor (or OOM the driver
-    * collecting it) on a real graph. Every node-sized broadcast below —
-    * q137/q148's conditional hints and PageRank's dense superstep state —
-    * is therefore CONDITIONAL on the measured row count of the table being
+    * collecting it) on a real graph. Every broadcast below whose size
+    * grows with the data — q137/q148's conditional hints and q154's dense
+    * superstep state — is therefore CONDITIONAL on the measured row count of the table being
     * shipped: under the limit it broadcasts, over it the joins run
     * shuffle-keyed — the q81/q121 label-propagation physique, which
     * already runs un-broadcast over ~50k doc nodes. 100k longs is under
@@ -113,8 +113,9 @@ object GraphOps {
   /** Directed nation-level trade graph: customer's nation → supplier's
     * nation for every observed (order, lineitem) trade lane, self-loops
     * dropped, deduplicated to distinct lanes. The UN-checkpointed plan —
-    * each consumer materializes it exactly once via ONE localCheckpoint
-    * (ADVICE r7: checkpointing here AND in undirected() fired the
+    * each consumer reads it exactly once: q131's dense PageRank scans it
+    * into cached edge arrays, q137/q148 through ONE localCheckpoint in
+    * undirected() (ADVICE r7: checkpointing here AND there fired the
     * fact-table join twice per q137/q148 invocation). */
   private def tradeEdgesPlan(s: SparkSession, d: String): DataFrame =
     t(s, d, "customer")
@@ -125,16 +126,8 @@ object GraphOps {
       .select(col("c_nationkey").as("src"), col("s_nationkey").as("dst"))
       .distinct()
 
-  /** `localCheckpoint` (the q81/q121 iterative-graph discipline) pays the
-    * fact-table join ONCE and hands every superstep / self-join a
-    * materialized node²-bounded edge list — without it the 3-superstep
-    * PageRank re-scanned the fact tables 12× (plan audit, round 7). */
-  private def tradeEdges(s: SparkSession, d: String): DataFrame =
-    tradeEdgesPlan(s, d).localCheckpoint()
-
   /** Out-degrees (`src`, `od`) of an edge list — built ONCE per query
-    * and threaded into [[pageRankRanksChecked]] (q131 also joins it into
-    * its output; passing it avoids a second identical aggregation). */
+    * and threaded into [[pageRankRanksChecked]]. */
   private[graft] def outDegrees(edges: DataFrame): DataFrame =
     edges.groupBy(col("src")).agg(count(lit(1)).cast("long").as("od"))
 
@@ -145,10 +138,7 @@ object GraphOps {
     * supersteps of [[InvariantChecks.pageRankMassCheck]]'s conservation
     * identity (edge-aggregated inflow == node-computed outflow). The
     * check frames are built lazily alongside the chain; a caller that only
-    * takes `_1` pays nothing for them. q131 carries `mass_ok` as a result
-    * column (oracle pins it TRUE), which keeps the superstep aggregation
-    * verified past the scale where the unrolled DuckDB twin DNFs
-    * (VERDICT r8 #1). */
+    * takes `_1` pays nothing for them. */
   private[graft] def pageRankRanksChecked(nodes: DataFrame, edges: DataFrame,
                                           outdeg: DataFrame, iters: Int,
                                           mass: Long): (DataFrame, DataFrame) = {
@@ -266,25 +256,13 @@ object GraphOps {
     (s, d) => {
       import s.implicits._
       val nodes = t(s, d, "nation").select(col("n_nationkey").as("node"))
-      val small = cachedCount(s, d, "nation_rows", Seq("nation")) {
-        t(s, d, "nation").count()
-      } <= BroadcastRowLimit
-      // (node, r, od, mass_ok) for every spine node
-      val ranks = if (small) {
-        val pr = pageRankDense(nodes, tradeEdgesPlan(s, d), Iters, 1000000L)
-        pr.node.indices.map(i => (pr.node(i), pr.r(i), pr.od(i), pr.massOk))
-          .toDF("node", "r", "od", "mass_ok")
-      } else {
-        val edges = tradeEdges(s, d)
-        val outdeg = outDegrees(edges)
-        val (r, massOk) =
-          pageRankRanksChecked(nodes, edges, outdeg, Iters, 1000000L)
-        r.join(outdeg.withColumnRenamed("src", "node"), Seq("node"), "left")
-          .crossJoin(broadcast(massOk))
-          .select(col("node"), col("r"), coalesce(col("od"), lit(0L)).as("od"),
-            col("mass_ok"))
-      }
-      ranks
+      // nation holds 25 rows at every scale factor, so its ranks always
+      // fit on the driver. mass_ok carries the dense conservation
+      // identity (oracle pins it TRUE), which keeps the superstep sums
+      // verified past the scale where the unrolled DuckDB twin DNFs.
+      val pr = pageRankDense(nodes, tradeEdgesPlan(s, d), Iters, 1000000L)
+      pr.node.indices.map(i => (pr.node(i), pr.r(i), pr.od(i), pr.massOk))
+        .toDF("node", "r", "od", "mass_ok")
         .join(t(s, d, "nation"), col("node") === col("n_nationkey"))
         .select(col("n_nationkey").as("nation_key"), col("n_name"),
           col("r").as("pr_micro"), col("od").as("out_deg"), col("mass_ok"))
@@ -526,11 +504,13 @@ object GraphOps {
       // supplier node ids live in the NEGATIVE range (-suppkey-1):
       // collision-free against the non-negative customer keys at ANY
       // scale factor — a fixed additive offset (1e9) would silently
-      // merge distinct nodes once c_custkey crossed it (~sf6,700)
+      // merge distinct nodes once c_custkey crossed it (~sf6,700).
+      // One scan of the lanes emits both directions of each lane.
       def edges(lanes: DataFrame): DataFrame = lanes
-        .select(col("c").as("src"), (-col("p") - 1L).as("dst"))
-        .union(lanes
-          .select((-col("p") - 1L).as("src"), col("c").as("dst")))
+        .select(explode(array(
+          struct(col("c").as("src"), (-col("p") - 1L).as("dst")),
+          struct((-col("p") - 1L).as("src"), col("c").as("dst")))).as("e"))
+        .select(col("e.src"), col("e.dst"))
       val nodes = t(s, d, "customer").select(col("c_custkey").as("node"))
         .union(t(s, d, "supplier")
           .select((-col("s_suppkey") - 1L).as("node")))
@@ -553,13 +533,8 @@ object GraphOps {
       val mass = math.max(1000000000000L, nNodes * 6000000L)
       if (nNodes <= BroadcastRowLimit) {
         // the dense path reads the edge list exactly once, so the lanes
-        // need no checkpoint: one scan emits both directions of a lane.
-        // The top-100 comes back as a local frame.
-        val both = lanes.select(explode(array(
-          struct(col("c").as("src"), (-col("p") - 1L).as("dst")),
-          struct((-col("p") - 1L).as("src"), col("c").as("dst")))).as("e"))
-          .select(col("e.src"), col("e.dst"))
-        val pr = pageRankDense(nodes, both, 2, mass)
+        // need no checkpoint. The top-100 comes back as a local frame.
+        val pr = pageRankDense(nodes, edges(lanes), 2, mass)
         pr.node.indices.sortBy(i => (-pr.r(i), pr.node(i))).take(100)
           .map(i => (pr.node(i), pr.r(i))).toDF("node", "pr_units")
       } else {

@@ -63,7 +63,8 @@ object InvariantChecks {
         (col("mok") === 1L).as("inv_canonical_ok"))
   }
 
-  /** PageRank superstep mass-conservation contract (q131): 1-row (`ok`).
+  /** PageRank superstep mass-conservation contract (the shuffle-keyed
+    * superstep of `GraphOps.pageRankRanksChecked`): 1-row (`ok`).
     *
     * The edge-side aggregation (`sums` = per-dst totals of the per-edge
     * contributions `r div od`) must carry EXACTLY the mass the node side

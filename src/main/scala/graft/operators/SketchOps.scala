@@ -285,7 +285,7 @@ object SketchOps {
       // everything downstream (per-lang k-minima, union sketch, ρ, exact
       // union/intersection) derives from that hash-set-sized table, and
       // `localCheckpoint` materializes it once for all branches (the
-      // house pattern from q121/tradeEdges). Per-lang k-minima use
+      // house pattern from q121/undirected). Per-lang k-minima use
       // orderBy+limit (TakeOrderedAndProject heaps) instead of a
       // row_number window — no global sort, no window exchange.
       // Measured 2.8×: 1.33 → 0.47 s isolated at sf0.1.
