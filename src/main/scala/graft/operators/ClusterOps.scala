@@ -30,8 +30,9 @@ object ClusterOps {
   private val K = 8
   private val Iters = 2
 
-  /** An embedding quantized to integer micro-units. */
-  private def micro(embedding: Column): Column =
+  /** An embedding quantized to integer micro-units (the q105 fixed-point
+    * discipline; q105, q120, q128, q132 and q139 all quantize through it). */
+  private[graft] def micro(embedding: Column): Column =
     transform(embedding, x => round(x.cast("double") * 1e6).cast("long"))
 
   /** (`vec_id`, `ev`): each embedding quantized to integer micro-units. */

@@ -473,11 +473,8 @@ object CurationOps {
   private val q120 = GraftQuery(
     "q120_semantic_decontam",
     (s, d) => {
-      val scale = 1000000L
-      val fx = transform(col("embedding"),
-        x => round(x.cast("double") * scale).cast("long"))
       val ev = t(s, d, "embeddings")
-        .select(col("vec_id"), fx.as("e"))
+        .select(col("vec_id"), ClusterOps.micro(col("embedding")).as("e"))
         .withColumn("nn", aggregate(transform(col("e"), x => x * x),
           lit(0L), (acc, x) => acc + x).cast("double"))
       val evals = ev.filter(col("vec_id") % 97 === 0)

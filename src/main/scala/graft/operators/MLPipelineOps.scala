@@ -77,16 +77,30 @@ object MLPipelineOps {
     * It stays a first-class library entry point, now pinned by the
     * q118-style exhaustive-rank contract in QueriesSpec (every returned
     * neighbor within the exhaustive top 5% by exact cosine) on top of the
-    * recall floor. */
+    * recall floor.
+    *
+    * The model (bucket length 0.5, 2 hash tables, seed 42) depends only on
+    * these settings and the vector width, so it is fitted on a one-row
+    * local frame, which runs no Spark job. */
   val q61 = GraftQuery(
     "q61_lsh_ann_topk",
     (s, d) => {
+      import org.apache.spark.ml.feature.BucketedRandomProjectionLSH
       import org.apache.spark.ml.functions.array_to_vector
+      import org.apache.spark.ml.linalg.{SQLDataTypes, Vector, Vectors}
+      import org.apache.spark.sql.Row
+      import org.apache.spark.sql.types.{StructField, StructType}
       val emb = t(s, d, "embeddings")
         .select(col("vec_id"), col("label"),
           array_to_vector(col("embedding")).as("features"))
-      val key = emb.filter(col("vec_id") === 0).head().getAs[org.apache.spark.ml.linalg.Vector]("features")
-      SearchService.lshModel(s, key.size).approxNearestNeighbors(emb, key, 10)
+      val key = emb.filter(col("vec_id") === 0).head().getAs[Vector]("features")
+      val one = s.createDataFrame(java.util.List.of(Row(Vectors.zeros(key.size))),
+        StructType(Seq(StructField("features", SQLDataTypes.VectorType))))
+      new BucketedRandomProjectionLSH()
+        .setBucketLength(0.5).setNumHashTables(2).setSeed(42)
+        .setInputCol("features").setOutputCol("hashes")
+        .fit(one)
+        .approxNearestNeighbors(emb, key, 10)
         .select(col("vec_id"), col("label"), round(col("distCol"), 4).as("dist"))
         .orderBy(col("dist"), col("vec_id"))
     },
@@ -328,8 +342,7 @@ object MLPipelineOps {
     (s, d) => {
       val OutDims = 16
       val ev = t(s, d, "embeddings").select(col("vec_id"), col("label"),
-        transform(col("embedding"),
-          x => round(x.cast("double") * 1e6).cast("long")).as("ev"))
+        ClusterOps.micro(col("embedding")).as("ev"))
       // sign(i,j) = 1 - 2·(md5("i:j") mod 2), materialized once as a
       // single row holding one 64-long sign vector per output dim
       val mat = s.range(1, 65).select(col("id").as("i"))

@@ -1,6 +1,5 @@
 package graft.operators
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 
@@ -13,9 +12,6 @@ import graft.Tables._
 import graft.functions.VectorFunctions._
 import org.apache.hadoop.fs.Path
 import org.apache.spark.SparkFiles
-import org.apache.spark.ml.feature.{BucketedRandomProjectionLSH, BucketedRandomProjectionLSHModel}
-import org.apache.spark.ml.functions.array_to_vector
-import org.apache.spark.ml.linalg.{SQLDataTypes, Vector, Vectors}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -33,14 +29,18 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructTyp
   *  - overscan 3× then exact re-rank (search.py:38-40 — SURVEY T3/O4)
   *  - result projection with defaults (search.py:46-62 — SURVEY P2)
   *
-  * '''Two tiers, chosen per request by index size''' (in the style of
-  * `EditDistanceJoin.selfJoinAuto`). Keeping the serving structure apart
-  * from the analytical engine follows Krypton (VLDB 2023), and reusing one
-  * session-wide structure across requests follows the EDBT 2020
-  * incremental top-k framework (both in PAPERS.md).
+  * '''Two exact tiers, chosen per request by table size''' (in the style
+  * of `EditDistanceJoin.selfJoinAuto`). Both return the exact filtered
+  * top-k as `(vec_id, label)` rows, labels from the embeddings table, in
+  * (score desc, `vec_id` asc) order, the order of the q21/q29 oracle
+  * answers; scores are [[graft.functions.VectorFunctions.cosine]]'s, bit
+  * for bit. Keeping the serving structure apart from the analytical
+  * engine follows Krypton (VLDB 2023), and reusing one session-wide
+  * structure across requests follows the EDBT 2020 incremental top-k
+  * framework (both in PAPERS.md).
   *  - ''The budget.'' A table whose `embeddings.parquet` files total at
   *    most [[exactTierBudget]] bytes, 1/16 of the driver's max heap, is
-  *    served by the exact tier; a larger one by the LSH tier. The byte
+  *    served by the exact tier; a larger one by the scan tier. The byte
   *    lengths come from the signature below, so the choice runs no Spark
   *    job. Float vectors do not compress, so the file bytes are about the
   *    copy's size: 799 KB of files for 512 KB of vectors at sf0.1.
@@ -49,45 +49,30 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructTyp
   *    `documents.lang` codes (null for a vector without a document, which
   *    is still a valid query key but passes no filter), the float vectors
   *    in one flat array and their norms. A request scores every filtered
-  *    row with the arithmetic of `VectorKernels.cosineF`, so each score is
-  *    bit-equal to [[graft.functions.VectorFunctions.cosine]], keeps the
-  *    top k by (score desc, `vec_id` asc), the order of the q21/q29
-  *    oracle answers, and returns them as a local `(vec_id, label)`
-  *    DataFrame: the request and its `collect()` run no Spark job.
-  *  - ''LSH tier.'' The LSH model of [[lshModel]] (2 hash tables × 64
-  *    doubles, on the driver) and a parquet table of
-  *    `vec_id, label, lang, features, hashes`: every embedding as an MLlib
-  *    vector, its `documents.lang` (left join, as above) and its bucket
-  *    hashes from the model's own `transform`. It is written under the
-  *    SparkContext's driver-local directory (`SparkFiles.getRootDirectory()`,
-  *    inside `spark.local.dir`, removed when the context stops), never next
-  *    to the tables, which may be read-only, to a temporary path that is
-  *    then renamed into place. Executors read it from there, so the
-  *    location assumes they share the driver's file system, as in local
-  *    mode. A request runs two jobs: the key-vector lookup, and the bucket
-  *    probe plus exact re-rank that `collect` runs. It does no LSH fit, no
-  *    per-row hashing (MLlib skips `transform` when `hashes` is present)
-  *    and no join with `documents`.
+  *    row with the arithmetic of `VectorKernels.cosineF`, keeps the top k
+  *    and returns them as a local DataFrame: the request and its
+  *    `collect()` run no Spark job.
+  *  - ''Scan tier.'' [[scan]]: the documents filtered by language, joined
+  *    to the embeddings and scored against the key vector by a Spark
+  *    top-k. Nothing is built, cached or written for it.
   *
-  * '''Building either tier''' (the analog of the Atlas vector index that
-  * `$vectorSearch` reads, ai_service.py:59-119, built ahead of requests):
-  *  - ''Key.'' One copy or index per (SparkContext, `dir`, tier, signature
-  *    of `embeddings.parquet` and `documents.parquet`). The signature is
-  *    the modification time and length of each path and of the files
-  *    directly under it. It is read on every request, so the next search
-  *    after a table is rewritten builds anew, and the superseded copy or
-  *    index is dropped.
+  * '''Building the exact tier''' (the analog of the Atlas vector index
+  * that `$vectorSearch` reads, ai_service.py:59-119, built ahead of
+  * requests):
+  *  - ''Key.'' One copy per (SparkContext, `dir`, signature of
+  *    `embeddings.parquet` and `documents.parquet`). The signature is the
+  *    modification time and length of each path and of the files directly
+  *    under it. It is read on every request, so the next search after a
+  *    table is rewritten builds anew, and the superseded copy is dropped.
   *  - ''Build.'' Single-flight: concurrent first requests for one key wait
-  *    for one build. The exact tier's build is one job that collects the
-  *    embeddings left-joined with the documents' languages; the LSH tier's
-  *    reads the vector width and then writes its table. Neither is
-  *    `persist`ed, so a caller that unpersists every cached RDD between
-  *    requests loses neither.
+  *    for one build, a job that collects the embeddings left-joined with
+  *    the documents' languages. The copy is not `persist`ed, so a caller
+  *    that unpersists every cached RDD between requests does not lose it.
   *  - ''Failure.'' A failed build is not kept. The request degrades to the
-  *    exact Spark scan, and the next request builds again.
+  *    scan, and the next request builds again.
   *
   * '''Counters.''' Every request adds 1 to exactly one of
-  * [[exactTierCount]], [[lshTierCount]] and [[degradedCount]].
+  * [[exactTierCount]], [[scanTierCount]] and [[degradedCount]].
   */
 object SearchService {
 
@@ -96,15 +81,13 @@ object SearchService {
     val DefaultLimit = 20
     val MaxLimit = 100
     val OverscanFactor = 3                      // search.py:38
-    def numCandidates(limit: Int): Int =        // ai_service.py:68
-      math.min(50 * limit, 1000)
   }
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   private val degraded = new AtomicLong
   private val exactServed = new AtomicLong
-  private val lshServed = new AtomicLong
+  private val scanServed = new AtomicLong
   private val builds = new AtomicLong
 
   /** How many [[searchWithFallback]] calls took the exact Spark scan
@@ -115,50 +98,27 @@ object SearchService {
     * JVM started. */
   def exactTierCount: Long = exactServed.get
 
-  /** How many [[searchWithFallback]] calls the LSH tier served, since the
+  /** How many [[searchWithFallback]] calls the scan tier served, since the
     * JVM started. */
-  def lshTierCount: Long = lshServed.get
+  def scanTierCount: Long = scanServed.get
 
-  /** How many exact-tier copies and LSH indexes have been built since the
-    * JVM started. */
+  /** How many exact-tier copies have been built since the JVM started. */
   private[graft] def indexBuilds: Long = builds.get
 
   /** The exact tier serves a table whose `embeddings.parquet` files total
     * at most this many bytes: 1/16 of the driver's max heap. */
   private[graft] def exactTierBudget: Long = Runtime.getRuntime.maxMemory / 16
 
-  /** Test hook: send every request to the LSH tier, so the tests of that
+  /** Test hook: send every request to the scan tier, so the tests of that
     * tier run on tables small enough for the exact one. A DynamicVariable,
     * in the shape of `GraphOps.broadcastRowLimitOverride`: it is read on
     * the calling thread when a request picks its tier, so `withValue`
     * scopes it to the requests made inside the block. Production code
     * never sets it. */
-  private[graft] val forceLshTier = new scala.util.DynamicVariable[Boolean](false)
-
-  private val models = new ConcurrentHashMap[Integer, BucketedRandomProjectionLSHModel]
-
-  /** The one definition of this engine's LSH (bucket length 0.5, 2 hash
-    * tables, seed 42), memoized per vector width. The model depends only
-    * on these settings and the width, so it is fitted on a one-row local
-    * frame, which runs no Spark job. */
-  private[graft] def lshModel(spark: SparkSession, dim: Int): BucketedRandomProjectionLSHModel =
-    models.computeIfAbsent(dim, _ => {
-      val one = spark.createDataFrame(java.util.List.of(Row(Vectors.zeros(dim))),
-        StructType(Seq(StructField("features", SQLDataTypes.VectorType))))
-      new BucketedRandomProjectionLSH()
-        .setBucketLength(0.5).setNumHashTables(2).setSeed(42)
-        .setInputCol("features").setOutputCol("hashes")
-        .fit(one)
-    })
+  private[graft] val forceScanTier = new scala.util.DynamicVariable[Boolean](false)
 
   private val ResultSchema = StructType(Seq(
     StructField("vec_id", LongType), StructField("label", IntegerType)))
-
-  /** What a build makes: the exact tier's copy or the LSH tier's index. */
-  private sealed trait Built
-
-  private final case class Index(model: BucketedRandomProjectionLSHModel,
-                                 path: String, schema: StructType) extends Built
 
   /** The exact tier's driver-resident copy of one table directory. Row i
     * holds `ids(i)` (ascending), `labels(i)`, `langs(i)` (null without a
@@ -168,7 +128,7 @@ object SearchService {
     * fails the build, so its requests degrade. */
   private final class Resident(dir: String, ids: Array[Long], labels: Array[Integer],
                                langs: Array[String], vectors: Array[Float],
-                               norms: Array[Double], dim: Int) extends Built {
+                               norms: Array[Double], dim: Int) {
 
     /** The k rows whose language is in `filter` that score highest against
       * the row of `queryVecId`, best first, as (vec_id, label) rows. */
@@ -202,15 +162,15 @@ object SearchService {
     }
   }
 
-  /** One key's copy or index. The first request to read `built` builds it;
-    * the others block on the lazy val until that build ends. */
-  private final class Slot(val sig: String, val path: Option[String], build: () => Built) {
-    lazy val built: Try[Built] = Try(build())
+  /** One key's copy. The first request to read `built` builds it; the
+    * others block on the lazy val until that build ends. */
+  private final class Slot(val sig: String, build: () => Resident) {
+    lazy val built: Try[Resident] = Try(build())
   }
 
-  /** (SparkFiles root, dir, exact tier?) → the slot for that dir's current
-    * signature. */
-  private val indexes = new ConcurrentHashMap[(String, String, Boolean), Slot]
+  /** (SparkFiles root, which names the SparkContext, dir) → the slot for
+    * that dir's current signature. */
+  private val indexes = new ConcurrentHashMap[(String, String), Slot]
 
   /** The modification times and lengths under both tables, and the total
     * length of the embeddings files. */
@@ -227,20 +187,10 @@ object SearchService {
       stats.head.filterNot(_.isDirectory).map(_.getLen).sum)
   }
 
-  private def built(spark: SparkSession, dir: String, sig: String, exact: Boolean): Built = {
-    val root = SparkFiles.getRootDirectory()
-    val key = (root, dir, exact)
+  private def resident(spark: SparkSession, dir: String, sig: String): Resident = {
+    val key = (SparkFiles.getRootDirectory(), dir)
     val slot = indexes.compute(key, (_, old) =>
-      if (old != null && old.sig == sig) old
-      else {
-        if (old != null) old.path.foreach(deleteQuietly)
-        if (exact) new Slot(sig, None, () => buildResident(spark, dir))
-        else {
-          val name = java.util.UUID.nameUUIDFromBytes(s"$dir|$sig".getBytes("UTF-8"))
-          val path = s"$root/graft-search-index/$name"
-          new Slot(sig, Some(path), () => buildIndex(spark, dir, path))
-        }
-      })
+      if (old != null && old.sig == sig) old else new Slot(sig, () => buildResident(spark, dir)))
     slot.built.fold(e => { indexes.remove(key, slot); throw e }, identity)
   }
 
@@ -265,103 +215,62 @@ object SearchService {
     new Resident(dir, rows.map(_._1), rows.map(_._2), rows.map(_._3), vectors, norms, dim)
   }
 
-  private def buildIndex(spark: SparkSession, dir: String, path: String): Index = {
-    val emb = t(spark, dir, "embeddings")
-    val dim = emb.select(size(col("embedding"))).head().getInt(0)
-    val model = lshModel(spark, dim)
-    val rows = model.transform(
-      emb.select(col("vec_id"), col("label"), array_to_vector(col("embedding")).as("features"))
-        .join(t(spark, dir, "documents").select(col("doc_id"), col("lang")),
-          col("vec_id") === col("doc_id"), "left")
-        .select(col("vec_id"), col("label"), col("lang"), col("features")))
-    val tmp = s"$path.tmp-${java.util.UUID.randomUUID()}"
-    try {
-      rows.coalesce(1).write.parquet(tmp)
-      Files.move(Paths.get(tmp), Paths.get(path), StandardCopyOption.ATOMIC_MOVE)
-    } finally deleteQuietly(tmp)
-    builds.incrementAndGet()
-    Index(model, path, rows.schema)
-  }
-
-  private def deleteQuietly(path: String): Unit =
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path))
-
-  /** Where this SparkContext keeps the LSH index of `dir`, once requested. */
-  private[graft] def indexPath(dir: String): Option[String] =
-    Option(indexes.get((SparkFiles.getRootDirectory(), dir, false))).flatMap(_.path)
-
   /** This SparkContext's exact-tier copy of `dir`, once built; compared by
     * identity only. */
   private[graft] def residentCopy(dir: String): Option[AnyRef] =
-    Option(indexes.get((SparkFiles.getRootDirectory(), dir, true))).flatMap(_.built.toOption)
+    Option(indexes.get((SparkFiles.getRootDirectory(), dir))).flatMap(_.built.toOption)
+
+  /** The scan tier, and the answer of a degraded request: the documents
+    * whose `lang` is in `langs` (pushed into the parquet scan), joined to
+    * the embeddings, scored with `cosine` against the key vector, top k by
+    * (score desc, `vec_id` asc), as `(vec_id, label)` rows. A missing key
+    * gives no rows. The key is found with a predicate bound in a closure,
+    * not a `vec_id = <literal>` filter: a long literal is inlined into the
+    * generated code, so every unseen id would compile a new class. */
+  private def scan(spark: SparkSession, dir: String, queryVecId: Long, k: Int,
+                   langs: Seq[String]): DataFrame = {
+    val emb = t(spark, dir, "embeddings")
+    val isKey = udf((id: Long) => id == queryVecId)
+    t(spark, dir, "documents").filter(col("lang").isin(langs: _*))
+      .join(emb, col("doc_id") === col("vec_id"))
+      .crossJoin(broadcast(emb.filter(isKey(col("vec_id"))).select(col("embedding").as("key"))))
+      .orderBy(cosine(col("embedding"), col("key")).desc, col("vec_id"))
+      .limit(k)
+      .select(col("vec_id"), col("label"))
+  }
 
   /** Strategy-with-degrade (SURVEY O12, search.py:27-38): serve the
     * request from the tier its table's size selects (see the object's
-    * scaladoc), and fall back to the exact Spark scan on failure. All
-    * paths serve the same logical query and emit the SAME (vec_id, label)
+    * scaladoc), and fall back to the scan when that tier throws. Both
+    * paths serve the same exact query with the same `(vec_id, label)`
     * schema. Only NonFatal failures degrade (an OOM or interrupt must
     * propagate, not silently switch plans), and each degrade is logged at
     * WARN with the exception class and counted in [[degradedCount]].
     *
     * The metadata pre-filter runs BEFORE/INSIDE the top-k, like the filter
     * pushed inside $vectorSearch (ai_service.py:70), so a filtered search
-    * still returns k rows — post-filtering would return fewer than k. The
-    * exact tier scores only the filtered rows. In the LSH tier the model is
-    * the same for every filter (bucket geometry is filter-independent), but
-    * `approxNearestNeighbors` probes only the FILTERED rows of the index.
-    *
-    * In the LSH tier the key vector is found with a predicate bound in a
-    * closure, not a `vec_id = <literal>` filter: a long literal is inlined
-    * into the generated code, so every unseen id would compile a new class.
-    *
-    * The numCandidates cap cannot change the LSH tier's top-k under the
-    * total order (distCol, vec_id) unless exact distance ties straddle it.
-    * MLlib keeps the c = numCandidates(k) ≥ k probed rows of least distCol
-    * and breaks ties at the c-th distance arbitrarily, so every row
-    * strictly closer than the c-th distance is kept. If the k-th distance
-    * is below the c-th, every row at or below the k-th distance is kept,
-    * and the final (distCol, vec_id) sort picks the exact top-k of the
-    * probed rows. The only other case has the rows at ranks k..c all at
-    * one distance from the key: c − k + 1 exact ties, 50 at k = 1 and more
-    * at every larger k. */
+    * still returns k rows — post-filtering would return fewer than k. */
   def searchWithFallback(spark: SparkSession, dir: String, queryVecId: Long,
                          limit: Int = Config.DefaultLimit,
                          langs: Seq[String] = Seq("en", "fr")): DataFrame = {
     val k = math.max(1, math.min(limit, Config.MaxLimit))
     try {
       val sig = signature(spark, dir)
-      val exact = !forceLshTier.value && sig.embeddingBytes <= exactTierBudget
-      built(spark, dir, sig.text, exact) match {
-        case copy: Resident =>
-          val top = copy.topK(queryVecId, k, langs)
-          exactServed.incrementAndGet()
-          spark.createDataFrame(top.asJava, ResultSchema)
-        case idx: Index =>
-          val rows = spark.read.schema(idx.schema).parquet(idx.path)
-          val isQuery = udf((id: Long) => id == queryVecId)
-          val key = rows.filter(isQuery(col("vec_id"))).select(col("features")).collect()
-            .headOption.getOrElse(throw new NoSuchElementException(s"vec_id $queryVecId is not in $dir"))
-            .getAs[Vector](0)
-          // P1 pre-filter lands in the index scan, BEFORE the bucket probe;
-          // numCandidates cap, then exact re-rank of the candidate pool
-          val top = idx.model.approxNearestNeighbors(rows.filter(col("lang").isin(langs: _*)), key,
-              Config.numCandidates(k))
-            .orderBy(col("distCol"), col("vec_id"))
-            .limit(k)
-            .select(col("vec_id"), col("label"))
-          lshServed.incrementAndGet()
-          top
+      if (forceScanTier.value || sig.embeddingBytes > exactTierBudget) {
+        val top = scan(spark, dir, queryVecId, k, langs)
+        scanServed.incrementAndGet()
+        top
+      } else {
+        val top = resident(spark, dir, sig.text).topK(queryVecId, k, langs)
+        exactServed.incrementAndGet()
+        spark.createDataFrame(top.asJava, ResultSchema)
       }
     } catch {
       case NonFatal(e) =>
         degraded.incrementAndGet()
         log.warn(s"search for vec_id $queryVecId in $dir degraded to the exact Spark scan: " +
           s"${e.getClass.getName}: ${e.getMessage}")
-        // degrade to the exact path (search.py:27-38), same output schema
-        search(spark, dir, queryVecId, k, langs)
-          .join(t(spark, dir, "embeddings").select(col("vec_id"), col("label")),
-            col("doc_id") === col("vec_id"))
-          .select(col("vec_id"), col("label"))
+        scan(spark, dir, queryVecId, k, langs)
     }
   }
 

@@ -367,8 +367,7 @@ object VectorSearch {
     "q105_int8_quant_ann",
     (s, d) => {
       val ev = t(s, d, "embeddings").select(col("vec_id"), col("label"),
-        transform(col("embedding"),
-          x => round(x.cast("double") * 1e6).cast("long")).as("ev"))
+        ClusterOps.micro(col("embedding")).as("ev"))
       val dims = ev.select(posexplode(col("ev")).as(Seq("pos", "e")))
         .groupBy(col("pos"))
         .agg(greatest(max(abs(col("e"))), lit(1L)).as("am"))

@@ -402,14 +402,14 @@ class QueriesSpec extends SparkSpec {
   test("searchWithFallback degrades from LSH to the exact path (O12)") {
     import graft.operators.SearchService
     val before = SearchService.degradedCount
-    // a normal request takes the approximate path
+    // a normal request is served by its tier
     assert(SearchService.searchWithFallback(spark, sf, 0, limit = 5).count() == 5)
     assert(SearchService.degradedCount == before)
-    // an absent query vector fails the ANN key lookup; the exact path
+    // an absent query vector fails the exact tier's key lookup; the scan
     // serves the request and finds no neighbours for it
     assert(SearchService.searchWithFallback(spark, sf, -1, limit = 5).count() == 0)
     assert(SearchService.degradedCount == before + 1)
-    // with no tables both paths fail, and the ANN failure is still counted
+    // with no tables both paths fail, and the tier's failure is still counted
     withTempDir("graft_missing") { tmp =>
       intercept[org.apache.spark.sql.AnalysisException] {
         SearchService.searchWithFallback(spark, tmp, 0, limit = 5)
@@ -420,8 +420,8 @@ class QueriesSpec extends SparkSpec {
 
   test("filtered ANN path returns k rows that ALL satisfy the metadata filter") {
     import graft.operators.SearchService
-    // the filter is pushed into the candidate frame BEFORE the bucket
-    // probe (ai_service.py:70 pushes it inside $vectorSearch): a filtered
+    // the filter is applied BEFORE the top-k (ai_service.py:70 pushes it
+    // inside $vectorSearch): a filtered
     // search must return k filtered rows, never post-filter-to-fewer
     val k = 5
     val res = SearchService.searchWithFallback(spark, sf, 0, limit = k,

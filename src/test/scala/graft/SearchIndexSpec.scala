@@ -8,23 +8,17 @@ import java.util.concurrent.atomic.AtomicInteger
 import graft.operators.SearchService
 import org.apache.spark.{ListenerBusDrain, SparkFiles}
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.ml.feature.BucketedRandomProjectionLSH
-import org.apache.spark.ml.functions.array_to_vector
-import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
-/** The two tiers behind `SearchService.searchWithFallback`.
+/** The two exact tiers behind `SearchService.searchWithFallback`.
   *
-  * The exact tier (every table here fits its budget) returns the
-  * plain-Scala exact top-k, runs no Spark job per request, sees a
-  * rewritten table at once and builds one copy for concurrent first
-  * requests.
-  *
-  * The LSH tier, forced by `SearchService.forceLshTier`, returns what the
-  * per-request pipeline it replaced returned, costs at most two jobs and
-  * no code generation per warm request, sees a rewritten table at once,
-  * and builds one index for concurrent first requests. */
+  * Both return the plain-Scala exact top-k, see a rewritten table at once
+  * and answer concurrent first requests. The exact tier (every table here
+  * fits its budget) runs no Spark job per request and builds one copy for
+  * those requests. The scan tier, forced by `SearchService.forceScanTier`,
+  * compiles no code per warm request and builds, persists and writes
+  * nothing. The three tests of the answer run once on each tier. */
 class SearchIndexSpec extends SparkSpec {
   private val sf01 = "/root/testdata/sf0.01"
   private val allLangs = Seq("de", "en", "es", "fr", "zh")
@@ -33,27 +27,15 @@ class SearchIndexSpec extends SparkSpec {
     SearchService.searchWithFallback(spark, dir, id, limit, langs)
       .collect().map(_.getLong(0)).toSeq
 
-  /** A test of the LSH tier, on tables small enough for the exact one. */
-  private def lshTest(name: String)(body: => Unit): Unit =
-    test(name)(SearchService.forceLshTier.withValue(true)(body))
+  /** A test of the scan tier, on tables small enough for the exact one. */
+  private def scanTest(name: String)(body: => Unit): Unit =
+    test(name)(SearchService.forceScanTier.withValue(true)(body))
 
-  /** The per-request pipeline the index replaced: fit the LSH, look the
-    * key vector up, probe the join of embeddings and filtered documents. */
-  private def unindexed(dir: String, id: Long, limit: Int, langs: Seq[String]): Seq[Long] = {
-    val k = math.max(1, math.min(limit, SearchService.Config.MaxLimit))
-    val emb = Tables.t(spark, dir, "embeddings")
-      .select(col("vec_id"), col("label"), array_to_vector(col("embedding")).as("features"))
-    val filtered = emb.join(
-      Tables.t(spark, dir, "documents").filter(col("lang").isin(langs: _*)).select(col("doc_id")),
-      col("vec_id") === col("doc_id")).drop("doc_id")
-    val model = new BucketedRandomProjectionLSH()
-      .setBucketLength(0.5).setNumHashTables(2).setSeed(42)
-      .setInputCol("features").setOutputCol("hashes")
-      .fit(emb)
-    val key = emb.filter(col("vec_id") === id).head().getAs[Vector]("features")
-    model.approxNearestNeighbors(filtered, key, SearchService.Config.numCandidates(k))
-      .orderBy(col("distCol"), col("vec_id")).limit(k)
-      .select(col("vec_id")).collect().map(_.getLong(0)).toSeq
+  /** `body` as two tests: `exactName` on the exact tier and `scanName` on
+    * the scan tier. */
+  private def onBothTiers(exactName: String, scanName: String)(body: => Unit): Unit = {
+    test(exactName)(body)
+    scanTest(scanName)(body)
   }
 
   /** Every vector of `dir` with its document's language (None without a
@@ -130,76 +112,72 @@ class SearchIndexSpec extends SparkSpec {
     (out, jobs.get)
   }
 
-  /** (exact, LSH, degraded) request counts so far. */
+  /** (exact, scan, degraded) request counts so far. */
   private def counters: (Long, Long, Long) =
-    (SearchService.exactTierCount, SearchService.lshTierCount, SearchService.degradedCount)
+    (SearchService.exactTierCount, SearchService.scanTierCount, SearchService.degradedCount)
 
-  lshTest("the indexed path returns exactly the ids of the per-request LSH pipeline") {
-    val rnd = new scala.util.Random(11)
-    val before = SearchService.degradedCount
-    for (k <- Seq(5, 10, 20, 50, 100, 500);
-         langs <- Seq(Seq(allLangs(rnd.nextInt(5))), rnd.shuffle(allLangs).take(2 + rnd.nextInt(3)))) {
-      val id = rnd.nextInt(400).toLong
-      val got = ids(sf01, id, k, langs)
-      assert(got.nonEmpty, s"k=$k langs=$langs id=$id")
-      assert(got == unindexed(sf01, id, k, langs), s"k=$k langs=$langs id=$id")
-    }
-    assert(SearchService.degradedCount == before, "a request left the ANN path")
+  /** The counters that a request served by the tier in force leaves alone:
+    * the other tier's and the degrade counter. */
+  private def untouched: (Long, Long) = {
+    val (exact, scan, degraded) = counters
+    (if (SearchService.forceScanTier.value) exact else scan, degraded)
   }
 
-  lshTest("a warm request for an unseen vec_id runs at most 2 jobs and compiles no code") {
+  // the broadcast key row, the broadcast side of the documents join and
+  // the top-k itself
+  scanTest("a warm scan-tier request for an unseen vec_id runs 3 jobs and compiles no code") {
     Seq(401L, 402L).foreach(id => ids(sf01, id, 20, Seq("en", "fr")))
-    val degraded = SearchService.degradedCount
+    val (exact, scan, degraded) = counters
     val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val (got, jobs) = withJobCount(ids(sf01, 433L, 20, Seq("en", "fr")))
-    assert(got.size == 20)
-    assert(SearchService.degradedCount == degraded)
-    assert(jobs <= 2, s"$jobs jobs")
     assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiles, "Janino compiled a class")
+    assert(jobs == 3, s"$jobs jobs")
+    assert(counters == ((exact, scan + 1, degraded)))
+    assert(got == exactTopK(sf01, 433L, 20, Seq("en", "fr")))
   }
 
-  lshTest("the next search after the embeddings table is rewritten reflects the new vectors") {
+  scanTest("the next search after the embeddings table is rewritten reflects the new vectors") {
     withTables { dir =>
       val query = 3L
       val old = ids(dir, query, 10, allLangs)
-      assert(old == unindexed(dir, query, 10, allLangs))
-      val oldIndex = SearchService.indexPath(dir).get
+      assert(old == exactTopK(dir, query, 10, allLangs))
       // give a vector outside the old top-10 the query's own embedding
       val target = spark.read.parquet(s"$dir/embeddings.parquet").select(max(col("vec_id"))).head().getLong(0)
       assert(!old.contains(target))
       plant(dir, query, Set(target))
       val fresh = ids(dir, query, 10, allLangs)
       assert(fresh.take(2) == Seq(query, target))
-      assert(fresh == unindexed(dir, query, 10, allLangs))
-      assert(SearchService.indexPath(dir).get != oldIndex)
-      assert(!Files.exists(Paths.get(oldIndex)), "the superseded index was left behind")
+      assert(fresh == exactTopK(dir, query, 10, allLangs))
     }
   }
 
-  lshTest("concurrent first requests build one index, outside the table dir, never persisted") {
+  scanTest("concurrent first scan-tier requests build, persist and write nothing") {
     withTables { dir =>
       val builds = SearchService.indexBuilds
-      val degraded = SearchService.degradedCount
+      val (exact, scan, degraded) = counters
       val persisted = spark.sparkContext.getPersistentRDDs.keySet
+      def underRoot = {
+        import org.apache.commons.io.filefilter.TrueFileFilter.TRUE
+        org.apache.commons.io.FileUtils.listFilesAndDirs(new java.io.File(SparkFiles.getRootDirectory()), TRUE, TRUE)
+      }
+      val rootFiles = underRoot
       val pool = Executors.newFixedThreadPool(4)
-      val sizes = try {
+      val got = try {
         (0 until 4).map { i =>
-          pool.submit(new Callable[Int] { def call(): Int = ids(dir, i.toLong, 10, Seq("en")).size })
+          pool.submit(new Callable[Seq[Long]] { def call(): Seq[Long] = ids(dir, i.toLong, 10, Seq("en")) })
         }.map(_.get)
       } finally pool.shutdown()
-      assert(sizes.forall(_ == 10))
-      assert(SearchService.indexBuilds == builds + 1)
-      assert(SearchService.degradedCount == degraded)
+      assert(got.zipWithIndex.forall { case (g, i) => g == exactTopK(dir, i.toLong, 10, Seq("en")) })
+      assert(SearchService.indexBuilds == builds)
+      assert(counters == ((exact, scan + 4, degraded)))
       assert(spark.sparkContext.getPersistentRDDs.keySet == persisted)
-      val path = SearchService.indexPath(dir).get
-      assert(Files.isDirectory(Paths.get(path)))
-      assert(path.startsWith(SparkFiles.getRootDirectory()) && !path.startsWith(dir))
+      assert(underRoot == rootFiles)
       assert(new java.io.File(dir).list().toSet == Set("embeddings.parquet", "documents.parquet"))
     }
   }
 
   test("every request adds 1 to exactly one of the tier and degrade counters; " +
-    "forcing the LSH tier leaves no trace") {
+    "forcing the scan tier leaves no trace") {
     def delta(body: => Unit): (Long, Long, Long) = {
       val (e, l, d) = counters
       body
@@ -207,14 +185,24 @@ class SearchIndexSpec extends SparkSpec {
       (e2 - e, l2 - l, d2 - d)
     }
     assert(delta(ids(sf01, 7L, 10, allLangs)) == ((1, 0, 0)))
-    assert(delta(SearchService.forceLshTier.withValue(true)(ids(sf01, 7L, 10, allLangs))) == ((0, 1, 0)))
+    assert(delta(SearchService.forceScanTier.withValue(true)(ids(sf01, 7L, 10, allLangs))) == ((0, 1, 0)))
     assert(delta(ids(sf01, 8L, 10, allLangs)) == ((1, 0, 0)), "the forced tier outlived its block")
     assert(delta(ids(sf01, -1L, 10, allLangs)) == ((0, 0, 1)))
+    // a valid key whose exact-tier build fails (labels that are not `int`)
+    // degrades to the scan, which still answers the exact top-k
+    withTables { dir =>
+      rewrite(dir, "embeddings",
+        spark.read.parquet(s"$sf01/embeddings.parquet").withColumn("label", col("label").cast("long")))
+      var got = Seq.empty[Long]
+      assert(delta { got = ids(dir, 7L, 50, allLangs.take(3)) } == ((0, 0, 1)))
+      assert(got == exactTopK(dir, 7L, 50, allLangs.take(3)))
+    }
   }
 
-  test("the exact tier returns the plain-Scala exact top-k, scored bit-equal to cosine") {
+  onBothTiers("the exact tier returns the plain-Scala exact top-k, scored bit-equal to cosine",
+    "the scan tier returns the plain-Scala exact top-k, scored bit-equal to cosine") {
     val rnd = new scala.util.Random(13)
-    val (_, lsh, degraded) = counters
+    val before = untouched
     for (k <- Seq(5, 10, 20, 50, 100, 500);
          langs <- Seq(Seq(allLangs(rnd.nextInt(5))), rnd.shuffle(allLangs).take(2 + rnd.nextInt(3)))) {
       val id = rnd.nextInt(500).toLong
@@ -222,7 +210,7 @@ class SearchIndexSpec extends SparkSpec {
       assert(got.nonEmpty, s"k=$k langs=$langs id=$id")
       assert(got == exactTopK(sf01, id, k, langs), s"k=$k langs=$langs id=$id")
     }
-    assert(counters._2 == lsh && counters._3 == degraded, "a request left the exact tier")
+    assert(untouched == before, "a request left its tier")
     // the reference's arithmetic is `cosine`'s, bit for bit
     val q = 17L
     val emb = spark.read.parquet(s"$sf01/embeddings.parquet")
@@ -234,15 +222,16 @@ class SearchIndexSpec extends SparkSpec {
     vs.foreach { case (vid, _, v) =>
       assert(java.lang.Double.compare(cos(v, qv), bySpark(vid)) == 0, s"vec_id $vid")
     }
-    // labels come from the embeddings table, in the LSH tier's schema
+    // labels come from the embeddings table, in the other tier's schema
     val labels = emb.select("vec_id", "label").collect().map(r => r.getLong(0) -> r.get(1)).toMap
     val res = SearchService.searchWithFallback(spark, sf01, q, 20, allLangs)
     res.collect().foreach(r => assert(r.get(1) == labels(r.getLong(0))))
-    assert(res.schema == SearchService.forceLshTier.withValue(true)(
+    assert(res.schema == SearchService.forceScanTier.withValue(!SearchService.forceScanTier.value)(
       SearchService.searchWithFallback(spark, sf01, q, 20, allLangs)).schema)
   }
 
-  test("the exact tier orders exact score ties by vec_id") {
+  onBothTiers("the exact tier orders exact score ties by vec_id",
+    "the scan tier orders exact score ties by vec_id") {
     withTables { dir =>
       val query = 300L
       val planted = Set(5L, 299L, 301L, 480L)
@@ -253,29 +242,30 @@ class SearchIndexSpec extends SparkSpec {
     }
   }
 
-  test("a vector without a document is a valid key and never a filtered result") {
+  onBothTiers("a vector without a document is a valid key and never a filtered result",
+    "a vector without a document is a valid key and never a scan-tier result") {
     withTables { dir =>
       val (orphan, twin) = (250L, 40L)
       plant(dir, twin, Set(orphan))
       rewrite(dir, "documents",
         spark.read.parquet(s"$sf01/documents.parquet").filter(col("doc_id") =!= orphan))
-      val degraded = SearchService.degradedCount
+      val before = untouched
       val fromOrphan = ids(dir, orphan, 20, allLangs)
       assert(fromOrphan.head == twin && !fromOrphan.contains(orphan))
       assert(fromOrphan == exactTopK(dir, orphan, 20, allLangs))
       val fromTwin = ids(dir, twin, 100, allLangs)
       assert(fromTwin.head == twin && !fromTwin.contains(orphan))
       assert(fromTwin == exactTopK(dir, twin, 100, allLangs))
-      assert(SearchService.degradedCount == degraded)
+      assert(untouched == before)
     }
   }
 
   test("a warm exact-tier request for an unseen vec_id runs no Spark job") {
     ids(sf01, 401L, 20, Seq("en", "fr"))
-    val (exact, lsh, degraded) = counters
+    val (exact, scan, degraded) = counters
     val (got, jobs) = withJobCount(ids(sf01, 434L, 20, Seq("en", "fr")))
     assert(got.size == 20)
-    assert(counters == ((exact + 1, lsh, degraded)))
+    assert(counters == ((exact + 1, scan, degraded)))
     assert(jobs == 0, s"$jobs jobs")
   }
 
@@ -315,7 +305,6 @@ class SearchIndexSpec extends SparkSpec {
       assert(SearchService.indexBuilds == builds + 1)
       assert(counters._1 == exact + 4 && counters._3 == degraded)
       assert(spark.sparkContext.getPersistentRDDs.keySet == persisted)
-      assert(SearchService.indexPath(dir).isEmpty, "the exact tier wrote an LSH index")
       assert(new java.io.File(dir).list().toSet == Set("embeddings.parquet", "documents.parquet"))
     }
   }
