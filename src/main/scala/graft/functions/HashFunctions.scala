@@ -42,9 +42,6 @@ object HashFunctions {
   def md5Int(c: Column, seed: Int): Column =
     hexLong(md5(concat(c, lit("#" + seed))), 1)
 
-  def md5IntSql(e: String, seed: Int): String =
-    hexLongSql(s"md5($e || '#$seed')", 1)
-
   /** Unseeded variant (content fingerprint). */
   def md5Int(c: Column): Column = hexLong(md5(c), 1)
 
@@ -101,15 +98,6 @@ object HashFunctions {
 
   def minHashPackedSql(hsExpr: String, k: Int): String =
     s"list_min(list_transform($hsExpr, x -> (((x >> 32) + $k * (x & 4294967295)) % $Mod32)))"
-
-  /** MinHash signature k over the md5 list: min over shingles of
-    * (a + k·b) mod 2^32. */
-  def minHash(lh: Column, k: Int): Column =
-    array_min(transform(lh, h =>
-      (hexLong(h, 1) + lit(k.toLong) * hexLong(h, 9)) % lit(Mod32)))
-
-  def minHashSql(lhExpr: String, k: Int): String =
-    s"list_min(list_transform($lhExpr, h -> ((${hexLongSql("h", 1)} + $k * ${hexLongSql("h", 9)}) % $Mod32)))"
 
   /** LSH band key b (0-based): md5 of the band's concatenated signature. */
   def bandKey(mh: Seq[Column], b: Int): Column =

@@ -51,9 +51,6 @@ object TextFunctions {
     * DuckDB string_split(text, ' '). */
   def tokens(c: Column): Column = split(c, " ")
 
-  /** Token count on a whitespace-tokenized text. */
-  def tokenCount(c: Column): Column = size(tokens(c))
-
   /** Stopword hit count over a token array (exact-int, oracle-safe). */
   def stopwordCount(toks: Column, stopwords: Seq[String]): Column =
     size(filter(toks, w => w.isin(stopwords.map(lit): _*)))

@@ -6,9 +6,11 @@ import org.apache.spark.sql.functions._
 /** Dense-vector scalar functions over ArrayType(FloatType) columns.
   *
   * Re-expresses the reference's cosine scoring (sklearn
-  * `cosine_similarity`, /root/reference/backend/ai_service.py:44-57) as pure
-  * Catalyst higher-order-function compositions — codegen'd, no UDFs, and
-  * DuckDB-oracle-checkable (`list_cosine_similarity`). SURVEY.md §2.9 F13.
+  * `cosine_similarity`, `backend/ai_service.py:44-57`) without
+  * UDFs, DuckDB-oracle-checkable (`list_cosine_similarity`). SURVEY.md §2.9
+  * F13. Only `cosine`, a native expression, is codegen'd: the builtin
+  * higher-order-function compositions below (`zip_with`, `aggregate`) are
+  * `CodegenFallback` in Spark 4.1 and evaluate interpreted.
   *
   * All arithmetic is promoted to DOUBLE; scores are computed per-query and
   * never materialized to storage (mirrors ai_service.py:113 semantics).
@@ -42,13 +44,4 @@ object VectorFunctions {
     * that FunctionsSpec holds the native expression to. */
   def cosineHof(a: Column, b: Column): Column =
     dotProduct(a, b) / (l2Norm(a) * l2Norm(b))
-
-  /** Euclidean distance (used by the LSH bucketed path). */
-  def l2Distance(a: Column, b: Column): Column =
-    sqrt(aggregate(
-      zip_with(a, b, (x, y) => {
-        val d = x.cast("double") - y.cast("double"); d * d
-      }),
-      lit(0.0),
-      (acc, x) => acc + x))
 }

@@ -9,7 +9,7 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
 
 /** Fused single-pass kernels shared by interpreted eval and generated code.
   * One loop computes dot, |a|² and |b|² — versus the HOF composition
-  * (VectorFunctions.cosine) which walks the arrays five times and allocates
+  * (VectorFunctions.cosineHof) which walks the arrays five times and allocates
   * an intermediate array per zip_with. Accumulation order (sequential,
   * double) is identical to the HOF form, so both produce bit-equal scores.
   */
@@ -24,13 +24,6 @@ object VectorKernels {
       i += 1
     }
     dot / (math.sqrt(na) * math.sqrt(nb))
-  }
-
-  def dotF(a: ArrayData, b: ArrayData): Double = {
-    val n = math.min(a.numElements(), b.numElements())
-    var dot = 0.0; var i = 0
-    while (i < n) { dot += a.getFloat(i).toDouble * b.getFloat(i).toDouble; i += 1 }
-    dot
   }
 
   /** Integer squared-L2 distance over array<long> — the k-means/IVF
@@ -74,25 +67,6 @@ case class CosineSimilarity(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Native dot product, same shape. */
-case class DotProduct(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    VectorKernels.dotF(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.expressions.VectorKernels.dotF($a, $b)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): DotProduct =
-    copy(left = newLeft, right = newRight)
-}
-
 /** Native integer squared-L2 over array<long>, same shape (q128's final
   * assignment calls it once per centroid and q132 once per row, where the
   * fused eval replaces an interpreted zip_with+aggregate tree). */
@@ -118,10 +92,6 @@ object CosineSimilarity {
   /** Column-API entry point. */
   def cosine_native(a: Column, b: Column): Column =
     GraftBridge.column(CosineSimilarity(
-      GraftBridge.expression(a), GraftBridge.expression(b)))
-
-  def dot_native(a: Column, b: Column): Column =
-    GraftBridge.column(DotProduct(
       GraftBridge.expression(a), GraftBridge.expression(b)))
 
   def sq_dist_l2(a: Column, b: Column): Column =

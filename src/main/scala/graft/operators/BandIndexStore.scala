@@ -27,8 +27,7 @@ import org.apache.spark.sql.functions._
   *    pmod(hash(bkey), NumBuckets). Band alone gives only NumBands (4)
   *    directories, too coarse to show pruning; the bkey sub-bucket
   *    multiplies that to 32 cells while staying enum-sized, so a probe's
-  *    cell list is a bounded driver-side constant (like
-  *    IndexedVectorStore's bits+1 probe scalars), NOT a data collect.
+  *    cell list is a bounded driver-side constant, NOT a data collect.
   *  - `<path>/sigs`: ONE row per doc — (doc_id, hs), partitioned by its
   *    own `cell` = pmod(hash(doc_id), 32). The Jaccard verify reads hs
   *    through this table pruned to the CANDIDATES' hash cells (again a

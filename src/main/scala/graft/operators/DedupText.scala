@@ -276,8 +276,8 @@ object DedupText {
     * full self-join (q34) runs once to bootstrap; every ingest after
     * that probes the band index. Here the old-side band table is derived
     * inline because registry queries are stateless; in production it is
-    * the persisted, bucketed signature index (the IndexedVectorStore
-    * pattern — write once, bucket-pruned probes per batch), and the new
+    * the persisted, bucketed signature index (BandIndexStore — write
+    * once, cell-pruned probes per batch), and the new
     * batch is typically small enough that its band table broadcasts.
     * Each new doc reports the minimum old doc_id it near-duplicates
     * (jaccard >= 0.5, q121's threshold) with that pair's score, or

@@ -30,15 +30,6 @@ object StreamingOps {
       .select(col("w.start").as("w_start"), col("event_type"), col("n"),
         col("sum_value"))
 
-  /** Watermarked sliding-window aggregation (batch twin: q41). */
-  def slidingCounts(events: DataFrame,
-                    watermark: String = "10 minutes"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), "10 minutes", "5 minutes").as("w"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("w.start").as("w_start"), col("n"))
-
   /** Watermarked session windows per user (batch twin: q42). */
   def sessionize(events: DataFrame,
                  gap: String = "30 minutes",

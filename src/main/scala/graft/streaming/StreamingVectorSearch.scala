@@ -1,36 +1,25 @@
 package graft.streaming
 
-import graft.operators.IndexedVectorStore
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.functions.VectorFunctions.cosine
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** The reference's search API (`backend/search.py` POST /api/search →
   * `ai_service.py` `$vectorSearch`) as a CONTINUOUSLY-ANSWERED stream:
-  * query vectors arrive on an unbounded stream and each micro-batch is
-  * answered against the persistent sign-LSH index
-  * ([[graft.operators.IndexedVectorStore]]) — the serving half of the
-  * build/append/probe loop, mirroring how StreamingContentDedup serves
-  * the band index.
+  * query vectors arrive on an unbounded stream and each micro-batch gets
+  * the exact per-query top-k over a parquet table of vectors.
   *
-  * Scale shape — the batch is answered SET-AT-A-TIME, not per query:
-  *  - one signature pass over the batch (the store's own deterministic
-  *    hyperplane math, so stream and store always agree on cells);
-  *  - each query expands to its bits+1 multi-probe cells; the DISTINCT
-  *    cell list is collected to the driver because partition pruning
-  *    needs literal values before task launch — bounded by the CELL
-  *    DOMAIN (2^bits = 64), never by batch or corpus size (the
-  *    BandIndexStore cell-list contract);
-  *  - ONE partition-pruned scan of the store joins the broadcast
-  *    (query, cell) probe table — files outside the probed cells are
-  *    never opened — and the exact cosine rescore + per-query top-k
-  *    (rank window keyed by query, the TopKPerGroup idiom) runs only
-  *    over probed rows.
+  * The batch is answered set-at-a-time in one plan of q20's shape: the
+  * batch's queries are broadcast and cross-joined to the vectors, scored
+  * with the native `cosine`, and ranked by a window keyed by query (the
+  * TopKPerGroup idiom), so the answer is the exact top-k with ties broken
+  * by the lower `vec_id`.
   *
-  * Per-batch output is written under `out/batch=<id>` (overwrite by
-  * batch dir — idempotent under replay, the StreamingContentDedup
-  * discipline).
+  * Each batch reads the vector table as it stands when the batch runs.
+  * Per-batch output is written under `out/batch=<id>` (overwrite by batch
+  * dir — idempotent under replay, the StreamingContentDedup discipline).
   */
 object StreamingVectorSearch {
 
@@ -42,42 +31,25 @@ object StreamingVectorSearch {
     * its own dir idempotently). Production leaves it a no-op. */
   @volatile private[graft] var servingFault: Int => Unit = _ => ()
 
-  /** Answer one batch of (qid, embedding) queries with the per-query
-    * top-k over the standing index. Batch-pure; exposed for replay and
-    * parity tests. */
-  def answerBatch(s: SparkSession, indexPath: String,
-                  queries: DataFrame, k: Int): DataFrame = {
-    val sigs = IndexedVectorStore
-      .signatures(s, queries.select(col("qid").as("vec_id"), col("embedding")))
-      .select(col("vec_id").as("qid"), col("bucket"))
-    // multi-probe set: own cell + every Hamming-1 neighbor (q80's probe
-    // policy, identical to IndexedVectorStore.search)
-    val probeCells = (0 until IndexedVectorStore.bits)
-      .map(b => expr(s"cast(bucket ^ ${1L << b} as int)")) :+
-      col("bucket").cast("int")
-    val probes = sigs
-      .select(col("qid"), explode(array(probeCells: _*)).as("bucket"))
-      .join(queries.select(col("qid"), col("embedding").as("q_emb")),
-        Seq("qid"))
-    // driver-side literal cell list: <= 2^bits values by construction —
-    // required for the partition filter to prune before task launch
-    val cells = probes.select(col("bucket")).distinct()
-      .collect().map(_.getInt(0)).toSeq
-    val pruned = s.read.parquet(indexPath)
-      .filter(col("bucket").isin(cells: _*))
-    pruned.join(broadcast(probes), Seq("bucket"))
-      .withColumn("score", graft.functions.VectorFunctions
-        .cosine(col("embedding"), col("q_emb")))
+  /** Answer one batch of (qid, embedding) queries with the exact
+    * per-query top-k of `vectors` (vec_id, embedding, label), as rows
+    * (qid, rank, vec_id, label), ranked by (score desc, vec_id).
+    * Batch-pure; exposed for replay and parity tests. */
+  def answerBatch(vectors: DataFrame, queries: DataFrame, k: Int): DataFrame =
+    vectors.select(col("vec_id"), col("embedding"), col("label"))
+      .crossJoin(broadcast(
+        queries.select(col("qid"), col("embedding").as("q_emb"))))
+      .withColumn("score", cosine(col("embedding"), col("q_emb")))
       .withColumn("rank", row_number().over(
         Window.partitionBy(col("qid"))
           .orderBy(col("score").desc, col("vec_id"))))
       .filter(col("rank") <= k)
       .select(col("qid"), col("rank"), col("vec_id"), col("label"))
-  }
 
-  /** Streaming entry: each micro-batch of queries lands its answers
-    * under `outPath/batch=<id>`, idempotently. */
-  def start(queries: DataFrame, indexPath: String, outPath: String,
+  /** Streaming entry: each micro-batch of queries is answered against the
+    * parquet vectors at `vectorsPath` and lands under
+    * `outPath/batch=<id>`, idempotently. */
+  def start(queries: DataFrame, vectorsPath: String, outPath: String,
             checkpointDir: String, k: Int = 10): StreamingQuery =
     queries.writeStream
       .outputMode("append")
@@ -85,7 +57,7 @@ object StreamingVectorSearch {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .foreachBatch { (df: DataFrame, id: Long) =>
         servingFault(0) // crash before the write: batch replays whole
-        answerBatch(df.sparkSession, indexPath, df, k)
+        answerBatch(df.sparkSession.read.parquet(vectorsPath), df, k)
           .write.mode("overwrite").parquet(s"$outPath/batch=$id")
         servingFault(1) // crash before the checkpoint commit: the replay
                         // overwrites the same batch dir — idempotent

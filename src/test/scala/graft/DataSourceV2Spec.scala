@@ -76,10 +76,19 @@ class DataSourceV2Spec extends SparkSpec {
 
   test("the synthetic corpus drives the ANN ladder end to end") {
     // the source exists to test vector operators without files: feed it
-    // through the persistent store's signature path and check shape
+    // through the streaming search's exact batch plan and check shape
     val emb = read("rows" -> "500", "dim" -> "64")
-    val sig = graft.operators.IndexedVectorStore.signatures(spark, emb)
-    assert(sig.count() == 500)
-    assert(sig.agg(countDistinct("bucket")).head().getLong(0) > 1)
+    assert(emb.count() == 500)
+    val qids = Seq(0L, 250L, 499L)
+    val queries = emb.filter(col("vec_id").isin(qids: _*))
+      .select(col("vec_id").as("qid"), col("embedding"))
+    val got = graft.streaming.StreamingVectorSearch.answerBatch(emb, queries, 5)
+      .collect().groupBy(_.getAs[Long]("qid"))
+    assert(got.keySet == qids.toSet)
+    got.foreach { case (q, rows) =>
+      assert(rows.map(_.getAs[Int]("rank")).sorted.toSeq == (1 to 5))
+      // each query is one of the corpus vectors: it ranks itself first
+      assert(rows.find(_.getAs[Int]("rank") == 1).get.getAs[Long]("vec_id") == q)
+    }
   }
 }

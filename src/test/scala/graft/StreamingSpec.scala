@@ -26,6 +26,30 @@ class StreamingSpec extends SparkSpec {
     spark.table(name)
   }
 
+  /** Rows (vec_id, embedding, label) of a vector table, collected. */
+  private def collectVectors(df: org.apache.spark.sql.DataFrame)
+      : Seq[(Long, Array[Float], Any)] =
+    df.select("vec_id", "embedding", "label").collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray, r.get(2))).toSeq
+
+  /** The exact top-k in plain Scala, as (rank, vec_id, label): cosine
+    * accumulated in double in index order, ranked by (score desc,
+    * vec_id asc). */
+  private def exactTopK(vectors: Seq[(Long, Array[Float], Any)],
+                        q: Array[Float], k: Int): Seq[(Int, Long, Any)] = {
+    def cos(a: Array[Float], b: Array[Float]): Double = {
+      var dot = 0.0; var na = 0.0; var nb = 0.0
+      for (i <- a.indices) {
+        val x = a(i).toDouble; val y = b(i).toDouble
+        dot += x * y; na += x * x; nb += y * y
+      }
+      dot / (math.sqrt(na) * math.sqrt(nb))
+    }
+    vectors.map { case (id, v, label) => (id, label, cos(v, q)) }
+      .sortBy { case (id, _, score) => (-score, id) }.take(k)
+      .zipWithIndex.map { case ((id, label, _), i) => (i + 1, id, label) }
+  }
+
   test("tumbling window + watermark emits closed windows (streaming q40 twin)") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Ev]
@@ -672,54 +696,41 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
-  test("streaming vector search answers each batch identically to the indexed point probe") {
+  test("streaming vector search answers each batch with the exact top-k") {
     implicit val sqlCtx = spark.sqlContext
     import graft.streaming.StreamingVectorSearch
     withTempDir("graft_svsearch") { dir =>
-      val idx = s"$dir/index"
-      graft.operators.IndexedVectorStore.build(
-        spark, Tables.t(spark, sf, "embeddings"), idx)
-      // query stream = six of the store's own vectors, so every streamed
-      // answer has an exact reference: IndexedVectorStore.search on the
-      // same id probes the same cells with the same scoring
+      val vecs = s"$dir/vectors"
+      Tables.t(spark, sf, "embeddings").write.parquet(vecs)
+      val stored = collectVectors(spark.read.parquet(vecs))
+      // query stream = six of the stored vectors; every answer must equal
+      // the plain-Scala exact top-k (recall 1.0, k rows per query)
       val qids = Seq(0L, 7L, 42L, 111L, 256L, 499L)
-      val qvecs = Tables.t(spark, sf, "embeddings")
-        .filter(col("vec_id").isin(qids: _*))
-        .select(col("vec_id").as("qid"), col("embedding"))
-        .as[(Long, Array[Float])].collect()
+      val qvecs = qids.map(q => (q, stored.find(_._1 == q).get._2))
       val mem = MemoryStream[(Long, Array[Float])]
       def go(): Unit = {
         val q = StreamingVectorSearch.start(
-          mem.toDF().toDF("qid", "embedding"), idx, s"$dir/out", s"$dir/ckpt",
+          mem.toDF().toDF("qid", "embedding"), vecs, s"$dir/out", s"$dir/ckpt",
           k = 10)
         q.awaitTermination()
       }
       val (a, b) = qvecs.splitAt(3)
-      mem.addData(a.toIndexedSeq); go() // restart at the batch boundary
-      mem.addData(b.toIndexedSeq); go()
+      mem.addData(a); go() // restart at the batch boundary
+      mem.addData(b); go()
       val got = spark.read.parquet(s"$dir/out/batch=*")
         .select("qid", "rank", "vec_id", "label")
         .collect()
         .groupBy(_.getAs[Long]("qid"))
         .view.mapValues(_.map(r => (r.getAs[Int]("rank"),
-          r.getAs[Long]("vec_id"), r.getAs[String]("label"))).sortBy(_._1).toSeq)
+          r.getAs[Long]("vec_id"), r.get(3))).sortBy(_._1).toSeq)
         .toMap
       assert(got.keySet == qids.toSet)
-      qids.foreach { q =>
-        val want = graft.operators.IndexedVectorStore.search(spark, idx, q, 10)
-          .collect().map(r => (r.getAs[Int]("rank"),
-            r.getAs[Long]("vec_id"), r.getAs[String]("label"))).toSeq
-        assert(got(q) == want, s"qid $q: stream=${got(q)} point=$want")
+      qvecs.foreach { case (q, v) =>
+        val want = exactTopK(stored, v, 10)
+        assert(got(q) == want, s"qid $q: stream=${got(q)} exact=$want")
         // the query's own vector is in the store: it must rank first
         assert(got(q).head._2 == q)
       }
-      // the probe scan must partition-prune on the store's cell dirs
-      val batch = qvecs.take(3).toSeq.toDF("qid", "embedding")
-      val plan = StreamingVectorSearch.answerBatch(spark, idx, batch, 10)
-        .queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-      assert(plan.contains("PartitionFilters") && plan.contains("bucket"),
-        s"probe scan not partition-pruned:\n$plan")
     }
   }
 
@@ -739,13 +750,12 @@ class StreamingSpec extends SparkSpec {
       .as[(Long, Array[Float])].collect()
     def runScenario(crashAt: Option[Int]): Set[(Long, Int, Long)] = {
       withTempDir("graft_svcrash") { dir =>
-        val idx = s"$dir/index"
-        graft.operators.IndexedVectorStore.build(
-          spark, Tables.t(spark, sf, "embeddings"), idx)
+        val vecs = s"$dir/vectors"
+        Tables.t(spark, sf, "embeddings").write.parquet(vecs)
         val mem = MemoryStream[(Long, Array[Float])]
         def go(): Unit = {
           val q = StreamingVectorSearch.start(
-            mem.toDF().toDF("qid", "embedding"), idx, s"$dir/out", s"$dir/ckpt",
+            mem.toDF().toDF("qid", "embedding"), vecs, s"$dir/out", s"$dir/ckpt",
             k = 5)
           q.awaitTermination()
         }
@@ -771,8 +781,41 @@ class StreamingSpec extends SparkSpec {
     }
     val clean = runScenario(None)
     assert(clean.map(_._1) == qids.toSet, "clean run missing queries")
+    val stored = collectVectors(Tables.t(spark, sf, "embeddings"))
+    assert(clean == qvecs.flatMap { case (q, v) =>
+      exactTopK(stored, v, 5).map { case (r, id, _) => (q, r, id) }
+    }.toSet, "clean run is not the exact top-k")
     for (k <- 0 to 1)
       assert(runScenario(Some(k)) == clean, s"crash at op $k diverged")
+  }
+
+  test("streaming vector search: ties at k keep the lower vec_id, unseen queries get k rows, min(k, rows) per query") {
+    import graft.streaming.StreamingVectorSearch
+    // vec_ids 3 and 5 hold the same vector, so they tie for the last
+    // place at k = 2 under query 1; 5 is stored first and must still lose
+    val stored = Seq(
+      (5L, Array(1f, 1f, 0f), "e"), (1L, Array(1f, 0f, 0f), "a"),
+      (3L, Array(1f, 1f, 0f), "c"), (9L, Array(0f, 0f, 1f), "i"))
+    val vectors = stored.toDF("vec_id", "embedding", "label").repartition(2)
+    // query 100's vector is not in the store
+    val queries = Seq((1L, Array(1f, 0f, 0f)), (100L, Array(-1f, 0.5f, 2f)))
+    def answer(k: Int): Map[Long, Seq[(Int, Long, Any)]] =
+      StreamingVectorSearch.answerBatch(vectors,
+          queries.toDF("qid", "embedding"), k)
+        .collect().toSeq
+        .groupBy(_.getAs[Long]("qid"))
+        .view.mapValues(_.map(r => (r.getAs[Int]("rank"),
+          r.getAs[Long]("vec_id"), r.get(3))).sortBy(_._1)).toMap
+    val k2 = answer(2)
+    assert(k2(1L) == Seq((1, 1L, "a"), (2, 3L, "c")), s"tie at k: ${k2(1L)}")
+    for (k <- Seq(1, 2, 4, 10)) {
+      val got = answer(k)
+      assert(got.keySet == Set(1L, 100L))
+      queries.foreach { case (q, v) =>
+        assert(got(q).size == math.min(k, stored.size), s"qid $q at k=$k")
+        assert(got(q) == exactTopK(stored, v, k), s"qid $q at k=$k: ${got(q)}")
+      }
+    }
   }
 
   test("streaming compaction: small files collapse to packed bins, crash-safe pointer commit") {
@@ -1218,8 +1261,8 @@ class StreamingSpec extends SparkSpec {
     // stage (curation swap op, dedup batch replay, compaction
     // pre-commit, serving pre-write) — and must converge to identical
     // curated titles, admitted docs, table snapshots, and served
-    // answers; the served answers must equal the BATCH point probe
-    // (IndexedVectorStore.search) over the same final table.
+    // answers; the served answers must equal the exact top-k over the
+    // same final table.
     implicit val sqlCtx = spark.sqlContext
     import graft.streaming.{StreamingCompaction, StreamingContentDedup,
       StreamingCuration, StreamingVectorSearch}
@@ -1324,11 +1367,10 @@ class StreamingSpec extends SparkSpec {
           .select("doc_id").as[Long].collect().toSet
         assert(snapshot == admitted,
           s"compacted table $snapshot != admitted $admitted")
-        // ---- stage 4: serve ANN queries over the final table's embeddings
+        // ---- stage 4: serve exact queries over the final table's embeddings
         val store = s"$dir/vstore"
-        graft.operators.IndexedVectorStore.build(spark,
-          snapshot.toSeq.sorted.map(i => (i, emb(i), s"d$i"))
-            .toDF("vec_id", "embedding", "label"), store)
+        val stored = snapshot.toSeq.sorted.map(i => (i, emb(i), s"d$i"))
+        stored.toDF("vec_id", "embedding", "label").write.parquet(store)
         val qMem = MemoryStream[(Long, Array[Float])]
         def serve(): Unit = {
           val q = StreamingVectorSearch.start(
@@ -1352,13 +1394,10 @@ class StreamingSpec extends SparkSpec {
           .groupBy(_.getAs[Long]("qid"))
           .view.mapValues(_.map(r => (r.getAs[Int]("rank"),
             r.getAs[Long]("vec_id"))).sortBy(_._1).toSeq).toMap
-        // served answers == the batch pipeline's point probe on the SAME
-        // final store
+        // served answers == the exact top-k over the SAME final store
         served.keys.foreach { q =>
-          val want = graft.operators.IndexedVectorStore
-            .search(spark, store, q, 3).collect()
-            .map(r => (r.getAs[Int]("rank"), r.getAs[Long]("vec_id"))).toSeq
-          assert(served(q) == want, s"qid $q: served=${served(q)} batch=$want")
+          val want = exactTopK(stored, emb(q), 3).map(w => (w._1, w._2))
+          assert(served(q) == want, s"qid $q: served=${served(q)} exact=$want")
           assert(served(q).head._2 == q, s"qid $q does not rank itself first")
         }
         (titles, admitted, served)
