@@ -116,20 +116,13 @@ object Bench {
     // Deterministic name order: Map iteration order shifts when queries are
     // added, which made per-query timings incomparable across rounds (the
     // first timed query absorbs cold-IO/JIT residue).
-    // GRAFT_ORDER=reverse: diagnostic switch — if a query's time depends on
-    // its POSITION in the run (late = slow), the suite is aging the JVM /
-    // tripping sustained-load throttling, and no per-query best-of-N can
-    // hide it; used to attribute the r5 in-suite inflation.
     // GRAFT_ONLY=name,name,...: diagnostic subset — same machinery
     // (warmup, passes, probes) over fewer queries, to separate
     // suite-size effects from per-query behavior.
     val only = sys.env.get("GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val orderedAsc = SparkEntry.queries.toSeq.sortBy(_._1)
+    val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter(q => only.forall(_.contains(q._1)))
-    val ordered =
-      if (sys.env.get("GRAFT_ORDER").contains("reverse")) orderedAsc.reverse
-      else orderedAsc
     // Force FULL result materialization: a plain .count() lets Catalyst
     // prune projections and eliminate sorts (a projection-heavy query
     // times as a bare scan — q103's metrics were invisible), while
@@ -139,15 +132,10 @@ object Bench {
     // withExecConfs: per-query execution confs (AQE cost-gate — see
     // QueryRegistry.execConfs) wrap build+execute, because AQE reads the
     // session conf at physical-planning time.
-    // GRAFT_NO_EXECCONFS=1: A/B switch to attribute suite-level timing
-    // shifts to the per-query conf gate itself (session-state churn)
-    // vs the queries.
-    val useExecConfs = !sys.env.get("GRAFT_NO_EXECCONFS").contains("1")
-    def exec(name: String, dir: String): Long = {
-      def run() = SparkEntry.queries(name)(spark, dir).queryExecution.toRdd.count()
-      if (useExecConfs) QueryRegistry.withExecConfs(spark, name, dir)(run())
-      else run()
-    }
+    def exec(name: String, dir: String): Long =
+      QueryRegistry.withExecConfs(spark, name, dir) {
+        SparkEntry.queries(name)(spark, dir).queryExecution.toRdd.count()
+      }
     // A failure is recorded and printed, warm-up and timed passes alike:
     // query -> class of its first exception, for the detail file.
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()

@@ -28,11 +28,6 @@ object CurationOps {
     * was a separate join+count job — 2 exchanges — per round; the flag
     * scan is an isEmpty over the checkpointed output, no extra
     * exchange). */
-  /** Superstep count of the most recent [[connectedComponents]] call on
-    * this JVM — diagnostic only (the q121 drift watch tracks whether a
-    * time shift is iteration-count growth vs per-superstep cost). */
-  @volatile private[graft] var lastSupersteps: Int = 0
-
   def connectedComponents(nodes: DataFrame, edges: DataFrame,
                           maxIter: Int = 50): DataFrame = {
     // symmetric neighbor list
@@ -68,7 +63,6 @@ object CurationOps {
       comp = updated
       iter += 1
     }
-    lastSupersteps = iter
     comp.select(col("key"), col("comp"))
   }
 

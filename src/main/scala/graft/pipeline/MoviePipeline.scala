@@ -2,7 +2,7 @@ package graft.pipeline
 
 import graft.functions.TextFunctions._
 import graft.functions.expressions.StringRatio.string_ratio
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -38,7 +38,7 @@ object MoviePipeline {
     // per-item clean AFTER the split — the reference cleans each CSV item
     // (movie_generator.py:360-365), so "1. Drama, 2. Comedy" loses both
     // numbered-list prefixes, not just the leading one
-    val csvList = (c: org.apache.spark.sql.Column) =>
+    val csvList = (c: Column) =>
       filter(transform(split(c, ","), x => cleanText(x)), x => x =!= "")
     raw
       .withColumn("title", field("TITLE"))
@@ -98,15 +98,16 @@ object MoviePipeline {
       "left_anti")
   }
 
-  /** S5/W2 — last-writer-wins merge on the business key (title_norm, year)
-    * (movie_generator.py:452-467): union old+new, keep the newest row per
-    * key by created_at. Batch analog of MERGE; at scale this is one
-    * hash-partitioned window over the key. */
-  def mergeUpsert(existing: DataFrame, incoming: DataFrame): DataFrame = {
-    val unioned = existing.unionByName(incoming, allowMissingColumns = true)
-    val w = Window.partitionBy(normKey(col("title")), col("year"))
+  /** S5/W2 — last-writer-wins on the business key (title_norm, year)
+    * (movie_generator.py:452-467): keep the newest row per key by
+    * created_at. Batch analog of MERGE; at scale this is one
+    * hash-partitioned window over the key. `within` adds window keys that
+    * are functions of the business key, so they change no result; rows
+    * already hash-partitioned by them need no exchange for the window. */
+  def mergeUpsert(rows: DataFrame, within: Column*): DataFrame = {
+    val w = Window.partitionBy(within ++ Seq(normKey(col("title")), col("year")): _*)
       .orderBy(col("created_at").desc)
-    unioned
+    rows
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .drop("__rn")

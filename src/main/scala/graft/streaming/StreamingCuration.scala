@@ -13,40 +13,39 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * validated, deduplicated against the CURRENT corpus (one fuzzy band
   * anti-join, which also drops exact duplicates — the per-batch corpus read
   * is the streaming analog of the reference's seen-set refresh every 50
-  * records, :510-511), merged last-writer-wins, and written back.
+  * records, :510-511), resolved last-writer-wins within the batch, and
+  * appended to the corpus.
   *
   * One pass per batch — each piece of work is done once:
   *  - the parse/validate/enrich result is cached by the job that collects
   *    its candidate years, and released when the batch returns or fails;
   *  - the corpus is read with the parsed schema plus `yb`, so no batch
   *    runs a parquet schema-inference job;
-  *  - the fresh rows are cached by the job that collects their buckets and
-  *    feed the merge write from that cache.
-  * A batch into an existing corpus therefore runs 6 Spark jobs with
+  *  - the fresh rows are hashed by bucket once; the last-writer-wins window
+  *    is keyed by the bucket too, so it reuses that exchange, and the write
+  *    lists its buckets from the staging directory instead of a collect.
+  * A batch into an existing corpus therefore runs 4 Spark jobs with
   * adaptive execution on: the candidate years, the broadcast of the pruned
-  * corpus, the fresh buckets, adaptive execution's stage over the cached
-  * fresh rows, and the merge's shuffle and write (StreamingSpec pins ≤ 6).
+  * corpus, the shuffle stage and the write (StreamingSpec pins ≤ 4).
   *
   * Checkpointing: `checkpointLocation` gives exactly-once micro-batch
   * bookkeeping — the replacement for the reference's pickle checkpoint
   * (:106-168); a restarted query resumes from the last committed batch.
   *
   * Scale design — the corpus is parquet PARTITIONED BY a 10-year bucket
-  * (`yb`), and a micro-batch rewrites ONLY the buckets its fresh rows land
-  * in: dedup reads are partition-pruned to the candidate years ±1, and the
-  * merge write is O(touched buckets), not O(corpus). At 100 TB a batch
-  * touching 3 buckets rewrites 3 partitions; the rest of the corpus is
-  * never read for the write nor modified (asserted byte-identical in
-  * StreamingSpec).
+  * (`yb`). Dedup reads are partition-pruned to the candidate years ±1, and
+  * a batch only APPENDS: dedup guarantees its fresh keys are absent from
+  * the corpus, so no existing file is read for the write, rewritten or
+  * renamed (asserted byte-identical in StreamingSpec). A batch adds exactly
+  * one parquet file to each bucket it touches; nothing bounds a bucket's
+  * file count yet (compaction is separate work).
   *
-  * Crash safety — each touched bucket is swapped atomically with a backup:
-  * live bucket dir → `<corpus>_prev_<batchId>/`, staged bucket dir → live.
-  * Every window leaves the bucket recoverable: a crash between the two
-  * renames is healed by `recoverInterruptedSwap` on the replayed batch
-  * (restore the bucket from the backup dir), and a crash after the swap
-  * replays idempotently (the re-run batch dedups against the already-merged
-  * corpus and rewrites identical content). A plain delete-then-rename — the
-  * round-1 shape — had a window where a crash lost the whole corpus.
+  * Crash safety — the fresh rows are staged in `<corpus>_staging_<batchId>`
+  * and each staged file is renamed into its live `yb=` dir, so a bucket's
+  * rows of one batch arrive in one step. A crash anywhere replays the
+  * batch, which dedups against the corpus as it then stands and therefore
+  * stages only the rows whose file was not yet renamed; the replay's write
+  * overwrites the stale staging dir and its last step deletes it.
   * (Delta/Iceberg MERGE would replace this file choreography in a
   * deployment with concurrent readers.)
   */
@@ -56,16 +55,17 @@ object StreamingCuration {
   val BucketYears = 10
 
   /** Test-only fault injector: invoked with a 0-based op index immediately
-    * BEFORE each filesystem mutation of the swap choreography (mkdirs,
-    * renames, cleanup deletes). Tests install a thrower to simulate a crash
-    * at an exact point and then assert replay convergence; production
-    * leaves the no-op. */
+    * BEFORE each filesystem mutation of the commit (per touched bucket in
+    * name order: mkdirs of its live dir, rename of its staged file; then
+    * the staging delete). Tests install a thrower to simulate a crash at an
+    * exact point and then assert replay convergence; production leaves the
+    * no-op. */
   @volatile private[graft] var swapFault: Int => Unit = _ => ()
 
   private def bucketOf(year: Column): Column =
     floor(year / BucketYears).cast("long")
 
-  /** Distinct values of a small-domain key (years, buckets): partition-
+  /** Distinct values of a small-domain key (years): partition-
     * pruning metadata, not data, so the driver-side collect is a scalar
     * hop, not a distributed-loop smell. Deduplicated per partition on the
     * executors and across partitions here, it costs one job and no
@@ -84,8 +84,8 @@ object StreamingCuration {
     * the corpus does not exist yet (explicit first-batch bootstrap).
     * Genuine read errors — corrupt footers, IO failures, permissions —
     * PROPAGATE and fail the micro-batch so the checkpoint retries it:
-    * swallowing them here would dedup against nothing and make the
-    * subsequent merge-write silently drop history. */
+    * swallowing them here would dedup against nothing and append
+    * duplicates of history. */
   def readCorpus(spark: SparkSession, corpusDir: String, schema: StructType): DataFrame = {
     val withYb = schema.add("yb", LongType)
     if (!corpusFs(spark).exists(new Path(corpusDir)))
@@ -93,29 +93,10 @@ object StreamingCuration {
     else spark.read.schema(withYb).parquet(corpusDir)
   }
 
-  /** Heal a swap interrupted by a crash: any bucket sitting in a
-    * `<corpus>_prev_*` backup whose live dir is missing is restored, then
-    * stale backup/staging dirs are removed (their batch will replay). */
-  def recoverInterruptedSwap(spark: SparkSession, corpusDir: String): Unit = {
-    val fs = corpusFs(spark)
-    val prevDirs = fs.globStatus(new Path(corpusDir + "_prev_*"))
-    if (prevDirs != null) prevDirs.foreach { pd =>
-      val buckets = fs.listStatus(pd.getPath)
-      if (buckets != null) buckets.foreach { b =>
-        val live = new Path(corpusDir, b.getPath.getName)
-        if (!fs.exists(live)) fs.rename(b.getPath, live)
-      }
-      fs.delete(pd.getPath, true)
-    }
-    val staged = fs.globStatus(new Path(corpusDir + "_staging_*"))
-    if (staged != null) staged.foreach(s => fs.delete(s.getPath, true))
-  }
-
-  /** One micro-batch: parse → partition-pruned dedup vs corpus → merge →
-    * per-bucket atomic swap of only the touched partitions. */
+  /** One micro-batch: parse → partition-pruned dedup vs corpus → in-batch
+    * last-writer-wins → append one staged file per touched bucket. */
   def processBatch(corpusDir: String)(batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    recoverInterruptedSwap(spark, corpusDir)
     val parsed = MoviePipeline.enrich(MoviePipeline.validate(
       MoviePipeline.parseRaw(batch))).drop("raw").persist()
     try {
@@ -127,44 +108,37 @@ object StreamingCuration {
         val dedupBuckets = candYears
           .flatMap(y => Seq(y - 1, y, y + 1))
           .map(y => math.floorDiv(y, BucketYears.toLong)).distinct.toSeq
-        val corpus = readCorpus(spark, corpusDir, parsed.schema)
-        val seen = corpus.filter(col("yb").isin(dedupBuckets: _*)) // pruned scan
-        val fresh = MoviePipeline.dedupFuzzy(parsed, seen).persist()
-        try mergeTouched(corpusDir, batchId, corpus, fresh)
-        finally fresh.unpersist(blocking = false)
+        val seen = readCorpus(spark, corpusDir, parsed.schema)
+          .filter(col("yb").isin(dedupBuckets: _*)) // pruned scan
+        // one exchange, by bucket: the window reuses it, and each bucket's
+        // rows land in one task, so the write makes one file per bucket
+        val fresh = MoviePipeline.dedupFuzzy(parsed, seen)
+          .withColumn("yb", bucketOf(col("year"))).repartition(col("yb"))
+        val staging = new Path(corpusDir + s"_staging_$batchId")
+        MoviePipeline.mergeUpsert(fresh, col("yb"))
+          .write.partitionBy("yb").mode(SaveMode.Overwrite).parquet(staging.toString)
+        appendStaged(corpusFs(spark), staging, new Path(corpusDir))
       }
     } finally parsed.unpersist(blocking = false)
   }
 
-  /** Rewrite only the buckets that receive `fresh` rows, then swap them in.
-    * Dedup guarantees fresh keys are absent from the corpus, so the merge
-    * only APPENDS within a bucket (LWW resolves same-key rows inside the
-    * batch); untouched buckets stay byte-identical on disk. */
-  private def mergeTouched(corpusDir: String, batchId: Long,
-                           corpus: DataFrame, fresh: DataFrame): Unit = {
-    val touched = distinctKeys(fresh, bucketOf(col("year"))).toSeq
-    if (touched.isEmpty) return
-    val merged = MoviePipeline.mergeUpsert(
-      corpus.filter(col("yb").isin(touched: _*)).drop("yb"), fresh)
-
-    val staging = corpusDir + s"_staging_$batchId"
-    merged.withColumn("yb", bucketOf(col("year")))
-      .write.partitionBy("yb").mode(SaveMode.Overwrite).parquet(staging)
-
-    val fs = corpusFs(fresh.sparkSession)
-    val prev = new Path(corpusDir + s"_prev_$batchId")
+  /** Move each staged data file into its live bucket dir, buckets in name
+    * order so a crash point maps to a fixed op, then drop the staging dir.
+    * A failed rename throws, so the batch replays instead of losing rows. */
+  private def appendStaged(fs: FileSystem, staging: Path, corpus: Path): Unit = {
     var opIdx = 0
     def op(f: => Unit): Unit = { swapFault(opIdx); opIdx += 1; f }
-    op(fs.mkdirs(prev))
-    op(fs.mkdirs(new Path(corpusDir)))
-    // deterministic bucket order so a crash point maps to a fixed op
-    touched.sorted.foreach { b =>
-      val live = new Path(corpusDir, s"yb=$b")
-      if (fs.exists(live)) op(fs.rename(live, new Path(prev, s"yb=$b")))
-      op(fs.rename(new Path(staging, s"yb=$b"), live))
-    }
-    op(fs.delete(prev, true))
-    op(fs.delete(new Path(staging), true))
+    fs.listStatus(staging).map(_.getPath).filter(_.getName.startsWith("yb="))
+      .sortBy(_.getName).foreach { bucket =>
+        val live = new Path(corpus, bucket.getName)
+        op(fs.mkdirs(live))
+        fs.listStatus(bucket).map(_.getPath)
+          .filterNot(f => f.getName.startsWith("_") || f.getName.startsWith(".")).foreach { f =>
+          val to = new Path(live, f.getName)
+          op(if (!fs.rename(f, to)) throw new java.io.IOException(s"rename $f -> $to failed"))
+        }
+      }
+    op(fs.delete(staging, true))
   }
 
   /** Bind the stream: raw text records in, curated corpus directory out. */

@@ -117,7 +117,7 @@ class PipelineSpec extends SparkSpec {
       ("Stalker", 1979, "new", "2021-01-01 00:00:00"))
       .toDF("title", "year", "version", "created_at")
       .withColumn("created_at", col("created_at").cast("timestamp"))
-    val merged = MoviePipeline.mergeUpsert(old, incoming)
+    val merged = MoviePipeline.mergeUpsert(old.unionByName(incoming))
     assert(merged.count() == 2)
     val versions = merged.select("version").as[String].collect().toSeq
     assert(versions.forall(_ == "new")) // last writer won on the dup key
